@@ -18,9 +18,10 @@ Layout:
     el.scoring     fused pair scoring (Jaro-Winkler, Levenshtein,
                    TF-IDF/topic cosine -> logistic)
     el.clustering  large-star/small-star connected components
-    el.pipeline    stage DAG with materialization barriers
-    el.catalog     table-format layer (parquet+manifest; Iceberg-ready)
-    el.checkpoint  per-partition lineage, metrics, resume
+    el.pipeline    ingest gate, extraction and blocking stage operators
+    el.runner      the stage list and its one executor (localCheckpoint
+                   or catalog commit per stage; resume)
+    el.catalog     table-format layer (parquet+manifest, snapshots)
     el.evaluate    pairwise precision/recall/F1 gate
     el.dedup       corpus dedup ops (exact, MinHash-LSH, SimHash, ...)
     el.similarity  embedding ANN (brute-force + LSH-bucketed top-k)

@@ -2,24 +2,17 @@
 resumability (SURVEY.md §1.4, BASELINE.json north_rule "checkpoints
 ... with per-partition lineage and metrics for resumability").
 
-Two backends behind one interface:
-
-- ``IcebergCatalog`` (production): thin wrapper over an Iceberg Spark
-  catalog (``writeTo(...).createOrReplace()``, snapshot reads). Only
-  activated when an iceberg-spark-runtime jar is on the classpath —
-  this sandbox has none, so it is code-complete but unexercised.
-- ``HadoopParquetCatalog`` (sandbox default, fully tested): plain
-  parquet directories plus an explicit JSON manifest per commit. A
-  table commit is: write to ``<table>.__tmp_<run_id>`` -> fsync the
-  manifest (per-file rows + sha256 + bytes) -> atomic ``os.rename``
-  into place, archiving the displaced version as a SNAPSHOT
-  (``<table>.__vNNNN``, bounded by ``keep_versions``). Readers only
-  ever see fully-committed tables; a crashed writer leaves a
-  ``__tmp`` dir that the next run clears, and a crash mid-swap falls
-  back to the newest snapshot. ``read(version=k)`` time-travels;
-  ``rollback(k)`` is a pointer move. This *implements* Iceberg's
-  commit/snapshot/lineage semantics with public filesystem
-  primitives.
+``HadoopParquetCatalog``: plain parquet directories plus an explicit
+JSON manifest per commit. A table commit is: write to
+``<table>.__tmp_<run_id>`` -> fsync the manifest (per-file rows +
+sha256 + bytes) -> atomic ``os.rename`` into place, archiving the
+displaced version as a SNAPSHOT (``<table>.__vNNNN``, bounded by
+``keep_versions``). Readers only ever see fully-committed tables; a
+crashed writer leaves a ``__tmp`` dir that the next run clears, and a
+crash mid-swap falls back to the newest snapshot. ``read(version=k)``
+time-travels; ``rollback(k)`` is a pointer move. This *implements*
+Iceberg's commit/snapshot/lineage semantics with public filesystem
+primitives.
 
 The manifest IS the lineage record: one row per output partition file
 (rows, bytes, sha256), plus stage wall-clock and total rows — queried
@@ -372,39 +365,3 @@ class HadoopParquetCatalog:
             "stage string, run_id string, file string, rows long, "
             "bytes long, sha256 string, wall_ms long, committed_at string",
         )
-
-
-@dataclass
-class IcebergCatalog:  # pragma: no cover - needs iceberg runtime jar
-    """Iceberg-backed implementation of the same surface. Requires
-    ``spark.sql.catalog.<name>=org.apache.iceberg.spark.SparkCatalog``
-    and the iceberg-spark-runtime jar (absent in this sandbox)."""
-
-    catalog: str = "local"
-    namespace: str = "el"
-
-    def _qualified(self, table: str) -> str:
-        return f"{self.catalog}.{self.namespace}.{table}"
-
-    def write(self, df: DataFrame, table: str, run_id: str = "run0",
-              stage: str | None = None,
-              partition_by: list[str] | None = None) -> dict:
-        w = df.writeTo(self._qualified(table))
-        if partition_by:
-            from pyspark.sql import functions as F
-
-            w = w.partitionedBy(*[F.col(c) for c in partition_by])
-        w.createOrReplace()
-        return {"table": table, "run_id": run_id, "stage": stage or table}
-
-    def exists(self, table: str) -> bool:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-        return spark.catalog.tableExists(self._qualified(table))
-
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.table(self._qualified(table))
-
-    def committed(self, table: str, run_id: str | None = None) -> bool:
-        return self.exists(table)

@@ -28,16 +28,15 @@ Mechanics (J4/J5 semi/anti-join ops from SURVEY.md §2.3):
    mentions_vec, scored pairs) each gain one ``<base>_delta_NNNN``
    table per absorbed batch and are read back merge-on-read
    (``_read_with_deltas``) — commit I/O scales with the delta. Only
-   block_keys (the RAW uncapped key union since r5 — cap/salt is a
+   block_keys (the RAW uncapped key union — cap/salt is a
    pair-generation-time policy, never a storage mutation) and
-   clusters (global CC output) are rewritten; Iceberg row-level ops
-   remove those two rewrites when the jar is present. ``compact_deltas`` periodically
-   folds the accumulated deltas back into one well-sized base
+   clusters (global CC output) are rewritten. ``compact_deltas``
+   periodically folds the accumulated deltas back into one well-sized base
    snapshot (Iceberg ``rewrite_data_files``), with the watermark
    committed atomically inside the base manifest so folded rows are
    never readable twice.
 
-Batch atomicity (ADVICE r2): a batch's delta tables commit as ONE unit
+Batch atomicity: a batch's delta tables commit as ONE unit
 via a marker file ``_batch_NNNN.json`` written (atomic tmp+fsync+
 rename) only AFTER every table write of the batch has committed.
 ``_read_with_deltas``/``_delta_names`` only surface marker-covered
@@ -55,17 +54,14 @@ otherwise).
 Equivalence: with capping disabled (or cap never reached),
 ``incremental(A then B) == full(A ∪ B)`` exactly — asserted in
 tests/test_incremental.py. When a hot block's cap BINDS, the
-incremental result is a SUPERSET of the full run's pair set: since r5
-the committed block_keys are uncapped and a touched block is re-capped
+incremental result is a SUPERSET of the full run's pair set: the
+committed block_keys are uncapped and a touched block is re-capped
 over its FULL membership, so the incremental pair universe contains
 every pair the batch run generates (the cap's keep order is a pure
 function of (block_key, mention_id)), plus historical verified pairs
 whose members later fell out of the cap — already-scored pairs are
 never unscored. Recall never regresses from incremental processing;
-before r5 this superset claim did NOT hold (the committed table was
-capped, so members dropped by a base run were lost to every later
-re-cap and batch pairs could be missed). Asserted under a binding cap
-in tests/test_incremental.py.
+asserted under a binding cap in tests/test_incremental.py.
 """
 
 from __future__ import annotations
@@ -85,7 +81,13 @@ from el.pipeline import (
     raw_block_keys,
     skew_capped_keys,
 )
-from el.runner import RunConfig, _fit_or_load_models, _models_dir
+from el.runner import (
+    RunConfig,
+    _fit_or_load_models,
+    _models_dir,
+    topic_buckets,
+    vectorize,
+)
 from el.scoring import matched_edges, score_pairs
 
 
@@ -145,7 +147,7 @@ def _delta_names(catalog: HadoopParquetCatalog, base: str) -> list[str]:
     is invisible; batches at or below the compaction watermark are
     folded into the base (their dirs may already be dropped); a
     marker whose UNFOLDED delta dir is missing is corruption and
-    fails loudly (ADVICE r2: never silently drop a delta)."""
+    fails loudly (never silently drop a delta)."""
     wm = _compacted_through(catalog, base)
     names = []
     for m in _batch_markers(catalog):
@@ -223,7 +225,7 @@ def compact_deltas(
             raise RuntimeError(
                 f"scored-pairs deltas exist ({deltas}) but neither "
                 "scored_pairs_all nor any scored_chunk_* table does — "
-                "catalog is corrupt; refusing to compact (ADVICE r3)"
+                "catalog is corrupt; refusing to compact"
             )
         for d in deltas:
             merged = merged.unionByName(catalog.read(spark, d))
@@ -403,8 +405,7 @@ def incremental_update(
     # (block_keys): no downstream plan may reference files a rename
     # replaces. The append-only tables (mentions / mentions_vec /
     # scored) are scanned lazily — materializing the corpus per batch
-    # would make every absorb O(corpus) (VERDICT r2 #7). With the
-    # Iceberg backend the barrier is free — readers pin a snapshot.
+    # would make every absorb O(corpus).
     old_mentions = _read_with_deltas(spark, catalog, "mentions")
     # semi-join the committed key table to the marker-covered mention
     # set: a crash AFTER a block_keys rewrite but BEFORE the batch
@@ -421,7 +422,7 @@ def incremental_update(
     )
     scored_tables, old_scored = _scored_pair_tables(spark, catalog)
     # committed-pair total from MANIFESTS — no corpus-sized count()
-    # job per absorb (VERDICT r2 #7)
+    # job per absorb
     old_pairs_rows = sum(_manifest_rows(catalog, t) for t in scored_tables)
 
     # 0. suppression list: a forgotten url must never be re-ingested
@@ -465,28 +466,24 @@ def incremental_update(
             f"would drift topic buckets"
         )
     tfidf, topics = _fit_or_load_models(spark, new_mentions, catalog, rc)
-    new_vec = tfidf.transform(new_mentions, "context", "tfidf")
-    topic_buckets = None
-    if topics is not None:
-        new_vec = topics.transform(new_vec, "context", "topic_vec")
-        topic_buckets = topics.bucket_keys(new_vec)
-    new_vec = new_vec.localCheckpoint(eager=True)
+    new_vec = vectorize(new_mentions, tfidf, topics).localCheckpoint(eager=True)
     # append-only table: lazy scan (never overwritten, so no rename
     # hazard; materializing it would be an O(corpus) job per batch)
     old_vec = _read_with_deltas(spark, catalog, "mentions_vec")
     all_vec = old_vec.unionByName(new_vec)
 
     # 3. combined RAW block keys; the skew policy (cap/salt) applies at
-    # PAIR-GENERATION time over the touched blocks' FULL membership
-    # (r5): the committed table is uncapped, so a member dropped by an
+    # PAIR-GENERATION time over the touched blocks' FULL membership:
+    # the committed table is uncapped, so a member dropped by an
     # earlier run's cap is still here — re-capping the touched block
     # yields exactly the capped member set a batch run over the whole
     # corpus would pick (cap order is a pure function of (block_key,
     # mention_id)), and the incremental pair universe is a SUPERSET of
     # the batch one even when caps bind (append-only scoring keeps
     # historical verified pairs; it never loses a batch pair).
-    new_keys = raw_block_keys(new_mentions, cfg, topic_buckets)
-    new_keys = new_keys.localCheckpoint(eager=True)
+    new_keys = raw_block_keys(
+        new_mentions, cfg, topic_buckets(new_vec, topics)
+    ).localCheckpoint(eager=True)
     combined_raw = old_keys.unionByName(new_keys).localCheckpoint(eager=True)
     # untouched blocks have the exact member set the committed run had,
     # so every pair they can generate is already in old_scored — the
@@ -518,11 +515,10 @@ def incremental_update(
     # 6. commit: APPEND-ONLY deltas for the corpus-sized tables
     # (mentions / mentions_vec / scored pairs — each batch writes only
     # its delta, so commit I/O scales with the delta, not the corpus);
-    # block_keys (the raw per-mention key strings — uncapped since r5,
+    # block_keys (the raw per-mention key strings — uncapped,
     # one row per (mention, key), linear in the corpus) and clusters
     # (global CC output — ids can change corpus-wide on any merge) are
-    # the two rewrites, both removable with Iceberg row-level replace /
-    # MOR when the jar is present.
+    # the two rewrites.
     # The batch MARKER is written last: until it lands, none of this
     # batch's deltas are visible and a rerun recomputes the batch.
     n_new = new_mentions.count()

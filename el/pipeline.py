@@ -1,8 +1,9 @@
 """End-to-end pipeline: web_pages -> mentions -> block_keys ->
 candidate_pairs -> scored_pairs -> edges -> clusters (SURVEY.md §3.2).
 
-This module holds the in-memory stage functions; el.runner (M4) wraps
-them with catalog commits, per-partition lineage/metrics, and resume.
+This module holds the stage operators (ingest gate, extraction,
+blocking); el.runner holds the stage list and the one executor that
+runs it, with or without a catalog.
 """
 
 from __future__ import annotations
@@ -13,9 +14,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from el import blocking
-from el.clustering import clusters_of
 from el.extract import add_extracted_text, extract_mentions
-from el.scoring import ScoringConfig, matched_edges, score_pairs
+from el.scoring import ScoringConfig
 from el.tfidf import TfidfModel
 
 
@@ -43,7 +43,7 @@ class PipelineConfig:
     # the corpus): bounds the fit-once step at 100x scale; None = no
     # cap. Model ARTIFACTS are unaffected in shape either way.
     fit_sample_max: int | None = 100_000
-    # crawl-hygiene ingest gate (r3) — all OFF by default (the F1/e2e
+    # crawl-hygiene ingest gate — all OFF by default (the F1/e2e
     # gates run on the curated fixture); production crawls enable:
     # dedup by CANONICAL url (tracking params / www / default ports /
     # fragments collapse into one key) instead of the raw url,
@@ -51,23 +51,23 @@ class PipelineConfig:
     # and drop pages failing repetition/quality thresholds
     min_distinct_word_ratio: float | None = None
     max_dup_2gram: float | None = None
-    # corpus-LM rarity gate (r5, VERDICT r4 #10 — completes the
-    # CCNet-shaped quality stack): drop pages whose rare-bigram rate
+    # corpus-LM rarity gate (completes the CCNet-shaped quality
+    # stack): drop pages whose rare-bigram rate
     # exceeds the threshold. Off by default. Scored against the
     # persisted BigramCountsModel at bigram_counts_path when set (the
     # production path — fit-unseen bigrams count as maximally rare),
     # else self-fit on the incoming batch.
     max_rare_bigram_frac: float | None = None
     bigram_counts_path: str | None = None
-    # host-blocklist ingest gate (r5 — UT1/RefinedWeb-style URL
-    # filtering in the production path): drop pages whose url host,
+    # host-blocklist ingest gate (UT1/RefinedWeb-style URL filtering
+    # in the production path): drop pages whose url host,
     # or any parent domain of it (suffix-chain semantics), is listed.
     # Off by default (None). Driver-side tuple because UT1-category
     # lists are ~1e5-1e6 entries — broadcast-sized at any corpus
     # scale; pipelines with a table-backed list call
     # el.textops.blocklist_filter directly.
     blocked_hosts: tuple[str, ...] | None = None
-    # C4 line-level cleaning gate (r5): rewrite each page's text to
+    # C4 line-level cleaning gate: rewrite each page's text to
     # its prose lines (terminal punctuation, >= c4_min_line_words
     # tokens, no "javascript") and drop pages failing the page rules
     # (< c4_min_sentences sentences after cleaning, "lorem ipsum",
@@ -224,17 +224,15 @@ def mentions_stage(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
 def raw_block_keys(
     mentions: DataFrame, cfg: PipelineConfig, topic_buckets: DataFrame | None = None
 ) -> DataFrame:
-    """UNCAPPED multi-key union of the blocking strategies. Since r5
-    this is what the checkpointed runner COMMITS as the block_keys
-    table: the skew policy (W1 cap / J2 salt) is a PAIR-GENERATION-
-    time policy (``skew_capped_keys``), not a storage mutation — a
-    member dropped by one run's cap is never permanently discarded, so
-    an incremental absorb that touches the block re-caps over the FULL
-    membership and generates exactly the capped pair universe a batch
-    run over the whole corpus would (previously, base-capped members
-    were gone forever and incremental could MISS batch pairs when the
-    cap binds). Table size stays one row per (mention, key) — linear
-    in the corpus, the same scale as mentions itself."""
+    """UNCAPPED multi-key union of the blocking strategies: the
+    block_keys stage. The skew policy (W1 cap / J2 salt) is a
+    PAIR-GENERATION-time policy (``skew_capped_keys``), not a storage
+    mutation — a member dropped by one run's cap is never permanently
+    discarded, so an incremental absorb that touches the block re-caps
+    over the FULL membership and generates exactly the capped pair
+    universe a batch run over the whole corpus would. Table size stays
+    one row per (mention, key) — linear in the corpus, the same scale
+    as mentions itself."""
     keys = blocking.name_token_keys(mentions)
     if cfg.use_soundex:
         keys = keys.unionByName(blocking.soundex_keys(mentions))
@@ -285,67 +283,21 @@ def run_pipeline(
     cfg: PipelineConfig | None = None,
     tfidf_model: TfidfModel | None = None,
     topic_model=None,
-    mentions: DataFrame | None = None,
-) -> dict[str, DataFrame]:
-    """Full batch run; returns every stage table (lazily defined,
-    caller materializes/commits). tfidf_model/topic_model: pass
-    persisted models for cross-run determinism AND to measure the
-    production fit-once path (None -> fit on this corpus — tests and
-    first runs). mentions: pass the already-materialized extract
-    output to skip re-extraction (bench stage attribution)."""
+) -> dict:
+    """Full batch run without a catalog: ``el.runner.execute`` over
+    the stage list, each stage localCheckpointed inside its own
+    timing. Returns {"report": {stage: {"rows", "wall_ms",
+    "resumed"}}, <stage>: DataFrame, ...}.
+
+    tfidf_model/topic_model: persisted models, for cross-run
+    determinism AND to measure the production fit-once path. With a
+    tfidf_model the pair is used as given (topic_model None: no topic
+    blocking); without one both are fitted on this corpus (tests and
+    first runs)."""
+    from el.runner import RunConfig, execute
+
     cfg = cfg or PipelineConfig()
-
-    # Materialization barrier. localCheckpoint, NOT persist(): building
-    # the in-memory columnar cache behind a stage that chains two
-    # Python operators (ArrowEvalPython extract -> MapInPandas
-    # mentions) stalls ~60s/stage in Spark 4.1 (measured; cache-builder
-    # + chained-PythonRunner interaction), while localCheckpoint
-    # materializes the same partitions in ~2s and also cuts lineage.
-    # In production runs the real barrier is the catalog commit
-    # (parquet write) between stages, not executor-local blocks.
-    if mentions is None:
-        mentions = mentions_stage(pages, cfg).localCheckpoint(eager=True)
-    # degenerate corpus (nothing survived the lang/null gates): the
-    # relational stages all handle empty inputs, but ml fits do not
-    has_mentions = not mentions.isEmpty()
-
-    model = tfidf_model or TfidfModel.fit(
-        mentions, "context", max_fit_docs=cfg.fit_sample_max
-    )
-    mentions_v = model.transform(mentions, "context", "tfidf")
-
-    topic_buckets = None
-    if cfg.use_topics and has_mentions:
-        try:
-            from el.topics import TopicModel
-
-            tm = topic_model or TopicModel.fit(
-                spark,
-                mentions,
-                "context",
-                max_iter=cfg.topic_max_iter,
-                vocab_size=cfg.topic_vocab,
-                max_fit_docs=cfg.fit_sample_max,
-            )
-            mentions_v = tm.transform(mentions_v, "context", "topic_vec")
-            topic_buckets = tm.bucket_keys(mentions_v)
-        except ImportError:
-            pass
-
-    mentions_v = mentions_v.localCheckpoint(eager=True)
-
-    block_keys, block_stats = block_stage(mentions, cfg, topic_buckets)
-    pairs = blocking.candidate_pairs(block_keys)
-    scored = score_pairs(pairs, mentions_v, cfg.scoring)
-    edges = matched_edges(scored)
-    clusters = clusters_of(mentions, edges)
-
-    return {
-        "mentions": mentions_v,
-        "block_keys": block_keys,
-        "block_stats": block_stats,
-        "candidate_pairs": pairs,
-        "scored_pairs": scored,
-        "edges": edges,
-        "clusters": clusters,
-    }
+    models = None
+    if tfidf_model is not None:
+        models = (tfidf_model, topic_model if cfg.use_topics else None)
+    return execute(spark, pages, RunConfig(pipeline=cfg), models=models)

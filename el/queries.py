@@ -5023,15 +5023,18 @@ def _pivot_clustering_sql(n_rounds: int = 3) -> str:
     rounds provably exhaust the graph — a pytest pins that the Spark
     run converges within the same bound. Priorities are the
     md5-hex-prefix 60-bit integers of el.clustering._md5_priority,
-    which DuckDB reproduces bit-for-bit (the ds1 discipline)."""
+    which DuckDB reproduces bit-for-bit (the ds1 discipline). Every
+    CTE is ``MATERIALIZED``: each round reads the previous round's
+    CTEs several times, and inlined they multiply into a plan that
+    exhausts DuckDB's memory."""
     parts = [
         """
-    WITH nodes AS (
+    WITH nodes AS MATERIALIZED (
       SELECT doc_id AS id,
              CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)
                   AS BIGINT) AS pri
       FROM documents
-    ), e1 AS (
+    ), e1 AS MATERIALIZED (
       SELECT a.doc_id AS src, b.doc_id AS dst
       FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1
       WHERE a.doc_id % 6 <> 5
@@ -5039,32 +5042,32 @@ def _pivot_clustering_sql(n_rounds: int = 3) -> str:
       SELECT a.doc_id AS src, b.doc_id AS dst
       FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 2
       WHERE a.doc_id % 6 = 0
-    ), act1 AS (SELECT id, pri FROM nodes)"""
+    ), act1 AS MATERIALIZED (SELECT id, pri FROM nodes)"""
     ]
     for r in range(1, n_rounds + 1):
         parts.append(f"""
-    , nbrs{r} AS (
+    , nbrs{r} AS MATERIALIZED (
       SELECT src, dst FROM e{r}
       UNION ALL SELECT dst AS src, src AS dst FROM e{r}
-    ), mn{r} AS (
+    ), mn{r} AS MATERIALIZED (
       SELECT src, dpri, dst FROM (
         SELECT n.src, n.dst, p.pri AS dpri,
                row_number() OVER (PARTITION BY n.src
                                   ORDER BY p.pri, n.dst) AS rn
         FROM nbrs{r} n JOIN act{r} p ON p.id = n.dst)
       WHERE rn = 1
-    ), piv{r} AS (
+    ), piv{r} AS MATERIALIZED (
       SELECT a.id, a.pri FROM act{r} a LEFT JOIN mn{r} m ON m.src = a.id
       WHERE m.src IS NULL OR a.pri < m.dpri
          OR (a.pri = m.dpri AND a.id < m.dst)
-    ), cov{r} AS (
+    ), cov{r} AS MATERIALIZED (
       SELECT DISTINCT n.src AS id
       FROM nbrs{r} n JOIN piv{r} p ON p.id = n.dst
-    ), act{r + 1} AS (
+    ), act{r + 1} AS MATERIALIZED (
       SELECT id, pri FROM act{r}
       WHERE id NOT IN (SELECT id FROM piv{r})
         AND id NOT IN (SELECT id FROM cov{r})
-    ), e{r + 1} AS (
+    ), e{r + 1} AS MATERIALIZED (
       SELECT src, dst FROM e{r}
       WHERE src IN (SELECT id FROM act{r + 1})
         AND dst IN (SELECT id FROM act{r + 1})
@@ -5073,8 +5076,8 @@ def _pivot_clustering_sql(n_rounds: int = 3) -> str:
         f"SELECT id, pri FROM piv{r}" for r in range(1, n_rounds + 1)
     )
     parts.append(f"""
-    , piv AS ({union})
-    , asg AS (
+    , piv AS MATERIALIZED ({union})
+    , asg AS MATERIALIZED (
       SELECT src AS node_id, dst AS cluster_id FROM (
         SELECT n.src, n.dst,
                row_number() OVER (PARTITION BY n.src
@@ -5343,145 +5346,12 @@ def j10_interval_overlap_join(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# driver-window ordering
+# registry ordering
 # ---------------------------------------------------------------------------
-# The grading driver evaluates only the first 50 registry entries
-# (observed: CORRECTNESS_r01/r02/r03 each hold exactly the first 50 names
-# in registration order).  More than 50 checks carry DuckDB oracles, so
-# which 50 get driver CORRECTNESS rows is an explicit, curated decision —
-# WINDOW below — not an accident of registration order.  Curation rules:
-# every SURVEY §2 operator's oracle ALWAYS holds a window slot (the
-# WINDOW_CORE set below, pinned by tests/test_registry_window.py); the
-# remaining ~15 slots ROTATE each round (VERDICT r4 #2) so that every
-# oracled check eventually earns a driver CORRECTNESS row — checks
-# rotated out stay registered and are verified every pytest run by the
-# identical DuckDB comparison in tests/test_oracle_queries.py, and
-# WINDOW_HISTORY.md (generated by jobs/window_history.py) records which
-# round each check last held a slot.  Same-operator variants (a4b/a6b/
-# w6) and TPC-H-style composites (x3/x5/x10) stay outside.
-#
-# §2-core slots — never rotated (35 names):
-WINDOW_CORE = [
-    # §2.2 projections / filters
-    "p1_project_revenue",
-    "p2_filter_orders",
-    "p3_lang_gate",
-    "p4_latest_event_per_user",
-    # §2.3 joins (J1-J8 all present)
-    "j1_selfjoin_docs_lang",
-    "j2_salted_join",
-    "j3_broadcast_nation_counts",
-    "j4_semi_customers_with_orders",
-    "j5_anti_customers_without_orders",
-    "j6_range_join_parts",
-    "j7_connected_components",
-    "j8_asof_latest_event",
-    # §2.4 aggregations
-    "a1_pricing_summary",
-    "a2_distinct_custkeys",
-    "a4_grouped_vector_centroid",
-    "a5_first_order_per_customer",
-    "a6_rollup_lineitem",
-    # §2.5 windows
-    "w1_per_block_cap",
-    "w2_topk_orders_per_customer",
-    "w4_running_event_sum",
-    "w5_price_median",
-    # §2.6 sorts / limits
-    "o1_sorted_nations",
-    "o2_global_topk_orders",
-    # §2.7 set ops
-    "u1_union_distinct_langs",
-    "u2_intersect_keys",
-    "u3_except_keys",
-    # §2.8 scalar functions
-    "f1_normalize_names",
-    "f2_tokenize_stats",
-    "f4_levenshtein_parts",
-    "f5_jaro_winkler_parts",
-    "f9_json_extract_events",
-    "f10_events_per_day",
-    "f11_math_clamps",
-    # §2.10 streaming batch twins
-    "st2_tumbling_window_counts",
-    "st3_session_window_counts",
-]
-# Rotating slots, round 5: the 14 oracled checks that had never held a
-# driver row (VERDICT r4 #2 promotion list) + er1 (also never-rowed —
-# surfaced by WINDOW_HISTORY; it takes the 15th slot over an lk1
-# holdover because lk1 already has its r4 green row).  Rotated OUT
-# this round — all with green driver rows r1-r4: dd1, dd4, dd4b, dd5,
-# dd5b, dd7, dd8, ann1, tx1-tx4, st6, er2, lk1, ds1 (dd5's slot went
-# to the late-r5 g1_pagerank, see below).  Oracled checks without a
-# driver row after this window: ds2_pack_sequences, tx10_nfc_normalize
-# and diag1_key_skew_orders (the last two ceded their slots to the
-# el1/el2 entity linker, see below) plus the late-r5 additions (dd10,
-# ds5, ds6, ds7, g0, g2, tx11-tx14, el3/el4 NIL resolution + eval,
-# lk2 Fellegi-Sunter) — more never-rowed
-# candidates than the 15 rotating slots; each is verified by the
-# identical DuckDB comparison every pytest run
-# (tests/test_oracle_queries.py), and WINDOW_HISTORY.md audits which
-# round each check last held a slot so future rotations pick the
-# most-starved first.
-WINDOW_R5 = [
-    "er1_blocking_reduction",
-    # crawl-hygiene / text-analysis family
-    "tx6_url_canonicalize",
-    "tx7_repetition_stats",
-    "tx8_pii_scrub",
-    # dedup family (chunk-level) + late-r5 web-graph centrality:
-    # dd5_embedding_neardup gave this slot to g1_pagerank — dd5
-    # already holds green driver rows from r1/r2/r3, g1 is new this
-    # round and the rotation's whole point is that every oracled
-    # check earns a row (dd10/ds5, also new, stay pytest-oracled —
-    # one free slot, allocated to the most novel verification
-    # surface: the 10-iteration hash-exact ranks).
-    "g1_pagerank",
-    "dd6_chunk_exact_dedup",
-    # dataset ops
-    "ds3_stratified_sample",
-    "ds4_budget_select",
-    # ER metrics / diagnostics
-    "er3b_pr_curve",
-    "er5_bcubed",
-    # join pruning
-    "j9_bloom_semi_orders",
-    # r4-new first-class ops
-    "dc1_benchmark_contamination",
-    "lm1_bigram_rarity",
-    # late-r5 two-signal entity linker: the north-star capability
-    # itself (mention -> catalog). tx10_nfc_normalize and
-    # diag1_key_skew_orders ceded these two slots — both stay
-    # pytest-oracled like every rotated-out check; with no further
-    # rounds, driver rows are worth most on the headline ops.
-    "el1_alias_prior_linking",
-    "el2_context_linking",
-]
-WINDOW = [*WINDOW_CORE, *WINDOW_R5]
-
-
 def _order_registry(reg: dict[str, Check]) -> dict[str, Check]:
-    # explicit raises, not asserts: these invariants guard the graded
-    # window and must hold under `python -O` too (ADVICE r4)
-    if len(WINDOW) != 50:
-        raise ValueError(f"WINDOW has {len(WINDOW)} entries, need 50")
-    if len(set(WINDOW)) != 50:
-        raise ValueError("WINDOW has duplicates")
-    missing = [n for n in WINDOW if n not in reg]
-    if missing:
-        raise ValueError(f"WINDOW names not registered: {missing}")
-    unoracled = [n for n in WINDOW if reg[n].oracle is None]
-    if unoracled:
-        raise ValueError(f"WINDOW entries without an oracle: {unoracled}")
-    windowed = set(WINDOW)
-    # outside the window: oracled checks first (pytest runs the same
-    # DuckDB comparison on them), rows-only checks last; stable
-    # registration order within each group.
-    rest = sorted(
-        (n for n in reg if n not in windowed),
-        key=lambda n: reg[n].oracle is None,
-    )
-    return {n: reg[n] for n in [*WINDOW, *rest]}
+    # oracled checks first, rows-only checks last; stable registration
+    # order within each group
+    return dict(sorted(reg.items(), key=lambda kv: kv[1].oracle is None))
 
 
 REGISTRY = _order_registry(REGISTRY)

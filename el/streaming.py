@@ -215,8 +215,7 @@ def user_value_rollup(
     RuntimeError here when protobuf is missing; the batch twin always
     works, and the streaming path is exercised by
     tests/test_streaming.py whenever protobuf is available
-    (pytest.importorskip). Same honest-gating policy as the Iceberg
-    backend (el.catalog.IcebergCatalog)."""
+    (pytest.importorskip)."""
     us = (F.col(val_col).cast("decimal(28,6)") * 1_000_000).cast("long")
     quantized = df.withColumn("_value_us", us)
     if not df.isStreaming:

@@ -9,6 +9,7 @@ tolerance; everything else exact after canonicalization).
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 import pandas as pd
@@ -17,7 +18,12 @@ from el.schemas import TESTDATA_TABLES
 
 
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
+    # pinned resources: a runaway oracle fails fast with an
+    # out-of-memory error instead of exhausting the host
+    threads = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    con = duckdb.connect(
+        config={"memory_limit": "4GB", "threads": int(threads)}
+    )
     for t in TESTDATA_TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"

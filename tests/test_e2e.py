@@ -36,9 +36,38 @@ def test_all_three_strategies_present(spark, e2e):
 
 
 def test_blocking_recall_floor(spark, e2e):
+    # the block stage stores the raw key union; pairs come from the
+    # skew-capped keys, so the recall floor is measured on those
+    from el.pipeline import skew_capped_keys
+
     out, labeled = e2e
-    br = blocking_recall(labeled, out["block_keys"], out["mentions"])
+    capped, _ = skew_capped_keys(out["block_keys"], PipelineConfig())
+    br = blocking_recall(labeled, capped, out["mentions"])
     assert br >= 0.99
+
+
+def test_scoring_udf_runs_once(spark):
+    """Each stage is materialized once, inside its own timing: the
+    scoring UDF (``feats``) runs in exactly one SQL execution, and
+    later reads of scored_pairs and clusters reuse that result."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        xs = store.executionsList()
+        return [xs.apply(i) for i in range(xs.size())]
+
+    seen = {e.executionId() for e in executions()}
+    pages = gen_web_pages(spark, 300)
+    out = run_pipeline(spark, pages, PipelineConfig())
+    assert out["scored_pairs"].persist().count() > 0
+    assert out["clusters"].persist().count() > 0
+    scoring = [
+        e.executionId()
+        for e in executions()
+        if e.executionId() not in seen
+        and "feats(" in e.physicalPlanDescription()
+    ]
+    assert len(scoring) == 1, scoring
 
 
 def test_pairwise_f1(spark, e2e):

@@ -1,100 +1,14 @@
-"""The driver grades only the first 50 registry entries. WINDOW makes
-that subset an explicit curated decision (VERDICT r3 #1/#7, ADVICE r3);
-these invariants ensure a new check can never silently evict another
-from the graded window, and that the documented counts cannot drift.
-
-Since r5 the window has two tiers (VERDICT r4 #2): WINDOW_CORE — every
-SURVEY §2 operator's oracle, never rotated — and a rotating tail that
-cycles so every oracled check eventually earns a driver CORRECTNESS
-row. Checks rotated out are still verified by the identical DuckDB
-comparison in tests/test_oracle_queries.py every pytest run."""
+"""Registry invariants: oracled checks come first, and the documented
+check counts cannot drift from the registry."""
 
 from __future__ import annotations
 
-from el.queries import REGISTRY, WINDOW, WINDOW_CORE, WINDOW_R5
-
-# The r4-verdict promotion list: oracled checks that had never held a
-# driver CORRECTNESS row before round 5. The verdict's done-criterion
-# is >= 10 of these green in CORRECTNESS_r05.
-NEVER_ROWED_PROMOTIONS = {
-    "er1_blocking_reduction",
-    "dc1_benchmark_contamination",
-    "lm1_bigram_rarity",
-    "er5_bcubed",
-    "ds3_stratified_sample",
-    "ds4_budget_select",
-    "tx6_url_canonicalize",
-    "tx7_repetition_stats",
-    "tx8_pii_scrub",
-    "tx10_nfc_normalize",
-    "j9_bloom_semi_orders",
-    "diag1_key_skew_orders",
-    "er3b_pr_curve",
-    "dd6_chunk_exact_dedup",
-    "dd5_embedding_neardup",
-}
-
-
-def test_window_is_exactly_the_first_50_registry_entries():
-    assert list(REGISTRY)[:50] == WINDOW
-    assert len(WINDOW) == 50
-    assert len(set(WINDOW)) == 50
-
-
-def test_window_entries_all_carry_oracles():
-    assert all(REGISTRY[n].oracle is not None for n in WINDOW)
-
-
-def test_core_operator_checks_hold_window_slots():
-    # the §2-core tier is pinned: rotation may only touch the tail
-    missing = set(WINDOW_CORE) - set(WINDOW)
-    assert not missing, f"core checks evicted from the driver window: {missing}"
-    assert len(WINDOW_CORE) == 35
-    assert WINDOW[: len(WINDOW_CORE)] == WINDOW_CORE
-
-
-def test_r5_rotation_promotes_never_rowed_checks():
-    promoted = NEVER_ROWED_PROMOTIONS & set(WINDOW_R5)
-    assert len(promoted) >= 10, (
-        "r5 window must give driver rows to >=10 never-rowed checks, "
-        f"got {len(promoted)}"
-    )
-    # rotated-out checks must still be registered AND oracled (the
-    # pytest oracle keeps verifying them)
-    rotated_out = {
-        "dd1_exact_dedup_docs", "dd4_ngram_jaccard",
-        "dd4b_ngram_jaccard_minhash", "dd5b_embedding_neardup_lsh",
-        "dd7_neardup_doc_clusters", "dd8_dedup_survivors",
-        "ann1_cosine_topk", "tx1_language_id", "tx2_quality_score",
-        "tx3_token_stats", "tx4_fingerprint_md5", "st6_user_event_stats",
-        "er2_clustering_agreement", "lk1_link_part_names", "ds1_hash_split",
-    }
-    assert rotated_out.isdisjoint(WINDOW)
-    for n in rotated_out:
-        assert n in REGISTRY and REGISTRY[n].oracle is not None, n
+from el.queries import REGISTRY
 
 
 def test_oracled_checks_precede_rows_only_checks():
-    # outside the window, oracled-first ordering keeps any future window
-    # growth aligned with verifiable checks
     flags = [REGISTRY[n].oracle is None for n in REGISTRY]
-    assert flags == sorted(flags[:50]) + sorted(flags[50:])
-
-
-def test_window_history_doc_is_fresh():
-    """WINDOW_HISTORY.md (VERDICT r4 #9) makes the rotation auditable;
-    it must match what jobs/window_history.py regenerates from the
-    committed CORRECTNESS artifacts + the current WINDOW."""
-    import importlib.util
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parents[1]
-    spec = importlib.util.spec_from_file_location(
-        "window_history", root / "jobs" / "window_history.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    assert (root / "WINDOW_HISTORY.md").read_text() == mod.build()
+    assert flags == sorted(flags)
 
 
 def test_documented_counts_match_registry():
