@@ -10,6 +10,7 @@ lineage for resumability.
 
 Layout:
     el.conf        SparkSession factory (AQE, Arrow, UTC, shuffle sizing)
+    el.worker_daemon  Python worker daemon (no per-task zip re-reads)
     el.schemas     fixed StructTypes for every table (SURVEY §1.1)
     el.fixtures    deterministic web_pages / labeled_pairs generators
     el.extract     V1 text extraction + V2 mention extraction (Arrow)

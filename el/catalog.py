@@ -17,7 +17,9 @@ primitives.
 The manifest IS the lineage record: one row per output partition file
 (rows, bytes, sha256), plus stage wall-clock and total rows — queried
 back as the ``_metrics`` table for observability and used by the
-runner's resume logic (el.runner).
+runner's resume logic (el.runner). It also records the table's Spark
+schema, so ``read`` scans with it instead of running a footer job to
+infer it (manifests without one still read by inference).
 """
 
 from __future__ import annotations
@@ -29,6 +31,7 @@ import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _local_path(uri: str) -> str:
@@ -226,6 +229,7 @@ class HadoopParquetCatalog:
             "lineage_ms": lineage_ms,
             "n_files": len(files),
             "total_rows": total_rows,
+            "schema": df.schema.jsonValue(),
             "files": files,
             **(extra or {}),
         }
@@ -273,10 +277,10 @@ class HadoopParquetCatalog:
         if version is not None:
             cur = self.manifest(table)
             if cur is not None and cur.get("version", 0) == version:
-                return spark.read.parquet(self._resolved_dir(table))
+                return self._scan(spark, [self._resolved_dir(table)])
             for n, d in self._archives(table):
                 if n == version:
-                    return spark.read.parquet(d)
+                    return self._scan(spark, [d])
             raise FileNotFoundError(
                 f"table {table!r} has no retained snapshot v{version} "
                 f"(keep_versions={self.keep_versions}; retained: "
@@ -287,7 +291,24 @@ class HadoopParquetCatalog:
             raise FileNotFoundError(
                 f"table {table!r} has no committed manifest under {self.root}"
             )
-        return spark.read.parquet(d)
+        return self._scan(spark, [d])
+
+    def read_all(self, spark: SparkSession, tables: list[str]) -> DataFrame:
+        """One scan over several committed tables of one schema (the
+        runner's score chunks)."""
+        return self._scan(spark, [self._resolved_dir(t) for t in tables])
+
+    @staticmethod
+    def _scan(spark: SparkSession, dirs: list[str]) -> DataFrame:
+        """Parquet scan of committed dirs with the schema their first
+        manifest recorded, so no footer job infers it; a manifest
+        without one reads by inference."""
+        with open(os.path.join(dirs[0], "_MANIFEST.json")) as f:
+            schema = json.load(f).get("schema")
+        reader = spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader.parquet(*dirs)
 
     def versions(self, table: str) -> list[int]:
         """Readable snapshot versions, ascending (archives + live)."""

@@ -2,12 +2,15 @@
 components on DataFrames (Kiveris et al., "Connected Components in
 MapReduce and Beyond", ACM SoCC 2014 — converges in O(log n) rounds).
 
-Spark-first mechanics:
-- each round is two groupBy-min + join passes over the edge table;
-- ``localCheckpoint(eager=True)`` after every round cuts the lineage
-  (iterative self-joins otherwise stack an unbounded plan);
-- convergence is detected via a cheap signature aggregate
-  (count + sum of xxhash64(src,dst)) instead of a full exceptAll;
+Spark-first mechanics — one round is one Spark execution:
+- each star step is one ``groupBy(src).agg(collect_set(dst))`` and an
+  explode (collect_set dedups each neighbourhood, so no join and no
+  per-step distinct); the round ends in one ``distinct``;
+- that distinct is ``localCheckpoint(eager=True)``ed, which cuts the
+  lineage (iterative rounds otherwise stack an unbounded plan);
+- convergence is detected via a signature (row count + XOR of
+  xxhash64(src,dst)) that ``DataFrame.observe`` gathers on the
+  checkpoint itself, instead of a separate aggregate job;
 - the driver participates only in the loop condition (SURVEY.md §3.2).
 
 Correctness oracle: el.testing.union_find (property test on random
@@ -16,59 +19,62 @@ graphs, tests/test_clustering.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+def _oriented(edges: DataFrame) -> DataFrame:
+    """Undirected edges as (hi, lo), self-loops dropped."""
+    return edges.select(
+        F.greatest("src", "dst").alias("src"),
+        F.least("src", "dst").alias("dst"),
+    ).where(F.col("src") != F.col("dst"))
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
     """Undirected edge set as (hi, lo), self-loops dropped, distinct."""
-    return (
-        edges.select(
-            F.greatest("src", "dst").alias("src"),
-            F.least("src", "dst").alias("dst"),
-        )
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    return _oriented(edges).distinct()
 
 
-def _large_star(edges: DataFrame) -> DataFrame:
-    """Connect every strictly-larger neighbor of u to min(N(u) u {u})."""
+def _star_round(edges: DataFrame) -> DataFrame:
+    """One large-star step then one small-star step over hi->lo edges;
+    returns the round's hi->lo edge multiset (callers dedup it).
+
+    Large star: each u connects every strictly-larger neighbour to
+    m = min(N(u) u {u}). Small star: each u connects itself and every
+    smaller neighbour other than m to m = min(N(u)). Both outputs are
+    hi->lo with no self-loops, and collect_set dedups each
+    neighbourhood, so neither step needs a distinct or a join."""
     nbrs = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    mins = (
+    large = (
         nbrs.groupBy("src")
-        .agg(F.min("dst").alias("mn"))
-        .select("src", F.least("mn", "src").alias("m"))
+        .agg(F.collect_set("dst").alias("n"))
+        .select(
+            F.explode(F.filter("n", lambda v: v > F.col("src"))).alias("src"),
+            F.least(F.array_min("n"), F.col("src")).alias("dst"),
+        )
     )
     return (
-        nbrs.join(mins, on="src")
-        .where(F.col("dst") > F.col("src"))
-        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        .distinct()
+        large.groupBy("src")
+        .agg(F.collect_set("dst").alias("n"))
+        .select("src", "n", F.array_min("n").alias("m"))
+        .select(
+            F.explode(
+                F.concat(
+                    F.filter("n", lambda v: v != F.col("m")), F.array("src")
+                )
+            ).alias("src"),
+            F.col("m").alias("dst"),
+        )
     )
 
 
-def _small_star(edges: DataFrame) -> DataFrame:
-    """For each u (over edges oriented hi->lo): connect u and all its
-    smaller neighbors to the minimum of the neighborhood."""
-    e = _canonical(edges)
-    mins = e.groupBy("src").agg(F.min("dst").alias("m"))
-    j = e.join(mins, on="src")
-    pairs_v = j.where(F.col("dst") != F.col("m")).select(
-        F.col("dst").alias("src"), F.col("m").alias("dst")
-    )
-    pairs_u = j.select(F.col("src"), F.col("m").alias("dst")).distinct()
-    return pairs_v.unionByName(pairs_u).distinct()
-
-
-def _signature(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
+def _signature(metrics: dict) -> tuple[int, int]:
+    """Round signature (row count, XOR of xxhash64(src, dst)) from the
+    metrics observed on the round's checkpoint."""
+    return int(metrics["n"]), int(metrics["h"] or 0)
 
 
 def connected_components(edges: DataFrame, max_iter: int = 30) -> DataFrame:
@@ -77,22 +83,35 @@ def connected_components(edges: DataFrame, max_iter: int = 30) -> DataFrame:
 
     Nodes with no edges are absent — callers assign singletons via a
     left join (see clusters_of)."""
-    e = _canonical(edges).localCheckpoint(eager=True)
+    # no distinct: the first round's collect_set dedups the input
+    e = _oriented(edges).localCheckpoint(eager=True)
     prev_sig = None
     for _ in range(max_iter):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        sig = _signature(e)
+        obs = Observation()
+        e = (
+            _star_round(e)
+            .distinct()
+            .observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        sig = _signature(obs.get)
         if sig == prev_sig:
             break
         prev_sig = sig
-    # converged: e is a star forest (node -> root)
+    # converged: e is a star forest (node -> root); its rows are
+    # distinct and never self-loops, so no member row equals a root
+    # row (r, r) and the union needs no distinct
     members = e.select(
         F.col("src").alias("mention_id"), F.col("dst").alias("cluster_id")
     )
     roots = e.select(F.col("dst").alias("mention_id")).distinct().withColumn(
         "cluster_id", F.col("mention_id")
     )
-    return members.unionByName(roots).distinct()
+    return members.unionByName(roots)
 
 
 def clusters_of(mentions: DataFrame, edges: DataFrame) -> DataFrame:
@@ -130,7 +149,8 @@ def pagerank(
       rank' = (1-d)/N + d * (incoming + dangling_mass/N);
     - dangling nodes (no out-edges) redistribute their mass
       uniformly; the mass is a 1-row exact-decimal aggregate per
-      round — the only driver participation, the j7 loop discipline.
+      round that rides along as a broadcast cross join, so the
+      driver never participates inside an iteration.
 
     Scale: each round is one equi-join on src + one groupBy on dst —
     the same node-id shuffle pattern as the CC kernel — and
@@ -158,20 +178,22 @@ def pagerank(
             .groupBy("dst")
             .agg(F.sum("c").cast("double").alias("s"))
         )
-        dm_row = (
-            ranks.join(outd, F.col("node") == F.col("src"), "left_anti")
-            .agg(F.sum(F.col("rank").cast("decimal(28,12)")).cast("double"))
-            .collect()[0][0]
+        # the dangling mass rides along as a broadcast 1-row cross join
+        dm = ranks.join(outd, F.col("node") == F.col("src"), "left_anti").agg(
+            F.coalesce(
+                F.sum(F.col("rank").cast("decimal(28,12)")).cast("double"),
+                F.lit(0.0),
+            ).alias("dm")
         )
-        dm = dm_row if dm_row is not None else 0.0
         ranks = (
             nodes.join(inc, nodes.node == inc.dst, "left")
+            .crossJoin(F.broadcast(dm))
             .select(
                 "node",
                 (
                     F.lit(tele)
                     + F.lit(damping)
-                    * (F.coalesce(F.col("s"), F.lit(0.0)) + F.lit(dm) / F.lit(n))
+                    * (F.coalesce(F.col("s"), F.lit(0.0)) + F.col("dm") / F.lit(n))
                 ).alias("rank"),
             )
             .localCheckpoint(eager=True)
@@ -479,8 +501,8 @@ def hits(edges: DataFrame, n_iter: int = 10) -> DataFrame:
       normalization is arbitrary up to scale, and L1 keeps the
       whole computation transcendental-free where L2 would need
       sqrt); the total is a 1-row aggregate per half-step that rides
-      along as a broadcast cross join — unlike pagerank's dangling
-      mass, the driver never participates inside an iteration.
+      along as a broadcast cross join (as pagerank's dangling mass
+      does), so the driver never participates inside an iteration.
 
     Scale: each half-step is one equi-join on a node key + one
     groupBy — the same shuffle pattern as pagerank/CC — with

@@ -6,6 +6,13 @@ Design notes (SURVEY.md §4.1):
   and per-block caps in el.blocking).
 - Arrow on: every Python kernel is a pandas/Arrow UDF; batch size is
   tuned so a batch amortizes UDF setup without blowing executor memory.
+- Python workers start from ``el.worker_daemon``
+  (``spark.python.daemon.module``), with el's import root on their
+  path: PySpark calls ``importlib.invalidate_caches()`` at the start of
+  every Python task, and on Python 3.10+ that re-reads the central
+  directory of every zip archive on the worker path (``pyspark.zip``
+  and its entries, jars), about 80 ms per task on 4 vCPUs. The
+  archives never change while an app runs, so the daemon skips them.
 - Session timezone pinned to UTC so timestamp semantics match the
   DuckDB oracle (naive-UTC) exactly.
 - shuffle.partitions defaults to the local core count; on a real
@@ -20,6 +27,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_ARROW_BATCH = 10_000
+# the directory el is imported from: Python workers start from
+# el.worker_daemon, so it goes on the worker path
+_EL_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -68,6 +78,8 @@ def get_spark(
         .config("spark.local.dir", _scratch_dir())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "el.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _EL_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -366,9 +366,7 @@ def _scored_pair_tables(
             and catalog.exists(d)
         )
         scored_tables.extend(chunks)
-        old_scored = spark.read.parquet(
-            *[os.path.join(catalog.root, d) for d in chunks]
-        )
+        old_scored = catalog.read_all(spark, chunks)
     for d in _delta_names(catalog, "scored_pairs"):
         scored_tables.append(d)
         old_scored = old_scored.unionByName(catalog.read(spark, d))
@@ -490,12 +488,16 @@ def incremental_update(
     # self-join input is the touched subset only, which scales with
     # the delta, not the corpus. Restricting to whole blocks commutes
     # with the per-block skew policy (el.pipeline.skew_capped_keys).
-    touched = new_keys.select("strategy", "block_key").distinct()
+    # touched and touched_keys are checkpointed: the report counts both
+    # handles without re-running their plans
+    touched = (
+        new_keys.select("strategy", "block_key").distinct().localCheckpoint(eager=True)
+    )
     touched_raw = combined_raw.join(
         touched, on=["strategy", "block_key"], how="left_semi"
     )
-    touched_keys, _ = skew_capped_keys(touched_raw, cfg)
-    all_pairs = blocking.candidate_pairs(touched_keys.localCheckpoint(eager=True))
+    touched_keys = skew_capped_keys(touched_raw, cfg)[0].localCheckpoint(eager=True)
+    all_pairs = blocking.candidate_pairs(touched_keys)
 
     # 4. delta scoring only (anti-join on the scored pair ids)
     done = old_scored.select("a_id", "b_id")

@@ -173,7 +173,7 @@ def _score_chunked(spark, t, build, catalog, rc, resume):
     # row count from the chunk manifests: the report never re-scans
     # the corpus-sized chunk tables
     rows = sum(catalog.manifest(n)["total_rows"] for n in names)
-    return spark.read.parquet(*[catalog._dir(n) for n in names]), {
+    return catalog.read_all(spark, names), {
         "rows": rows,
         "resumed": n_resumed == K,
         "chunks_resumed": n_resumed,

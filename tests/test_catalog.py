@@ -3,7 +3,9 @@ overwrite, and the metrics surface."""
 
 from __future__ import annotations
 
+import json
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -74,6 +76,62 @@ def test_partitioned_write_prunes(spark, cat):
     assert back.count() == 33
     # partition dirs exist on disk -> scan-level pruning is available
     assert os.path.isdir(os.path.join(cat.root, "part_t", "p=1"))
+
+
+def _jobs_run_by(spark, fn):
+    """(fn(), number of Spark jobs fn launched)."""
+    sc = spark.sparkContext
+    group = f"catalog-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "catalog read")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("kind", ["plain", "partitioned", "empty"])
+def test_read_uses_manifest_schema_without_jobs(spark, cat, kind):
+    """A committed table reads with the schema its manifest recorded:
+    no footer job, and the same names, order, types and nullability
+    as inference over the files would give."""
+    df = spark.range(40).select(
+        "id",
+        F.when(F.col("id") % 2 == 0, "lsh").otherwise("name").alias("strategy"),
+        F.array("id").alias("ids"),
+        F.struct(F.col("id").alias("a"), F.lit(0.5).alias("b")).alias("s"),
+    )
+    if kind == "empty":
+        df = df.where("id < 0")
+    partition_by = ["strategy"] if kind == "partitioned" else None
+    cat.write(df, "t", run_id="r1", partition_by=partition_by)
+    cat.write(df, "t", run_id="r2", partition_by=partition_by)
+
+    back, jobs = _jobs_run_by(spark, lambda: cat.read(spark, "t"))
+    old, old_jobs = _jobs_run_by(spark, lambda: cat.read(spark, "t", version=0))
+    assert (jobs, old_jobs) == (0, 0)
+
+    def fields(schema):
+        return [(f.name, f.dataType, f.nullable) for f in schema]
+
+    inferred = spark.read.parquet(os.path.join(cat.root, "t")).schema
+    assert fields(back.schema) == fields(inferred)
+    assert fields(old.schema) == fields(inferred)
+    assert back.count() == old.count() == (0 if kind == "empty" else 40)
+
+
+def test_read_without_manifest_schema_infers(spark, cat):
+    """Manifests written before the schema was recorded still read."""
+    cat.write(spark.range(7), "t", run_id="r1")
+    path = os.path.join(cat.root, "t", "_MANIFEST.json")
+    with open(path) as f:
+        m = json.load(f)
+    del m["schema"]
+    with open(path, "w") as f:
+        json.dump(m, f)
+    assert cat.read(spark, "t").count() == 7
 
 
 def test_metrics_table(spark, cat):

@@ -17,16 +17,55 @@ def _spark_cc(spark, edges):
     return {r["mention_id"]: r["cluster_id"] for r in got}
 
 
-@pytest.mark.parametrize("seed,n_nodes,n_edges", [(1, 30, 20), (2, 100, 80), (3, 200, 300), (4, 50, 5)])
+# (6, 40, 400) draws 10x more edges than nodes: its edge list holds
+# duplicate, reversed and self-loop edges, which the kernel must drop
+@pytest.mark.parametrize(
+    "seed,n_nodes,n_edges",
+    [(1, 30, 20), (2, 100, 80), (3, 200, 300), (4, 50, 5), (5, 2000, 3000),
+     (6, 40, 400)],
+)
 def test_cc_matches_union_find(spark, seed, n_nodes, n_edges):
     rng = random.Random(seed)
     edges = [
         (rng.randrange(n_nodes), rng.randrange(n_nodes)) for _ in range(n_edges)
     ]
-    edges = [(a, b) for a, b in edges if a != b]
-    want = components(edges)
+    want = components([(a, b) for a, b in edges if a != b])
     got = _spark_cc(spark, edges)
     assert got == want
+
+
+def test_cc_runs_one_execution_per_round(spark, monkeypatch):
+    """Each round is one SQL execution (its checkpoint, which also
+    observes the round signature) after the one that orients the
+    input: ``rounds + 1`` in all."""
+    import el.clustering as clustering
+
+    rounds = []
+    signature = clustering._signature
+
+    def counted(metrics):
+        rounds.append(metrics)
+        return signature(metrics)
+
+    monkeypatch.setattr(clustering, "_signature", counted)
+    rng = random.Random(7)
+    edges = spark.createDataFrame(
+        [(rng.randrange(300), rng.randrange(300)) for _ in range(400)],
+        "src long, dst long",
+    ).localCheckpoint(eager=True)
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def execution_ids():
+        bus.waitUntilEmpty()
+        xs = store.executionsList()
+        return {xs.apply(i).executionId() for i in range(xs.size())}
+
+    last = max(execution_ids(), default=-1)
+    connected_components(edges)
+    new = [i for i in execution_ids() if i > last]
+    assert len(rounds) >= 2
+    assert len(new) == len(rounds) + 1
 
 
 def test_cc_chain_and_clique(spark):
