@@ -111,12 +111,12 @@ def bucket_lookup_scope(spark: SparkSession):
     pruning ("Bucketed: false (disabled by query planner)"). The flag
     is read lazily at plan-compile time, so a helper that flips it and
     returns a lazy DataFrame either leaks the setting session-wide
-    (the r3 ADVICE finding) or restores it too early for the plan to
-    see. This scope makes the toggle explicit: compile AND execute
-    lookups inside it. Joins are unaffected either way (their
-    distribution interest keeps the bucketed scan on).
+    or restores it too early for the plan to see. This scope makes the
+    toggle explicit: compile AND execute lookups inside it. Joins are
+    unaffected either way (their distribution interest keeps the
+    bucketed scan on).
 
-    Thread-safety caveat (ADVICE r4): the toggle is a SESSION-global
+    Thread-safety caveat: the toggle is a SESSION-global
     conf, so concurrent queries compiled on the same SparkSession while
     a scope is open also see autoBucketedScan=false — correct results,
     possibly unpruned-or-differently-planned scans. Don't hold the
@@ -137,7 +137,7 @@ def bucket_lookup(spark: SparkSession, name: str, col: str, value) -> DataFrame:
     (``SelectedBucketsCount: 1 out of N`` in the physical scan) when
     planned and executed inside :func:`bucket_lookup_scope`. Outside
     the scope the lookup is still correct, just unpruned — and warns
-    (ADVICE r4: silent perf forfeiture is the failure mode here; use
+    (silent perf forfeiture is the failure mode here; use
     :func:`assert_single_bucket_scan` in tests to make pruning a hard
     invariant)."""
     import warnings

@@ -174,8 +174,8 @@ class HadoopParquetCatalog:
         # O(n_files) tiny reads — the same information an Iceberg
         # manifest records at write time).
         #
-        # Two failure modes of the executor path are guarded (ADVICE
-        # r2): binaryFile materializes each file as ONE byte array and
+        # Two failure modes of the executor path are guarded:
+        # binaryFile materializes each file as ONE byte array and
         # hard-fails past 2 GiB, so oversized parts are excluded from
         # the scan and hashed with a streamed driver-side fallback; and
         # the returned file URI is matched via os.path.realpath with a
@@ -239,8 +239,8 @@ class HadoopParquetCatalog:
             f.flush()
             os.fsync(f.fileno())
 
-        # Snapshot swap with no destroy-before-commit window (VERDICT
-        # r2 #6, upgraded to Iceberg-style snapshots in r3): the
+        # Snapshot swap with no destroy-before-commit window
+        # (Iceberg-style snapshots): the
         # previous committed version is renamed to its ARCHIVE slot
         # <table>.__vNNNN (not deleted) before the new one renames in;
         # snapshots beyond keep_versions are pruned only afterwards. A

@@ -301,7 +301,7 @@ def _exact_jaccard_verify(
     )
 
 
-# Production default for hot-bucket caps (VERDICT r3 stretch): every
+# Production default for hot-bucket caps: every
 # dd-family candidate generator caps bucket membership at this many
 # members unless the caller overrides it. K=1000 bounds any one
 # bucket's self-join contribution to ~K^2/2 pairs on one reducer while
@@ -325,7 +325,7 @@ def _same_block_filter(
     joining on the block column itself — the no-block-join plan
     discipline of the scale paths is preserved.
 
-    Null semantics (ADVICE r3): a NULL block value matches nothing —
+    Null semantics: a NULL block value matches nothing —
     the plain ``==`` below drops null-block rows exactly as the exact
     path's equi-join on ``_blk`` does, so every method's block_col
     behaves identically."""
@@ -363,12 +363,10 @@ def ngram_jaccard_pairs(
     ``block_col`` (default None = whole corpus) is HONORED by every
     method: when set, only same-block pairs are emitted, and rows with
     a NULL block value pair with nothing (conventional equi-join
-    semantics, identical across methods — ADVICE r3). In the minhash
+    semantics, identical across methods). In the minhash
     path it is applied as a post-filter on candidates (id joins, no
     block-column join); in the exact path it bounds the quadratic
-    self-join. The r2 API silently ignored an explicit block_col in
-    the minhash branch (ADVICE r2 finding) — now the blocked contract
-    cannot be silently dropped.
+    self-join. An explicit block_col is never silently ignored.
 
     method="minhash" (default, the 100 TB path): candidates come from
     MinHash band collisions over char shingles — linear in corpus
@@ -385,9 +383,8 @@ def ngram_jaccard_pairs(
     method="exact": r1 semantics — all pairs within ``block_col``
     (quadratic within a block; retained as the small-scale oracle
     path and for corpora with a genuinely selective block key).
-    ``max_bucket`` is honored here too (ADVICE r4: it used to be
-    silently ignored): block membership is capped to a deterministic
-    subset before the self-join, bounding the quadratic blowup
+    ``max_bucket`` is honored here too: block membership is capped to
+    a deterministic subset before the self-join, bounding the quadratic blowup
     exactly as in the minhash path. With block_col=None the whole
     corpus is ONE bucket, so the default cap keeps only
     DEFAULT_MAX_BUCKET docs — pass max_bucket=None for the lossless
@@ -683,9 +680,7 @@ def embedding_neardup_pairs(
     ``block_col`` (default None = whole corpus) is HONORED by every
     method: when set, only same-block pairs are emitted — in the lsh
     path as a post-filter on candidates (id joins, never a
-    block-column join), in the exact path as the self-join key. The
-    r2 API silently ignored an explicit block_col in the lsh branch
-    (ADVICE r2 finding).
+    block-column join), in the exact path as the self-join key.
 
     method="lsh" (default, the 100 TB path): candidates come from
     random-hyperplane LSH buckets (el.similarity.lsh_buckets — one
@@ -705,7 +700,7 @@ def embedding_neardup_pairs(
     method="exact": r1 semantics — all pairs within ``block_col``
     (or crossJoin when None). Quadratic within a block; retained as
     the small-scale oracle/baseline path only. ``max_bucket`` is
-    honored here too (ADVICE r4): block membership (the whole corpus
+    honored here too: block membership (the whole corpus
     when block_col=None) is capped to a deterministic subset before
     the self-join — pass None for the lossless all-pairs baseline."""
     if method == "lsh":
@@ -910,7 +905,7 @@ def shared_span_pairs(
     reducer) -> fp equi-join with id_a < id_b -> pair-count groupBy.
     Returns (id_a, id_b, n_shared).
 
-    Cap semantics (ADVICE r4): the cap removes POSTINGS, so beyond
+    Cap semantics: the cap removes POSTINGS, so beyond
     dropping pairs that only met inside a capped bucket, it also
     DEFLATES n_shared for surviving pairs whose other fingerprints sat
     in capped buckets — a pair can fall below ``min_shared`` even

@@ -10,7 +10,7 @@ Mechanics (J4/J5 semi/anti-join ops from SURVEY.md §2.3):
    pipeline inputs — never refit on a delta, §4.4; missing artifacts
    are an ERROR, not a refit trigger);
 3. re-derive block keys for new mentions, union with the committed
-   key table, RE-CAP with the batch pipeline's skew policy (so hot
+   key view, RE-CAP with the batch pipeline's skew policy (so hot
    blocks stay bounded across absorbed batches), then restrict to
    blocks TOUCHED by the delta (left_semi on the delta's distinct
    (strategy, block_key) set): an untouched block's member set is
@@ -25,12 +25,12 @@ Mechanics (J4/J5 semi/anti-join ops from SURVEY.md §2.3):
    converges in O(log n) rounds from scratch — incremental CC state
    is not worth the complexity at this edge density);
 6. commit APPEND-ONLY: the corpus-sized tables (mentions,
-   mentions_vec, scored pairs) each gain one ``<base>_delta_NNNN``
-   table per absorbed batch and are read back merge-on-read
+   mentions_vec, block_keys — the RAW uncapped key union; cap/salt is
+   a pair-generation-time policy, never a storage mutation — and
+   scored pairs) each gain one ``<base>_delta_NNNN`` table per
+   absorbed batch and are read back merge-on-read
    (``_read_with_deltas``) — commit I/O scales with the delta. Only
-   block_keys (the RAW uncapped key union — cap/salt is a
-   pair-generation-time policy, never a storage mutation) and
-   clusters (global CC output) are rewritten. ``compact_deltas``
+   clusters (global CC output) is rewritten. ``compact_deltas``
    periodically folds the accumulated deltas back into one well-sized base
    snapshot (Iceberg ``rewrite_data_files``), with the watermark
    committed atomically inside the base manifest so folded rows are
@@ -41,12 +41,15 @@ via a marker file ``_batch_NNNN.json`` written (atomic tmp+fsync+
 rename) only AFTER every table write of the batch has committed.
 ``_read_with_deltas``/``_delta_names`` only surface marker-covered
 deltas, and the ingest anti-join reads mentions through that view — so
-a crash anywhere mid-batch leaves the whole batch invisible, the rerun
-recomputes it from scratch, and orphan delta dirs from the crashed
-attempt are simply overwritten (same batch index). The committed
-block_keys table is additionally semi-joined to the marker-covered
-mention set on read, so even a crash AFTER the block_keys rewrite but
-before the marker cannot leak the half-committed batch's keys.
+a crash anywhere mid-batch leaves the whole batch invisible (its
+block keys included), the rerun recomputes it from scratch, and
+orphan delta dirs from the crashed attempt are simply overwritten
+(same batch index). Clusters is the only table a batch rewrites; a
+crash after that rewrite leaves it holding the unmarked batch until
+the rerun rewrites it again. One legacy case: block_keys used to be
+rewritten in full before the marker, so a catalog that crashed
+mid-absorb under that layout and was never re-run can carry the
+crashed batch's keys, unmarked, in its base block_keys table.
 Mentions and mentions_vec delta row alignment is asserted at marker
 time (the inner-join vector attach would silently drop pairs
 otherwise).
@@ -70,7 +73,8 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from el import blocking
 from el.catalog import HadoopParquetCatalog
@@ -82,6 +86,7 @@ from el.pipeline import (
     skew_capped_keys,
 )
 from el.runner import (
+    WRITE_KW,
     RunConfig,
     _fit_or_load_models,
     _models_dir,
@@ -232,10 +237,8 @@ def compact_deltas(
         gone = _forgotten_mentions(spark, catalog)
         if gone is not None:
             # apply forget_urls tombstones physically while we are
-            # rewriting anyway (the mentions/mentions_vec branch gets
-            # this for free through _read_with_deltas)
-            from pyspark.sql import functions as F
-
+            # rewriting anyway (the other bases get this for free
+            # through _read_with_deltas)
             ids = gone.select("mention_id")
             merged = merged.join(
                 F.broadcast(ids.select(F.col("mention_id").alias("a_id"))),
@@ -261,6 +264,7 @@ def compact_deltas(
         run_id=run_id,
         stage=target,
         extra={"compacted_through": last},
+        **WRITE_KW.get(target, {}),
     )
     for d in deltas + chunks:
         catalog.drop(d)
@@ -276,6 +280,16 @@ def compact_deltas(
 def _manifest_rows(catalog: HadoopParquetCatalog, table: str) -> int:
     m = catalog.manifest(table)
     return 0 if m is None else m["total_rows"]
+
+
+def _counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """(``df`` materialized by an eager localCheckpoint, its row count).
+    The count is observed in flight on the checkpoint, so reporting it
+    costs no extra Spark execution."""
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+    df = df.localCheckpoint(eager=True)
+    return df, obs.get["rows"]
 
 
 def ingest_new_mentions(delta_mentions: DataFrame, old_mentions: DataFrame):
@@ -294,8 +308,6 @@ def ingest_new_mentions(delta_mentions: DataFrame, old_mentions: DataFrame):
     delta ∖ seen = delta ∖ old_urls. Every shuffle in the plan is
     delta-sized (the two distincts); plan-audited in
     tests/test_incremental.py."""
-    from pyspark.sql import functions as F
-
     delta_urls = delta_mentions.select("url").distinct()
     seen = (
         old_mentions.select("url")
@@ -326,11 +338,9 @@ def _read_with_deltas(spark, catalog: HadoopParquetCatalog, base: str):
     df = catalog.read(spark, base)
     for d in _delta_names(catalog, base):
         df = df.unionByName(catalog.read(spark, d))
-    if base in ("mentions", "mentions_vec"):
+    if base in ("mentions", "mentions_vec", "block_keys"):
         gone = _forgotten_mentions(spark, catalog)
         if gone is not None:
-            from pyspark.sql import functions as F
-
             df = df.join(
                 F.broadcast(gone.select("mention_id")),
                 on="mention_id",
@@ -372,8 +382,6 @@ def _scored_pair_tables(
         old_scored = old_scored.unionByName(catalog.read(spark, d))
     gone = _forgotten_mentions(spark, catalog)
     if gone is not None:
-        from pyspark.sql import functions as F
-
         ids = gone.select("mention_id")
         old_scored = old_scored.join(
             F.broadcast(ids.select(F.col("mention_id").alias("a_id"))),
@@ -399,29 +407,21 @@ def incremental_update(
     cfg: PipelineConfig = rc.pipeline
     t0 = time.time()
 
-    # localCheckpoint ONLY what the commit phase overwrites
-    # (block_keys): no downstream plan may reference files a rename
-    # replaces. The append-only tables (mentions / mentions_vec /
-    # scored) are scanned lazily — materializing the corpus per batch
-    # would make every absorb O(corpus).
+    # Every committed table read here is append-only and scanned
+    # lazily: the commit phase adds delta tables and rewrites only
+    # clusters, which nothing below reads, so no plan references files
+    # a rename replaces, and no absorb materializes the corpus. The
+    # marker-gated key view hides the keys of a crashed batch.
     old_mentions = _read_with_deltas(spark, catalog, "mentions")
-    # semi-join the committed key table to the marker-covered mention
-    # set: a crash AFTER a block_keys rewrite but BEFORE the batch
-    # marker must not leak the half-committed batch's keys (module
-    # docstring, batch atomicity)
-    old_keys = (
-        catalog.read(spark, "block_keys")
-        .join(
-            old_mentions.select("mention_id").distinct(),
-            on="mention_id",
-            how="left_semi",
-        )
-        .localCheckpoint(eager=True)
-    )
+    old_keys = _read_with_deltas(spark, catalog, "block_keys")
     scored_tables, old_scored = _scored_pair_tables(spark, catalog)
-    # committed-pair total from MANIFESTS — no corpus-sized count()
-    # job per absorb
+    # committed totals from MANIFESTS — no corpus-sized count() job
+    # per absorb
     old_pairs_rows = sum(_manifest_rows(catalog, t) for t in scored_tables)
+    old_key_rows = sum(
+        _manifest_rows(catalog, t)
+        for t in ["block_keys"] + _delta_names(catalog, "block_keys")
+    )
 
     # 0. suppression list: a forgotten url must never be re-ingested
     # (forget_urls contract — GDPR-style deletion is delete + do not
@@ -429,8 +429,6 @@ def incremental_update(
     # silently resurrect the data). Tombstones are deletion-sized, so
     # the anti-join broadcasts.
     if catalog.exists("forgotten_urls"):
-        from pyspark.sql import functions as F
-
         new_pages = new_pages.join(
             F.broadcast(catalog.read(spark, "forgotten_urls").select("url")),
             on="url",
@@ -442,9 +440,9 @@ def incremental_update(
     # a broadcast of the DELTA's urls instead of shuffling the corpus
     # (ingest_new_mentions; plan-audited)
     delta_mentions = mentions_stage(new_pages, cfg).localCheckpoint(eager=True)
-    new_mentions = ingest_new_mentions(
-        delta_mentions, old_mentions
-    ).localCheckpoint(eager=True)
+    new_mentions, n_new = _counted(
+        ingest_new_mentions(delta_mentions, old_mentions)
+    )
 
     # 2. persisted models only — a delta must NEVER refit (§4.4):
     # delta vectors from a different model would be incomparable with
@@ -482,30 +480,29 @@ def incremental_update(
     new_keys = raw_block_keys(
         new_mentions, cfg, topic_buckets(new_vec, topics)
     ).localCheckpoint(eager=True)
-    combined_raw = old_keys.unionByName(new_keys).localCheckpoint(eager=True)
     # untouched blocks have the exact member set the committed run had,
     # so every pair they can generate is already in old_scored — the
     # self-join input is the touched subset only, which scales with
     # the delta, not the corpus. Restricting to whole blocks commutes
     # with the per-block skew policy (el.pipeline.skew_capped_keys).
-    # touched and touched_keys are checkpointed: the report counts both
-    # handles without re-running their plans
-    touched = (
-        new_keys.select("strategy", "block_key").distinct().localCheckpoint(eager=True)
+    touched, n_touched_blocks = _counted(
+        new_keys.select("strategy", "block_key").distinct()
     )
-    touched_raw = combined_raw.join(
+    touched_raw = old_keys.unionByName(new_keys).join(
         touched, on=["strategy", "block_key"], how="left_semi"
     )
-    touched_keys = skew_capped_keys(touched_raw, cfg)[0].localCheckpoint(eager=True)
+    touched_keys, n_touched_rows = _counted(
+        skew_capped_keys(touched_raw, cfg)[0]
+    )
     all_pairs = blocking.candidate_pairs(touched_keys)
 
     # 4. delta scoring only (anti-join on the scored pair ids)
     done = old_scored.select("a_id", "b_id")
     delta_pairs = all_pairs.join(done, on=["a_id", "b_id"], how="left_anti")
     # materialize once: the scoring plan (Arrow UDF) would otherwise
-    # be re-evaluated by the commit, the CC checkpoint, and the count
-    delta_scored = score_pairs(delta_pairs, all_vec, cfg.scoring).localCheckpoint(
-        eager=True
+    # be re-evaluated by the commit and the CC checkpoint
+    delta_scored, n_delta = _counted(
+        score_pairs(delta_pairs, all_vec, cfg.scoring)
     )
 
     # 5. merge + recluster over the full edge set
@@ -515,31 +512,30 @@ def incremental_update(
     clusters = clusters_of(all_mentions, edges)
 
     # 6. commit: APPEND-ONLY deltas for the corpus-sized tables
-    # (mentions / mentions_vec / scored pairs — each batch writes only
-    # its delta, so commit I/O scales with the delta, not the corpus);
-    # block_keys (the raw per-mention key strings — uncapped,
-    # one row per (mention, key), linear in the corpus) and clusters
-    # (global CC output — ids can change corpus-wide on any merge) are
-    # the two rewrites.
+    # (mentions / mentions_vec / block_keys / scored pairs — each batch
+    # writes only its delta, so commit I/O scales with the delta, not
+    # the corpus); clusters (global CC output — ids can change
+    # corpus-wide on any merge) is the one rewrite.
     # The batch MARKER is written last: until it lands, none of this
     # batch's deltas are visible and a rerun recomputes the batch.
-    n_new = new_mentions.count()
-    n_delta = delta_scored.count()
     batch = _next_batch(catalog)
     written: list[str] = []
     m_vec = m_men = None
+    new_key_rows = 0
     if n_new:
         m_vec = catalog.write(new_vec, f"mentions_vec_delta_{batch:04d}",
                               run_id=rc.run_id, stage="mentions_vec")
         m_men = catalog.write(new_mentions, f"mentions_delta_{batch:04d}",
                               run_id=rc.run_id, stage="mentions")
-        written += ["mentions", "mentions_vec"]
+        new_key_rows = catalog.write(
+            new_keys, f"block_keys_delta_{batch:04d}", run_id=rc.run_id,
+            stage="block_keys", **WRITE_KW["block_keys"],
+        )["total_rows"]
+        written += ["mentions", "mentions_vec", "block_keys"]
     if n_delta:
         catalog.write(delta_scored, f"scored_pairs_delta_{batch:04d}",
                       run_id=rc.run_id, stage="scored_pairs")
         written.append("scored_pairs")
-    m_keys = catalog.write(combined_raw, "block_keys", run_id=rc.run_id,
-                           stage="block_keys", partition_by=["strategy"])
     m_clusters = catalog.write(clusters, "clusters", run_id=rc.run_id,
                                stage="clusters")
     if m_men is not None and m_men["total_rows"] != m_vec["total_rows"]:
@@ -561,10 +557,10 @@ def incremental_update(
             "total_mentions": m_clusters["total_rows"],
             # scale diagnostics: the pair self-join's input must track
             # the delta, not the corpus (asserted in tests). touched_*
-            # are delta-sized; combined comes from the commit manifest.
-            "combined_key_rows": m_keys["total_rows"],
-            "touched_key_rows": touched_keys.count(),
-            "touched_blocks": touched.count(),
+            # are delta-sized; combined sums the key view's manifests.
+            "combined_key_rows": old_key_rows + new_key_rows,
+            "touched_key_rows": n_touched_rows,
+            "touched_blocks": n_touched_blocks,
             "wall_sec": round(time.time() - t0, 2),
         },
         "clusters": catalog.read(spark, "clusters"),
@@ -584,15 +580,15 @@ def forget_urls(
     absorbs) behave exactly as if those pages had never been crawled.
 
     Deletion is O(deletion), not O(corpus): the corpus-sized tables
-    (mentions, mentions_vec, scored pairs) are never rewritten here —
-    a deletion-sized TOMBSTONE table commits instead and every read
-    path anti-joins it broadcast-side (``_read_with_deltas`` /
-    ``_scored_pair_tables``); the next ``compact_deltas`` applies
-    tombstones physically while rewriting anyway. Only the two tables
-    the absorb path already rewrites (block_keys, clusters) are
-    rewritten eagerly — clusters MUST be: a forgotten mention may be
-    the bridge holding two real entities together, so dropping its
-    edges can split clusters (pinned in tests).
+    (mentions, mentions_vec, block_keys, scored pairs) are never
+    rewritten here — a deletion-sized TOMBSTONE table commits instead
+    and every read path anti-joins it broadcast-side
+    (``_read_with_deltas`` / ``_scored_pair_tables``); the next
+    ``compact_deltas`` applies tombstones physically while rewriting
+    anyway. Only clusters, the one table the absorb path also
+    rewrites, is rewritten eagerly — and it MUST be: a forgotten
+    mention may be the bridge holding two real entities together, so
+    dropping its edges can split clusters (pinned in tests).
 
     The contract is delete **and never re-collect**: forgotten urls
     join a permanent suppression list that ``incremental_update``
@@ -601,32 +597,30 @@ def forget_urls(
     resurrect the data the tombstones hide).
 
     Idempotent and crash-ordered: tombstones commit FIRST (they only
-    hide rows), then block_keys, then clusters — a crash between
-    writes leaves a state where re-running the same forget_urls call
-    completes the repair; every write is the catalog's atomic
-    tmp+rename commit.
+    hide rows), then clusters — a crash between writes leaves a state
+    where re-running the same forget_urls call completes the repair;
+    every write is the catalog's atomic tmp+rename commit.
 
     Returns a report dict; read the repaired clusters back via
     ``catalog.read(spark, "clusters")``."""
-    from pyspark.sql import functions as F
-
     rc = rc or RunConfig()
     t0 = time.time()
-    urls = urls.select("url").distinct().localCheckpoint(eager=True)
+    urls, n_urls = _counted(urls.select("url").distinct())
 
     # mention ids being forgotten — resolved BEFORE the tombstone
     # hides them; broadcast-sized (mentions of the forgotten pages)
-    gone_m = (
+    gone_m, n_gone = _counted(
         _read_with_deltas(spark, catalog, "mentions")
         .join(F.broadcast(urls), on="url", how="left_semi")
         .select("mention_id")
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
-    # 1. tombstones first (idempotent union with prior forget calls;
-    # localCheckpoint before the overwrite — no plan may read files
-    # the commit rename replaces)
+    # 1. tombstones first (idempotent union with prior forget calls).
+    # Each union reads the table its write replaces, with no
+    # checkpoint: the write's parquet job runs the plan to completion
+    # before the commit renames the new table into place, and nothing
+    # reads these plans afterwards.
     all_u = urls
     if catalog.exists("forgotten_urls"):
         all_u = (
@@ -636,7 +630,7 @@ def forget_urls(
             .distinct()
         )
     catalog.write(
-        all_u.localCheckpoint(eager=True),
+        all_u,
         "forgotten_urls",
         run_id=rc.run_id,
         stage="forget",
@@ -650,27 +644,16 @@ def forget_urls(
             .distinct()
         )
     catalog.write(
-        all_m.localCheckpoint(eager=True),
+        all_m,
         "forgotten_mentions",
         run_id=rc.run_id,
         stage="forget",
     )
 
-    # 2. block_keys: already a rewrite table in the absorb path —
-    # drop the forgotten members eagerly so pair generation never
-    # sees them again
-    keys = (
-        catalog.read(spark, "block_keys")
-        .join(F.broadcast(gone_m), on="mention_id", how="left_anti")
-        .localCheckpoint(eager=True)
-    )
-    catalog.write(
-        keys, "block_keys", run_id=rc.run_id, stage="block_keys",
-        partition_by=["strategy"],
-    )
-
-    # 3. recluster from the tombstone-filtered views: edges touching a
-    # forgotten mention are gone, so clusters it bridged split apart
+    # 2. recluster from the tombstone-filtered views (block_keys needs
+    # no rewrite: the same tombstones hide its forgotten members from
+    # pair generation): edges touching a forgotten mention are gone,
+    # so clusters it bridged split apart
     mentions = _read_with_deltas(spark, catalog, "mentions")
     _, scored = _scored_pair_tables(spark, catalog)
     clusters = clusters_of(mentions, matched_edges(scored))
@@ -679,8 +662,8 @@ def forget_urls(
     )
 
     return {
-        "forgotten_urls": urls.count(),
-        "forgotten_mentions": gone_m.count(),
+        "forgotten_urls": n_urls,
+        "forgotten_mentions": n_gone,
         "total_mentions": m_cl["total_rows"],
         "wall_sec": round(time.time() - t0, 2),
     }

@@ -100,7 +100,7 @@ def band_keys_batch(
     ``texts`` that produced ``keys[i]``; null/empty texts produce no
     output rows.
 
-    Batch vectorization (VERDICT r2 #4 — the simhash_batch pattern):
+    Batch vectorization (the simhash_batch pattern):
     every row's padded utf-8 bytes are concatenated into ONE flat
     stream; the sliding-window FNV fold runs k contiguous-slice passes
     over the whole stream (windows crossing row boundaries are dropped

@@ -98,7 +98,7 @@ def extract_meta(blobs: DataFrame) -> DataFrame:
     return blobs.mapInPandas(gen, schema=META_SCHEMA)
 
 
-# Decode status (VERDICT r2 #3 "missing"): the synthetic IMG1 format
+# Decode status: the synthetic IMG1 format
 # needs no codec — its payload is a raw byte stream, so decode is pure
 # numpy and IS implemented below. REAL codec formats (jpeg/png/audio)
 # remain environment-blocked: no PIL/opencv in this container; wire

@@ -788,13 +788,13 @@ def dd4_ngram_jaccard(spark, sf_dir):
     """,
 )
 def dd4b_ngram_jaccard_minhash(spark, sf_dir):
-    """Scale path (VERDICT r1 item 4): MinHash-band candidates ->
+    """Scale path: MinHash-band candidates ->
     exact-Jaccard verify. The oracle is the UNBLOCKED all-pairs
     Jaccard — the LSH path must reproduce it exactly (precision is
     exact by construction; recall 1.0 on the fixtures is measured,
     see tests/test_dedup.py).
 
-    RECALL-PARAMS COUPLING (ADVICE r2): this gates a probabilistic
+    RECALL-PARAMS COUPLING: this gates a probabilistic
     candidate generator against exact equality. Recall 1.0 holds at
     the current fixture SFs with rows=4/bands=16 over char-5 shingles
     (miss prob per pair = (1-s^4)^16; >= 0.999 for shingle-sim s >=
@@ -862,7 +862,7 @@ def dd5_embedding_neardup(spark, sf_dir):
     """,
 )
 def dd5b_embedding_neardup_lsh(spark, sf_dir):
-    """Scale path (VERDICT r1 item 3): hyperplane-LSH candidates ->
+    """Scale path: hyperplane-LSH candidates ->
     exact JVM-side cosine verify. The oracle is the UNBLOCKED
     all-pairs cosine: no label restriction — the LSH path must
     reproduce it exactly. planes=3/tables=8/probe_bits=1 (MULTI-PROBE,
@@ -873,7 +873,7 @@ def dd5b_embedding_neardup_lsh(spark, sf_dir):
     Hamming<=1 is p^3 + 3p^2(1-p) ~ 0.71 at p=0.63, so P(miss) =
     (1-0.71)^8 ~ 5e-5.
 
-    RECALL-PARAMS COUPLING (ADVICE r2): this config is tuned for the
+    RECALL-PARAMS COUPLING: this config is tuned for the
     fixture's unusually LOW 0.4 threshold (angle up to 66°). The
     production high-threshold regime is planes=8/tables=16 (recall
     1.0 at 0.95 pinned in tests/test_dedup.py); bench measures a

@@ -387,7 +387,7 @@ def ivf_topk(
 
 
 class IvfModel:
-    """Persisted IVF coarse quantizer (VERDICT r3 #4): the fit-once /
+    """Persisted IVF coarse quantizer: the fit-once /
     load-everywhere artifact discipline TF-IDF and LDA already follow
     (`el/runner.py` `_fit_or_load_models`), applied to ANN. Production
     ann3 calls load centroids from ``_models``-style storage instead

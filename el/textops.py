@@ -473,7 +473,7 @@ def scrub_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     ``text_scrubbed`` with emails -> ``<EMAIL>`` and phone numbers ->
     ``<PHONE>``. Regex-only (whole-stage codegen).
 
-    Precedence contract (ADVICE r3): emails are replaced FIRST, and
+    Precedence contract: emails are replaced FIRST, and
     ``n_phones`` is counted on the email-scrubbed intermediate — so a
     phone-shaped substring inside an email local part is neither
     double-redacted nor counted. Counts always agree with the
@@ -668,7 +668,7 @@ def corpus_bigram_counts(
 
 
 class BigramCountsModel:
-    """Persisted corpus-bigram-counts artifact (VERDICT r4 #5): the
+    """Persisted corpus-bigram-counts artifact: the
     fit-once / load-everywhere discipline TF-IDF, LDA, and IVF already
     follow, applied to the lm1 quality gate. Unlike IVF centroids the
     fit is a DISTRIBUTED table (bounded by min(distinct bigrams,

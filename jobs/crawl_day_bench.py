@@ -157,7 +157,7 @@ def main() -> None:
 
     # end-of-day compaction folds every delta
     t = time.time()
-    for base_tbl in ("mentions", "mentions_vec", "scored_pairs"):
+    for base_tbl in ("mentions", "mentions_vec", "block_keys", "scored_pairs"):
         compact_deltas(spark, cat, base_tbl, run_id="day0")
     out["compact_sec"] = round(time.time() - t, 2)
 

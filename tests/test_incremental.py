@@ -112,20 +112,23 @@ def test_incremental_join_input_scales_with_delta(spark, tmp_path_factory, rc):
 
 def test_incremental_commits_are_append_only(spark, tmp_path_factory, rc):
     """Absorbing a batch must NOT rewrite the corpus-sized tables:
-    the base mentions/mentions_vec commits stay untouched (same
-    manifest) and each batch adds exactly one delta table whose rows
-    == the batch's new mentions — commit I/O scales with the delta."""
+    the base mentions/mentions_vec/block_keys commits stay untouched
+    (same manifest) and each batch adds exactly one delta table whose
+    rows == the batch's new mentions — commit I/O scales with the
+    delta."""
     all_pages = gen_web_pages(spark, 300).localCheckpoint()
     split = F.pmod(F.xxhash64("url"), F.lit(3))
     cat = HadoopParquetCatalog(str(tmp_path_factory.mktemp("ao")))
     run_checkpointed(spark, all_pages.where(split == 0), cat, rc, resume=False)
     base_manifest = cat.manifest("mentions")
+    base_keys = cat.manifest("block_keys")
 
     r1 = incremental_update(spark, all_pages.where(split == 1), cat, rc)
     r2 = incremental_update(spark, all_pages.where(split == 2), cat, rc)
 
     assert cat.manifest("mentions") == base_manifest, "base was rewritten"
-    for base in ("mentions", "mentions_vec"):
+    assert cat.manifest("block_keys") == base_keys, "keys were rewritten"
+    for base in ("mentions", "mentions_vec", "block_keys"):
         assert cat.exists(f"{base}_delta_0000")
         assert cat.exists(f"{base}_delta_0001")
     assert cat.manifest("mentions_delta_0000")["total_rows"] == r1["report"][
@@ -189,6 +192,7 @@ def test_incremental_recaps_hot_blocks(spark, tmp_path_factory):
     block, so no absorb's self-join can go quadratic."""
     from pyspark.sql import functions as F2
 
+    from el.incremental import _read_with_deltas
     from el.pipeline import skew_capped_keys
 
     cap_rc = RunConfig(
@@ -201,7 +205,7 @@ def test_incremental_recaps_hot_blocks(spark, tmp_path_factory):
     cat = HadoopParquetCatalog(str(tmp_path_factory.mktemp("cap")))
     run_checkpointed(spark, all_pages.where(split), cat, cap_rc, resume=False)
     incremental_update(spark, all_pages.where(~split), cat, cap_rc)
-    committed = cat.read(spark, "block_keys")
+    committed = _read_with_deltas(spark, cat, "block_keys")
     sizes = committed.groupBy("strategy", "block_key").agg(
         F2.count("*").alias("n")
     )
@@ -236,7 +240,7 @@ def test_incremental_superset_of_batch_under_binding_cap(
     also land in one incremental cluster each."""
     import os
 
-    from el.incremental import _scored_pair_tables
+    from el.incremental import _read_with_deltas, _scored_pair_tables
     from el.scoring import matched_edges
 
     cap_rc = RunConfig(
@@ -270,7 +274,7 @@ def test_incremental_superset_of_batch_under_binding_cap(
     }
     # the cap must actually bind for this test to mean anything
     raw_sizes = (
-        inc_cat.read(spark, "block_keys")
+        _read_with_deltas(spark, inc_cat, "block_keys")
         .groupBy("strategy", "block_key").count()
     )
     assert raw_sizes.where(F.col("count") > 8).count() > 0
@@ -357,6 +361,147 @@ def test_incremental_crash_between_delta_writes_heals(
     # merged view has each mention exactly once (no orphan double-count)
     men = _read_with_deltas(spark, cat, "mentions")
     assert men.count() == men.select("mention_id").distinct().count()
+
+
+def test_crash_before_marker_hides_block_key_delta(
+    spark, tmp_path_factory, rc, monkeypatch
+):
+    """A crash on the last table write before the batch marker (the
+    clusters rewrite) leaves the batch's block_keys delta on disk but
+    invisible. The rerun commits every key once: the merged key view
+    equals the raw key table of one batch run over both batches."""
+    from el.incremental import _batch_markers, _delta_names, _read_with_deltas
+
+    all_pages = gen_web_pages(spark, 300).localCheckpoint()
+    split = F.pmod(F.xxhash64("url"), F.lit(10)) < 7
+    batch1, batch2 = all_pages.where(split), all_pages.where(~split)
+
+    mdir = str(tmp_path_factory.mktemp("models_keys"))
+    cat = HadoopParquetCatalog(str(tmp_path_factory.mktemp("crash_keys")))
+    rc_inc = RunConfig(
+        run_id="inc", n_score_chunks=2, pipeline=rc.pipeline, model_dir=mdir
+    )
+    run_checkpointed(spark, batch1, cat, rc_inc, resume=False)
+
+    real_write = cat.write
+
+    def dying_write(df, table, **kw):
+        if table == "clusters":
+            raise RuntimeError("simulated crash before the batch marker")
+        return real_write(df, table, **kw)
+
+    monkeypatch.setattr(cat, "write", dying_write)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        incremental_update(spark, batch2, cat, rc_inc)
+    monkeypatch.undo()
+
+    assert cat.exists("block_keys_delta_0000")
+    assert not _batch_markers(cat)
+    assert _delta_names(cat, "block_keys") == []
+
+    incremental_update(spark, batch2, cat, rc_inc)
+    assert _delta_names(cat, "block_keys") == ["block_keys_delta_0000"]
+    cols = ["mention_id", "strategy", "block_key"]
+    merged = [
+        tuple(r)
+        for r in _read_with_deltas(spark, cat, "block_keys")
+        .select(*cols)
+        .collect()
+    ]
+    assert len(merged) == len(set(merged))
+
+    full_cat = HadoopParquetCatalog(str(tmp_path_factory.mktemp("keys_full")))
+    rc_full = RunConfig(
+        run_id="full", n_score_chunks=2, pipeline=rc.pipeline, model_dir=mdir
+    )
+    full = run_checkpointed(
+        spark, batch1.unionByName(batch2), full_cat, rc_full, resume=False
+    )
+    want = sorted(tuple(r) for r in full["block_keys"].select(*cols).collect())
+    assert sorted(merged) == want
+
+
+def _small_base(spark, tmp_path_factory, rc, name):
+    """Base run over 2/3 of a 160-page corpus; returns (catalog, the
+    remaining pages to absorb, 1 url in 10 to forget)."""
+    pages = gen_web_pages(spark, 160).localCheckpoint()
+    split = F.pmod(F.xxhash64("url"), F.lit(3)) == 0
+    cat = HadoopParquetCatalog(str(tmp_path_factory.mktemp(name)))
+    run_checkpointed(spark, pages.where(~split), cat, rc, resume=False)
+    urls = pages.where(F.pmod(F.xxhash64("url"), F.lit(10)) == 0).select("url")
+    return cat, pages.where(split), urls
+
+
+def test_report_counts_equal_counts_of_their_frames(
+    spark, tmp_path_factory, rc, monkeypatch
+):
+    """The six absorb and forget report counts are observed in flight
+    on the checkpoints that materialize their frames; each must equal
+    a count() of that same frame."""
+    import el.incremental as inc
+
+    cat, batch, urls = _small_base(spark, tmp_path_factory, rc, "counts")
+    counted = inc._counted
+    seen = []
+
+    def checked(df):
+        out, n = counted(df)
+        seen.append((n, out.count()))
+        return out, n
+
+    monkeypatch.setattr(inc, "_counted", checked)
+    absorb = inc.incremental_update(spark, batch, cat, rc)["report"]
+    forget = inc.forget_urls(spark, cat, urls, rc)
+    monkeypatch.undo()
+
+    assert [n for n, _ in seen] == [c for _, c in seen]
+    assert [n for n, _ in seen] == [
+        absorb["new_mentions"],
+        absorb["touched_blocks"],
+        absorb["touched_key_rows"],
+        absorb["delta_pairs_scored"],
+        forget["forgotten_urls"],
+        forget["forgotten_mentions"],
+    ]
+    assert all(n > 0 for n, _ in seen)
+
+
+def test_absorb_and_forget_execution_count(
+    spark, tmp_path_factory, rc, monkeypatch
+):
+    """Pins the Spark SQL executions of one absorb plus one forget:
+    every report count is observed on a checkpoint that runs anyway,
+    block keys commit as a delta, and neither call rewrites block_keys
+    or checkpoints a frame only to guard a catalog write."""
+    import el.clustering as clustering
+    from el.incremental import forget_urls
+
+    cat, batch, urls = _small_base(spark, tmp_path_factory, rc, "execs")
+    rounds = []
+    signature = clustering._signature
+
+    def counted(metrics):
+        rounds.append(metrics)
+        return signature(metrics)
+
+    monkeypatch.setattr(clustering, "_signature", counted)
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def execution_ids():
+        bus.waitUntilEmpty()
+        xs = store.executionsList()
+        return {xs.apply(i).executionId() for i in range(xs.size())}
+
+    last = max(execution_ids(), default=-1)
+    incremental_update(spark, batch, cat, rc)
+    forget_urls(spark, cat, urls, rc)
+    new = [i for i in execution_ids() if i > last]
+
+    # absorb: 7 checkpoints, 5 commits of 2 executions each (parquet
+    # job + lineage hash); forget: 2 checkpoints, 3 commits; each of
+    # the two CC calls: rounds + 1
+    assert len(new) == (7 + 5 * 2) + (2 + 3 * 2) + len(rounds) + 2
 
 
 def test_streaming_absorb_equals_direct_absorb(
@@ -494,7 +639,7 @@ def test_forget_bridge_mention_splits_cluster(spark, tmp_path_factory, rc):
     """A forgotten mention that BRIDGED two entities must split them:
     dropping its edges (not just its row) is what makes deletion
     semantically a re-run, not a projection."""
-    from el.incremental import forget_urls
+    from el.incremental import _read_with_deltas, forget_urls
 
     cat = HadoopParquetCatalog(str(tmp_path_factory.mktemp("fg_bridge")))
     mentions = spark.createDataFrame(
@@ -525,9 +670,65 @@ def test_forget_bridge_mention_splits_cluster(spark, tmp_path_factory, rc):
     # 3 is gone; 1 and 2 are now SINGLETON clusters (the bridge fell)
     assert got == {1: 1, 2: 2}
     left_keys = {
-        r["mention_id"] for r in cat.read(spark, "block_keys").collect()
+        r["mention_id"]
+        for r in _read_with_deltas(spark, cat, "block_keys").collect()
     }
     assert left_keys == {1, 2}
+
+
+def test_compact_block_keys_folds_deltas_and_tombstones(
+    spark, tmp_path_factory, rc
+):
+    """After an absorb and a forget, compacting block_keys writes the
+    merged, tombstone-filtered key view back as the base (partitioned
+    by strategy) and drops the folded delta; the next absorb continues
+    the batch numbering."""
+    import os
+
+    from el.incremental import (
+        _batch_markers,
+        _delta_names,
+        _read_with_deltas,
+        compact_deltas,
+        forget_urls,
+    )
+
+    pages = gen_web_pages(spark, 240).localCheckpoint()
+    part = F.pmod(F.xxhash64("url"), F.lit(3))
+    cat = HadoopParquetCatalog(str(tmp_path_factory.mktemp("cmp_keys")))
+    run_checkpointed(spark, pages.where(part == 0), cat, rc, resume=False)
+    incremental_update(spark, pages.where(part == 1), cat, rc)
+    forget_set = pages.where(
+        (part < 2) & (F.pmod(F.xxhash64("url", F.lit(1)), F.lit(7)) == 0)
+    ).select("url")
+    assert forget_urls(spark, cat, forget_set, rc)["forgotten_mentions"] > 0
+
+    cols = ["mention_id", "strategy", "block_key"]
+
+    def rows(df):
+        return sorted(map(tuple, df.select(*cols).collect()))
+
+    before = rows(_read_with_deltas(spark, cat, "block_keys"))
+    rep = compact_deltas(spark, cat, "block_keys", run_id=rc.run_id)
+    assert rep["folded_batches"] == 1
+    assert rows(cat.read(spark, "block_keys")) == before
+    assert all(
+        f["path"].startswith("strategy=")
+        for f in cat.manifest("block_keys")["files"]
+    )
+    gone = {
+        r["mention_id"]
+        for r in cat.read(spark, "forgotten_mentions").collect()
+    }
+    assert gone and gone.isdisjoint(m for m, _, _ in before)
+    assert not [
+        d for d in os.listdir(cat.root) if d.startswith("block_keys_delta_")
+    ]
+    assert _delta_names(cat, "block_keys") == []
+
+    incremental_update(spark, pages.where(part == 2), cat, rc)
+    assert [m["batch"] for m in _batch_markers(cat)] == [0, 1]
+    assert _delta_names(cat, "block_keys") == ["block_keys_delta_0001"]
 
 
 def test_forget_suppresses_reingest_and_compacts_physically(
