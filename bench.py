@@ -166,7 +166,7 @@ HEADLINE_OPTIONAL = [
 
 
 def _dd5b_prod(spark, sf_dir):
-    """dd5b in its PRODUCTION configuration (VERDICT r2 #5). With
+    """dd5b in its PRODUCTION configuration. With
     multi-probe (r3) the production config at the fixture's low 0.4
     threshold is planes=3/tables=8/probe_bits=1 — measured at sf0.1:
     all 920 true pairs recovered (recall 1.0; false positives 0 —
@@ -188,7 +188,7 @@ def _dd5b_prod(spark, sf_dir):
 
 
 def _ann3_prefit(spark, sf_dir):
-    """ann3 on the PRODUCTION artifact path (VERDICT r3 #4): the
+    """ann3 on the PRODUCTION artifact path: the
     coarse quantizer is a fit-once PERSISTED model — `IvfModel.
     fit_or_load` writes centroids.npy+meta.json under a `_models`-
     style dir on first touch and every later call (including every
@@ -203,7 +203,7 @@ def _ann3_prefit(spark, sf_dir):
     from pyspark.sql import functions as F
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # Cache discipline (ADVICE r4): the artifact lives under a fresh
+    # Cache discipline: the artifact lives under a fresh
     # per-RUN private dir (never a shared world-writable /tmp path a
     # stale or hostile run could pre-populate), and the tag is keyed
     # on the DATA-FILE listing — relpath + size + mtime_ns of every
@@ -221,7 +221,7 @@ def _data_tag(src: str) -> str:
     """Artifact-cache key for a parquet path: md5 over the DATA-FILE
     listing (relpath + size + mtime_ns of every file under it), not
     the directory stat — a dir's own mtime/size does not track
-    in-place rewrites of same-named part files (ADVICE r4)."""
+    in-place rewrites of same-named part files."""
     import hashlib
     import os
 
@@ -241,7 +241,7 @@ def _data_tag(src: str) -> str:
 
 
 def _lm1_prefit(spark, sf_dir):
-    """lm1 on the PRODUCTION artifact path (VERDICT r4 #5): the corpus
+    """lm1 on the PRODUCTION artifact path: the corpus
     bigram-counts table is a fit-once persisted model (BigramCounts-
     Model, the IvfModel discipline) — rep 1 fits and commits, later
     reps load, so min-of-reps reports the fit-free scoring wall; the
@@ -492,7 +492,7 @@ def _steal_frac_between(a: list[int] | None, b: list[int] | None) -> float | Non
 
 def _defer_under_load() -> dict:
     """Hold the bench start while the box is busy or being starved
-    (VERDICT r4 #2/#3: a pressured window recorded 1.5-2.5x
+    (a pressured window recorded 1.5-2.5x
     regressions on unchanged plans). Polls the 1-min load average AND
     the hypervisor steal fraction BEFORE the JVM exists and waits —
     bounded, logged — until both drop under their thresholds. The
@@ -563,7 +563,7 @@ def main() -> None:
         .write.format("noop").mode("overwrite").save()
     )
 
-    # Noise discipline (VERDICT r2 #2): this VM shows random multi-
+    # Noise discipline: this VM shows random multi-
     # second hypervisor vCPU stalls (BASELINE.md), so each operator
     # query runs `reps` times and reports the MIN — the same rejection
     # rule the scaling-kernel protocol uses. The pipeline stages stay

@@ -258,6 +258,20 @@ class HadoopParquetCatalog:
 
     # -- reads -----------------------------------------------------------
 
+    def tables(self, prefix: str = "") -> list[str]:
+        """Sorted names of the live committed tables starting with
+        ``prefix``: a directory with a manifest, never an in-flight
+        ``.__tmp_*`` or archived ``.__v*`` one."""
+        if not os.path.isdir(self.root):
+            return []
+        return sorted(
+            name
+            for name in os.listdir(self.root)
+            if name.startswith(prefix)
+            and ".__" not in name
+            and os.path.exists(os.path.join(self._dir(name), "_MANIFEST.json"))
+        )
+
     def exists(self, table: str) -> bool:
         return os.path.exists(self._manifest_path(table))
 
@@ -286,17 +300,21 @@ class HadoopParquetCatalog:
                 f"(keep_versions={self.keep_versions}; retained: "
                 f"{self.versions(table)})"
             )
-        d = self._resolved_dir(table)
-        if d is None:
-            raise FileNotFoundError(
-                f"table {table!r} has no committed manifest under {self.root}"
-            )
-        return self._scan(spark, [d])
+        return self.read_all(spark, [table])
 
     def read_all(self, spark: SparkSession, tables: list[str]) -> DataFrame:
         """One scan over several committed tables of one schema (the
-        runner's score chunks)."""
-        return self._scan(spark, [self._resolved_dir(t) for t in tables])
+        runner's score chunks, a merge-on-read view's base and
+        deltas)."""
+        dirs = []
+        for t in tables:
+            d = self._resolved_dir(t)
+            if d is None:
+                raise FileNotFoundError(
+                    f"table {t!r} has no committed manifest under {self.root}"
+                )
+            dirs.append(d)
+        return self._scan(spark, dirs)
 
     @staticmethod
     def _scan(spark: SparkSession, dirs: list[str]) -> DataFrame:
@@ -366,21 +384,16 @@ class HadoopParquetCatalog:
         DataFrame (stage, run_id, file, rows, bytes, sha256, wall_ms,
         committed_at)."""
         rows = []
-        if os.path.isdir(self.root):
-            for table in sorted(os.listdir(self.root)):
-                if ".__" in table:
-                    continue  # in-flight tmp / snapshot-archive dirs
-                m = self.manifest(table)
-                if not m:
-                    continue
-                for f in m["files"]:
-                    rows.append(
-                        (
-                            m["stage"], m["run_id"], f["path"], f["rows"],
-                            f["bytes"], f["sha256"], m["wall_ms"],
-                            m["committed_at"],
-                        )
+        for table in self.tables():
+            m = self.manifest(table)
+            for f in m["files"]:
+                rows.append(
+                    (
+                        m["stage"], m["run_id"], f["path"], f["rows"],
+                        f["bytes"], f["sha256"], m["wall_ms"],
+                        m["committed_at"],
                     )
+                )
         return spark.createDataFrame(
             rows,
             "stage string, run_id string, file string, rows long, "

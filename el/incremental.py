@@ -28,8 +28,11 @@ Mechanics (J4/J5 semi/anti-join ops from SURVEY.md §2.3):
    mentions_vec, block_keys — the RAW uncapped key union; cap/salt is
    a pair-generation-time policy, never a storage mutation — and
    scored pairs) each gain one ``<base>_delta_NNNN`` table per
-   absorbed batch and are read back merge-on-read
-   (``_read_with_deltas``) — commit I/O scales with the delta. Only
+   absorbed batch and are all read back through one merge-on-read
+   view (``_read_with_deltas``: base ∪ marked deltas − tombstones) —
+   commit I/O scales with the delta. The scored-pair base is
+   ``scored_pairs_all`` once compacted, before that the chunked
+   runner's ``scored_chunk_*`` tables (``_base_tables``). Only
    clusters (global CC output) is rewritten. ``compact_deltas``
    periodically folds the accumulated deltas back into one well-sized base
    snapshot (Iceberg ``rewrite_data_files``), with the watermark
@@ -169,6 +172,32 @@ def _delta_names(catalog: HadoopParquetCatalog, base: str) -> list[str]:
     return names
 
 
+def _base_tables(catalog: HadoopParquetCatalog, base: str) -> list[str]:
+    """The committed tables a view's deltas apply to: ``[base]``, except
+    for scored pairs, whose base is ``scored_pairs_all`` once compacted
+    and the chunked runner's ``scored_chunk_*`` tables before that."""
+    if base != "scored_pairs":
+        return [base]
+    if catalog.exists("scored_pairs_all"):
+        return ["scored_pairs_all"]
+    return catalog.tables("scored_chunk_")
+
+
+def _view_tables(
+    catalog: HadoopParquetCatalog, base: str
+) -> tuple[list[str], list[str]]:
+    """(base tables, marker-covered deltas) behind ``base``'s view."""
+    bases, deltas = _base_tables(catalog, base), _delta_names(catalog, base)
+    if deltas and not any(catalog.exists(t) for t in bases):
+        # deltas exist with no base at all: a partial write died in a
+        # window the batch markers should make impossible
+        raise RuntimeError(
+            f"{base} deltas exist ({deltas}) but no base table does — "
+            "catalog is corrupt; refusing to read or compact"
+        )
+    return bases, deltas
+
+
 def compact_deltas(
     spark: SparkSession,
     catalog: HadoopParquetCatalog,
@@ -178,9 +207,8 @@ def compact_deltas(
     """Fold ``base``'s committed deltas into one rewritten base table
     (Iceberg ``rewrite_data_files`` shape). Merge-on-read keeps each
     absorb cheap, but a long-lived corpus accumulates one delta table
-    per
-    batch — at 100 TB that is thousands of small file sets every scan
-    must union. Compaction restores one well-sized file set.
+    per batch — at 100 TB that is thousands of small file sets every
+    scan must union. Compaction restores one well-sized file set.
 
     Protocol (crash-safe at every point):
 
@@ -193,11 +221,14 @@ def compact_deltas(
        leaves dirs that the watermark already made invisible; the next
        compaction sweeps them.
 
-    For ``base="scored_pairs"`` the rewrite target is
-    ``scored_pairs_all`` (the chunked runner may have committed
-    ``scored_chunk_*`` tables instead of a single base); the chunks
-    are folded and dropped too. Batch markers are history — they are
-    never rewritten; the watermark decides visibility."""
+    All four append-only tables (mentions, mentions_vec, block_keys,
+    scored pairs) compact through this one path over the same view.
+    Scored pairs are the one base not named after itself: their view
+    reads ``scored_pairs_all`` once compacted, and the chunked runner's
+    ``scored_chunk_*`` tables before that, so their rewrite target is
+    ``scored_pairs_all`` and any chunks are folded and dropped with the
+    deltas. Batch markers are history — they are never rewritten; the
+    watermark decides visibility."""
     # sweep orphans from a previous compaction that died before GC
     wm0 = _compacted_through(catalog, base)
     for m in _batch_markers(catalog):
@@ -205,61 +236,16 @@ def compact_deltas(
         if base in m["tables"] and m["batch"] <= wm0 and catalog.exists(t):
             catalog.drop(t)
 
+    target = _wm_table(base)
+    chunks = [t for t in _base_tables(catalog, base) if t != target]
     deltas = _delta_names(catalog, base)
-    chunks: list[str] = []
-    if base == "scored_pairs":
-        if not catalog.exists("scored_pairs_all"):
-            chunks = sorted(
-                d
-                for d in os.listdir(catalog.root)
-                if d.startswith("scored_chunk_")
-                and ".__" not in d
-                and catalog.exists(d)
-            )
-        if not deltas and not chunks:
-            return {"base": base, "folded_batches": 0, "rows": None}
-        merged = None
-        if catalog.exists("scored_pairs_all"):
-            merged = catalog.read(spark, "scored_pairs_all")
-        for c in chunks:
-            part = catalog.read(spark, c)
-            merged = part if merged is None else merged.unionByName(part)
-        if merged is None:
-            # deltas exist with no base at all: a partial write died in
-            # a window the batch markers should make impossible
-            raise RuntimeError(
-                f"scored-pairs deltas exist ({deltas}) but neither "
-                "scored_pairs_all nor any scored_chunk_* table does — "
-                "catalog is corrupt; refusing to compact"
-            )
-        for d in deltas:
-            merged = merged.unionByName(catalog.read(spark, d))
-        gone = _forgotten_mentions(spark, catalog)
-        if gone is not None:
-            # apply forget_urls tombstones physically while we are
-            # rewriting anyway (the other bases get this for free
-            # through _read_with_deltas)
-            ids = gone.select("mention_id")
-            merged = merged.join(
-                F.broadcast(ids.select(F.col("mention_id").alias("a_id"))),
-                on="a_id",
-                how="left_anti",
-            ).join(
-                F.broadcast(ids.select(F.col("mention_id").alias("b_id"))),
-                on="b_id",
-                how="left_anti",
-            )
-        target = "scored_pairs_all"
-    else:
-        if not deltas:
-            return {"base": base, "folded_batches": 0, "rows": None}
-        merged = _read_with_deltas(spark, catalog, base)
-        target = base
+    if not deltas and not chunks:
+        return {"base": base, "folded_batches": 0, "rows": None}
     last = max(
         [wm0] + [int(d.rsplit("_", 1)[1]) for d in deltas]
     )
     manifest = catalog.write(
-        merged,
+        _read_with_deltas(spark, catalog, base),
         target,
         run_id=run_id,
         stage=target,
@@ -277,9 +263,11 @@ def compact_deltas(
     }
 
 
-def _manifest_rows(catalog: HadoopParquetCatalog, table: str) -> int:
-    m = catalog.manifest(table)
-    return 0 if m is None else m["total_rows"]
+def _view_rows(catalog: HadoopParquetCatalog, base: str) -> int:
+    """Committed rows behind ``base``'s view, from the manifests
+    (tombstoned rows count until compaction drops them)."""
+    bases, deltas = _view_tables(catalog, base)
+    return sum(catalog.manifest(t)["total_rows"] for t in bases + deltas)
 
 
 def _counted(df: DataFrame) -> tuple[DataFrame, int]:
@@ -332,18 +320,21 @@ def _read_with_deltas(spark, catalog: HadoopParquetCatalog, base: str):
     the O(corpus)-payload tables — each absorbed batch commits ONLY
     its delta (Iceberg's append shape) and each forget request
     commits ONLY a tombstone (Iceberg's equality-delete shape);
-    nothing ever rewrites the corpus-sized tables eagerly. Compaction
-    applies the tombstones physically because it reads through this
-    view."""
-    df = catalog.read(spark, base)
-    for d in _delta_names(catalog, base):
+    nothing ever rewrites the corpus-sized tables eagerly. The base
+    tables (``_base_tables``) are one scan; a scored pair is dropped
+    when either end is forgotten. Compaction applies the tombstones
+    physically because it reads through this view."""
+    bases, deltas = _view_tables(catalog, base)
+    df = catalog.read_all(spark, bases)
+    for d in deltas:
         df = df.unionByName(catalog.read(spark, d))
-    if base in ("mentions", "mentions_vec", "block_keys"):
-        gone = _forgotten_mentions(spark, catalog)
-        if gone is not None:
+    keys = ("a_id", "b_id") if base == "scored_pairs" else ("mention_id",)
+    gone = _forgotten_mentions(spark, catalog)
+    if gone is not None:
+        for key in keys:
             df = df.join(
-                F.broadcast(gone.select("mention_id")),
-                on="mention_id",
+                F.broadcast(gone.select(F.col("mention_id").alias(key))),
+                on=key,
                 how="left_anti",
             )
     return df
@@ -359,40 +350,11 @@ def _next_batch(catalog: HadoopParquetCatalog) -> int:
 def _scored_pair_tables(
     spark: SparkSession, catalog: HadoopParquetCatalog
 ) -> tuple[list[str], DataFrame]:
-    """(table names, unioned DataFrame) of every committed scored-pair
-    table: the compacted base (or the chunked runner's scored_chunk_*)
-    plus marker-covered scored_pairs deltas. The union is lazy — no
-    corpus-sized action here."""
-    scored_tables: list[str] = []
-    if catalog.exists("scored_pairs_all"):
-        scored_tables.append("scored_pairs_all")
-        old_scored = catalog.read(spark, "scored_pairs_all")
-    else:  # chunked runner pass: union the chunks
-        chunks = sorted(
-            d
-            for d in os.listdir(catalog.root)
-            if d.startswith("scored_chunk_")
-            and ".__" not in d  # not an in-flight/set-aside dir
-            and catalog.exists(d)
-        )
-        scored_tables.extend(chunks)
-        old_scored = catalog.read_all(spark, chunks)
-    for d in _delta_names(catalog, "scored_pairs"):
-        scored_tables.append(d)
-        old_scored = old_scored.unionByName(catalog.read(spark, d))
-    gone = _forgotten_mentions(spark, catalog)
-    if gone is not None:
-        ids = gone.select("mention_id")
-        old_scored = old_scored.join(
-            F.broadcast(ids.select(F.col("mention_id").alias("a_id"))),
-            on="a_id",
-            how="left_anti",
-        ).join(
-            F.broadcast(ids.select(F.col("mention_id").alias("b_id"))),
-            on="b_id",
-            how="left_anti",
-        )
-    return scored_tables, old_scored
+    """(table names, merge-on-read DataFrame) of the scored-pair view.
+    Kept only for callers outside ``el`` that import it; new code
+    calls ``_read_with_deltas(spark, catalog, "scored_pairs")``."""
+    bases, deltas = _view_tables(catalog, "scored_pairs")
+    return bases + deltas, _read_with_deltas(spark, catalog, "scored_pairs")
 
 
 def incremental_update(
@@ -414,14 +376,11 @@ def incremental_update(
     # marker-gated key view hides the keys of a crashed batch.
     old_mentions = _read_with_deltas(spark, catalog, "mentions")
     old_keys = _read_with_deltas(spark, catalog, "block_keys")
-    scored_tables, old_scored = _scored_pair_tables(spark, catalog)
+    old_scored = _read_with_deltas(spark, catalog, "scored_pairs")
     # committed totals from MANIFESTS — no corpus-sized count() job
     # per absorb
-    old_pairs_rows = sum(_manifest_rows(catalog, t) for t in scored_tables)
-    old_key_rows = sum(
-        _manifest_rows(catalog, t)
-        for t in ["block_keys"] + _delta_names(catalog, "block_keys")
-    )
+    old_pairs_rows = _view_rows(catalog, "scored_pairs")
+    old_key_rows = _view_rows(catalog, "block_keys")
 
     # 0. suppression list: a forgotten url must never be re-ingested
     # (forget_urls contract — GDPR-style deletion is delete + do not
@@ -583,7 +542,7 @@ def forget_urls(
     (mentions, mentions_vec, block_keys, scored pairs) are never
     rewritten here — a deletion-sized TOMBSTONE table commits instead
     and every read path anti-joins it broadcast-side
-    (``_read_with_deltas`` / ``_scored_pair_tables``); the next
+    (``_read_with_deltas``); the next
     ``compact_deltas`` applies tombstones physically while rewriting
     anyway. Only clusters, the one table the absorb path also
     rewrites, is rewritten eagerly — and it MUST be: a forgotten
@@ -655,7 +614,7 @@ def forget_urls(
     # pair generation): edges touching a forgotten mention are gone,
     # so clusters it bridged split apart
     mentions = _read_with_deltas(spark, catalog, "mentions")
-    _, scored = _scored_pair_tables(spark, catalog)
+    scored = _read_with_deltas(spark, catalog, "scored_pairs")
     clusters = clusters_of(mentions, matched_edges(scored))
     m_cl = catalog.write(
         clusters, "clusters", run_id=rc.run_id, stage="clusters"

@@ -268,15 +268,6 @@ def skew_capped_keys(
     return blocking.cap_blocks(keys, cfg.cap_k)
 
 
-def block_stage(
-    mentions: DataFrame, cfg: PipelineConfig, topic_buckets: DataFrame | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """Multi-key blocking: union of strategy key tables -> skew policy.
-
-    Returns (capped/salted block_keys, block stats)."""
-    return skew_capped_keys(raw_block_keys(mentions, cfg, topic_buckets), cfg)
-
-
 def run_pipeline(
     spark,
     pages: DataFrame,

@@ -303,15 +303,10 @@ def sink_to_catalog(
 def read_catalog_stream(
     spark, catalog: HadoopParquetCatalog, table_prefix: str
 ) -> DataFrame:
-    """Union of every committed micro-batch table for a sink prefix."""
-    import os
-
-    dirs = sorted(
-        os.path.join(catalog.root, d)
-        for d in os.listdir(catalog.root)
-        if d.startswith(f"{table_prefix}__batch_")
-    )
-    return spark.read.parquet(*dirs)
+    """Union of every committed micro-batch table for a sink prefix
+    (each once: a replayed epoch's archived snapshot and an in-flight
+    write are not committed tables)."""
+    return catalog.read_all(spark, catalog.tables(f"{table_prefix}__batch_"))
 
 
 def ingest_pages_stream(

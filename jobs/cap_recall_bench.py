@@ -1,6 +1,5 @@
 #!/usr/bin/env python
-"""Quantify the DEFAULT_MAX_BUCKET=1000 recall cost at scale (VERDICT
-r4 #8).
+"""Quantify the DEFAULT_MAX_BUCKET=1000 recall cost at scale.
 
 Since r4 every dd-family candidate generator caps hot buckets at 1000
 members by default. The ≤6% wall tax is measured (BASELINE.md r4); this

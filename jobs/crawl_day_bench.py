@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Production crawl-day loop at bench scale (VERDICT r4 #7).
+"""Production crawl-day loop at bench scale.
 
 tests/test_crawl_day.py pins the composed WARC -> hygiene -> base run
 -> incremental absorbs -> delta-compaction story for CORRECTNESS at
@@ -188,10 +188,10 @@ def main() -> None:
         # pairs from members a later re-cap displaced, so bit-identity
         # is only expected when the cap never binds; reported anyway).
         from el.evaluate import clustering_agreement
-        from el.incremental import _scored_pair_tables
+        from el.incremental import _read_with_deltas
 
-        _, inc_scored = _scored_pair_tables(spark, cat)
-        _, full_scored = _scored_pair_tables(spark, full_cat)
+        inc_scored = _read_with_deltas(spark, cat, "scored_pairs")
+        full_scored = _read_with_deltas(spark, full_cat, "scored_pairs")
         missing = (
             full_scored.select("a_id", "b_id")
             .join(inc_scored.select("a_id", "b_id"),

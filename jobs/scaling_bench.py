@@ -62,9 +62,9 @@ def make_zip(path: str) -> str:
 def _pin_prefix(cpus: int | None) -> list[str]:
     """taskset prefix giving the run a core budget == its parallelism
     (None -> unpinned). Pinning requested without taskset available is
-    a hard error (ADVICE r2): silently falling back to unpinned would
-    emit a protocol field claiming a pinned run — exactly the r1
-    protocol flaw the pinning exists to fix."""
+    a hard error: silently falling back to unpinned would emit a
+    protocol field claiming a pinned run — exactly the protocol flaw
+    the pinning exists to fix."""
     if cpus is None:
         return []
     if not shutil.which("taskset"):
@@ -192,7 +192,7 @@ print(json.dumps({"level": level, "n_pairs": n, "walls": walls}))
 def dedup_kernel_scaling(work: str, levels: list[int], reps: int,
                          n_docs: int, pin: bool = True) -> dict:
     """Same CPU-pinned min-of-reps protocol as kernel_scaling, applied
-    to the dd4b near-dup kernel (VERDICT r3 #5): MinHash band keys ->
+    to the dd4b near-dup kernel: MinHash band keys ->
     capped bucket self-join -> size-ratio prune -> exact-Jaccard
     verify, over a pre-materialized document corpus, noop sink. The
     corpus is the synthetic generator in the prep script below —

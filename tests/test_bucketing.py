@@ -91,16 +91,16 @@ def test_bucket_lookup_prunes_to_one_bucket(spark, keys, tmp_path_factory):
         df = bucket_lookup(spark, "block_keys_1col", "block_key", some_key)
         plan = _formatted(df)
         assert f"SelectedBucketsCount: 1 out of {N_BUCKETS}" in plan, plan
-        # the pruned-scan assertion helper agrees (ADVICE r4)
+        # the pruned-scan assertion helper agrees
         from el.bucketing import assert_single_bucket_scan
 
         assert_single_bucket_scan(df)
         # and the lookup still returns the right rows
         n = df.count()
     assert n == keys.where(F.col("block_key") == F.lit(some_key)).count() > 0
-    # ADVICE r3: the scope restores the planner flag — no session leak
+    # the scope restores the planner flag — no session leak
     assert spark.conf.get(_AUTO_BUCKETED_SCAN) == prev
-    # ADVICE r4: outside the scope the lookup warns about lost pruning
+    # outside the scope the lookup warns about lost pruning
     # and the helper rejects the unpruned plan
     import warnings
 

@@ -145,8 +145,35 @@ def test_metrics_table(spark, cat):
     assert agg == {"extract": 10, "block": 20}
 
 
+def test_tables_lists_each_committed_table_once(spark, cat):
+    cat.write(spark.range(10), "t", run_id="r1")
+    cat.write(spark.range(5), "t", run_id="r2")  # archives t.__v0000
+    cat.write(spark.range(3), "u", run_id="r1")
+    # a crashed writer's in-flight dir, manifest and data included
+    spark.range(2).write.parquet(os.path.join(cat.root, "u.__tmp_crashed"))
+    with open(os.path.join(cat.root, "u.__tmp_crashed", "_MANIFEST.json"),
+              "w") as f:
+        json.dump(cat.manifest("u"), f)
+    assert "t.__v0000" in os.listdir(cat.root)
+
+    assert cat.tables() == ["t", "u"]
+    assert cat.tables("t") == ["t"]
+    assert cat.tables("nope") == []
+    rows = cat.metrics(spark).collect()
+    assert sorted({(r.stage, r.run_id) for r in rows}) == [
+        ("t", "r2"), ("u", "r1")
+    ]
+    assert sum(r.rows for r in rows) == 8
+
+
+def test_read_all_missing_table_raises(spark, cat):
+    cat.write(spark.range(3), "t", run_id="r1")
+    with pytest.raises(FileNotFoundError):
+        cat.read_all(spark, ["t", "nope"])
+
+
 def test_overwrite_crash_window_keeps_old_version(spark, cat, monkeypatch):
-    """VERDICT r2 #6: a writer dying between 'old archived' and 'new
+    """A writer dying between 'old archived' and 'new
     renamed in' must not leave the catalog with NO committed version —
     reads fall back to the newest snapshot, and the next successful
     write restores it before replacing."""
@@ -217,7 +244,7 @@ def test_snapshot_time_travel_and_rollback(spark, cat):
 
 
 def test_lineage_fallback_hash_matches(spark, cat, monkeypatch):
-    """ADVICE r2: files the binaryFile scan cannot cover (>2 GiB, or a
+    """Files the binaryFile scan cannot cover (>2 GiB, or a
     path-lookup miss under symlinked TMPDIRs) fall back to a streamed
     driver-side sha256 with identical output. Force every file down
     the fallback path and check the hashes against the bytes on disk."""

@@ -96,10 +96,7 @@ def test_compaction_preserves_view_and_drops_deltas(spark, cat, rc):
 def test_scored_compaction_folds_chunks_and_deltas(spark, cat, rc):
     """scored_pairs has a chunked base (scored_chunk_*) plus per-batch
     deltas; compaction folds BOTH into one scored_pairs_all."""
-    import os
-
-    chunks = [d for d in os.listdir(cat.root)
-              if d.startswith("scored_chunk_") and ".__" not in d]
+    chunks = cat.tables("scored_chunk_")
     deltas = _delta_names(cat, "scored_pairs")
     total_before = sum(
         cat.manifest(t)["total_rows"] for t in chunks + deltas
@@ -192,7 +189,7 @@ def test_compaction_crash_before_gc_never_double_counts(
 def test_scored_compaction_orphan_deltas_fail_loudly(
     spark, tmp_path_factory
 ):
-    """ADVICE r3: scored-pairs deltas with NO base of any kind (no
+    """Scored-pairs deltas with NO base of any kind (no
     scored_pairs_all, no scored_chunk_*) is a corrupt catalog and must
     raise the explicit corruption error, not an AttributeError on
     None."""

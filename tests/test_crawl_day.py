@@ -1,4 +1,4 @@
-"""The "production crawl day" loop, end to end (VERDICT r3 #8): a
+"""The "production crawl day" loop, end to end: a
 directory of WARC files per crawl hour -> warc_to_pages -> crawl-
 hygiene ingest gate -> base run + two incremental absorbs -> delta
 compaction -> metrics, with the final catalog's clusters equal to the

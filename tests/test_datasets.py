@@ -192,7 +192,7 @@ def test_benchmark_contamination_crafted(spark):
 
 
 def test_benchmark_contamination_production_n13(spark):
-    """VERDICT r4 #6: the PRODUCTION default (n=13, threshold=1 — the
+    """The PRODUCTION default (n=13, threshold=1 — the
     GPT-3-appendix spec) on realistic-length docs. A verbatim 13-gram
     eval-question leak inside a ~190-token training doc is flagged; a
     close PARAPHRASE of the same question (several words swapped, so

@@ -116,7 +116,7 @@ def test_embedding_neardup_ids_ordered(spark):
 def test_embedding_lsh_equals_exact_unblocked(spark):
     """The scale path (LSH candidates -> exact cosine verify) must
     reproduce the exact all-pairs result on the fixture — recall 1.0
-    measured, precision exact by construction (VERDICT r1 item 3)."""
+    measured, precision exact by construction."""
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     exact = {
         (r.a_id, r.b_id)
@@ -179,7 +179,7 @@ def test_embedding_lsh_finds_planted_neardups_high_threshold(spark):
 
 def test_ngram_minhash_equals_exact_unblocked(spark, docs):
     """dd4 scale path: MinHash candidates -> exact-Jaccard verify
-    reproduces the unblocked all-pairs result (VERDICT r1 item 4)."""
+    reproduces the unblocked all-pairs result."""
     from pyspark.sql import functions as F2
 
     one_block = docs.withColumn("_all", F2.lit(1))
@@ -200,9 +200,9 @@ def test_ngram_minhash_equals_exact_unblocked(spark, docs):
 
 
 def test_block_col_honored_in_scale_paths(spark, docs):
-    """ADVICE r2: an explicit block_col must restrict the minhash/lsh
-    candidate paths to same-block pairs (the r2 API silently ignored
-    it). Blocked scale path == blocked exact path on the fixture."""
+    """An explicit block_col must restrict the minhash/lsh
+    candidate paths to same-block pairs, never be silently ignored.
+    Blocked scale path == blocked exact path on the fixture."""
     exact = {
         (r.a_id, r.b_id, round(r.jaccard, 9))
         for r in ngram_jaccard_pairs(
@@ -243,7 +243,7 @@ def test_block_col_honored_in_scale_paths(spark, docs):
 
 
 def test_block_col_null_semantics_identical_across_methods(spark, docs):
-    """ADVICE r3: a NULL block value pairs with nothing, in BOTH the
+    """A NULL block value pairs with nothing, in BOTH the
     exact path (equi-join on _blk) and the minhash post-filter. Nulling
     one lang must remove exactly that language's pairs from every
     method, and the two methods must still agree pair-for-pair."""
@@ -312,7 +312,7 @@ def test_max_bucket_parity_when_cap_not_binding(spark, docs):
 
 
 def test_exact_method_honors_max_bucket(spark):
-    """ADVICE r4 (medium): method="exact" used to accept max_bucket and
+    """method="exact" used to accept max_bucket and
     silently ignore it — the block self-join stayed unbounded. Both
     exact branches now cap block membership to a deterministic subset
     before the self-join, so the quadratic is bounded at K(K-1)/2."""
@@ -598,7 +598,7 @@ def test_shared_span_pairs_hot_bucket_cap_bounds_postings(spark):
 
 
 def test_production_max_bucket_default_is_capped():
-    """VERDICT r3 stretch: pipeline-facing candidate generators default
+    """Pipeline-facing candidate generators default
     to a bounded hot-bucket cap; None (uncapped) is an explicit oracle
     choice, never the silent default."""
     import inspect

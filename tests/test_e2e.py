@@ -167,7 +167,7 @@ def test_hygiene_stage_gates(spark):
 
 
 def test_hygiene_rarity_gate(spark, tmp_path):
-    """lm1 rarity gate in the hygiene stage (VERDICT r4 #10): off by
+    """lm1 rarity gate in the hygiene stage: off by
     default (pass-through, bit-identical rows), tolerant threshold
     keeps everything, and against a persisted fit a planted gibberish
     page — whose bigrams the fit has never seen — is dropped while

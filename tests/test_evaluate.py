@@ -75,7 +75,7 @@ def test_pr_curve_recall_monotone_ties_collapsed(spark):
 
 
 def test_pr_curve_quantize_bounds_threshold_table(spark):
-    """VERDICT r3 stretch: quantize=q rounds scores upstream, so the
+    """quantize=q rounds scores upstream, so the
     threshold table is bounded by construction (<= 10^q + 1 rows) no
     matter how many distinct continuous scores come in, and the curve
     equals pr_curve over the pre-rounded scores."""

@@ -183,9 +183,8 @@ def test_ingest_anti_join_never_shuffles_the_corpus(spark):
 
 
 def test_incremental_recaps_hot_blocks(spark, tmp_path_factory):
-    """The cap stays a PAIR-GENERATION bound across absorbs (ADVICE r1
-    flagged the original unbounded-growth bug; r5 moved the bound from
-    the committed table to the pair-gen path): the committed block_keys
+    """The cap stays a PAIR-GENERATION bound across absorbs, so hot
+    blocks cannot grow without bound: the committed block_keys
     table retains FULL membership (the r5 recall property — a member
     dropped by one run's cap must stay recoverable), while the
     pair-generation input re-capped from it never exceeds cap_k per
@@ -240,7 +239,7 @@ def test_incremental_superset_of_batch_under_binding_cap(
     also land in one incremental cluster each."""
     import os
 
-    from el.incremental import _read_with_deltas, _scored_pair_tables
+    from el.incremental import _read_with_deltas
     from el.scoring import matched_edges
 
     cap_rc = RunConfig(
@@ -265,7 +264,7 @@ def test_incremental_superset_of_batch_under_binding_cap(
 
     inc_pairs = {
         (r.a_id, r.b_id)
-        for r in _scored_pair_tables(spark, inc_cat)[1]
+        for r in _read_with_deltas(spark, inc_cat, "scored_pairs")
         .select("a_id", "b_id").collect()
     }
     batch_pairs = {
@@ -300,7 +299,7 @@ def test_incremental_superset_of_batch_under_binding_cap(
 def test_incremental_crash_between_delta_writes_heals(
     spark, tmp_path_factory, rc, monkeypatch
 ):
-    """ADVICE r2: a crash between a batch's two delta writes must not
+    """A crash between a batch's two delta writes must not
     leave a permanent mentions/mentions_vec gap. The batch marker is
     written only after every table commit, so the crashed batch is
     invisible to the rerun, which recomputes it; the healed state
@@ -729,6 +728,60 @@ def test_compact_block_keys_folds_deltas_and_tombstones(
     incremental_update(spark, pages.where(part == 2), cat, rc)
     assert [m["batch"] for m in _batch_markers(cat)] == [0, 1]
     assert _delta_names(cat, "block_keys") == ["block_keys_delta_0001"]
+
+
+def test_scored_pair_view_drops_forgotten_ends_and_survives_compaction(
+    spark, tmp_path_factory, rc
+):
+    """Scored pairs read through the same view as every other
+    append-only table: over a chunked base plus an absorb delta, a
+    forget hides every pair with a forgotten end, and compaction
+    leaves the view's pair set unchanged."""
+    from el.incremental import (
+        _delta_names,
+        _read_with_deltas,
+        compact_deltas,
+        forget_urls,
+    )
+
+    pages = gen_web_pages(spark, 240).localCheckpoint()
+    part = F.pmod(F.xxhash64("url"), F.lit(3))
+    cat = HadoopParquetCatalog(str(tmp_path_factory.mktemp("view_pairs")))
+    run_checkpointed(spark, pages.where(part == 0), cat, rc, resume=False)
+    incremental_update(spark, pages.where(part == 1), cat, rc)
+    forget_set = pages.where(
+        (part < 2) & (F.pmod(F.xxhash64("url", F.lit(1)), F.lit(7)) == 0)
+    ).select("url")
+    assert forget_urls(spark, cat, forget_set, rc)["forgotten_mentions"] > 0
+
+    chunks = cat.tables("scored_chunk_")
+    deltas = _delta_names(cat, "scored_pairs")
+    assert chunks and deltas and not cat.exists("scored_pairs_all")
+    gone = {
+        r["mention_id"]
+        for r in cat.read(spark, "forgotten_mentions").collect()
+    }
+    stored = cat.read_all(spark, chunks).unionByName(
+        cat.read_all(spark, deltas)
+    )
+    # the stored rows still hold pairs the forget must hide
+    assert stored.where(
+        F.col("a_id").isin(*gone) | F.col("b_id").isin(*gone)
+    ).count() > 0
+
+    def pairs():
+        return {
+            (r.a_id, r.b_id)
+            for r in _read_with_deltas(spark, cat, "scored_pairs")
+            .select("a_id", "b_id").collect()
+        }
+
+    before = pairs()
+    assert before and all(a not in gone and b not in gone for a, b in before)
+    rep = compact_deltas(spark, cat, "scored_pairs", run_id=rc.run_id)
+    assert rep["folded_batches"] == 1 and rep["folded_chunks"] == len(chunks)
+    assert cat.tables("scored_chunk_") == []
+    assert pairs() == before
 
 
 def test_forget_suppresses_reingest_and_compacts_physically(

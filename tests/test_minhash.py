@@ -72,7 +72,7 @@ def test_lsh_band_keys_spark_matches_python(spark):
 
 
 def test_band_keys_batch_parity_with_per_row():
-    """VERDICT r2 #4: the batch-vectorized kernel must emit
+    """The batch-vectorized kernel must emit
     bit-identical keys to band_keys_py for every row, including
     short-text padding, unicode, duplicates-heavy, and null rows."""
     import numpy as np

@@ -169,7 +169,7 @@ def test_no_cartesian_in_blocked_dedup(spark):
 
 
 def test_neardup_scale_paths_never_join_on_block_col(spark):
-    """VERDICT r1 items 3-4: the default (scale) paths of dd4/dd5 must
+    """The default (scale) paths of dd4/dd5 must
     not contain the quadratic join on the low-cardinality block col —
     candidates come from band/bucket equi-joins only."""
     from el.dedup import embedding_neardup_pairs, ngram_jaccard_pairs

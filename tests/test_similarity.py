@@ -118,7 +118,7 @@ def test_ivf_topk_recall_floor_and_determinism(spark, emb):
 
 
 def test_ivf_model_artifact_roundtrip(spark, emb, tmp_path):
-    """VERDICT r3 #4: IVF centroids are a persisted model artifact
+    """IVF centroids are a persisted model artifact
     like TF-IDF/LDA. Round-trip is bit-exact, the loaded model's
     top-k equals the in-memory fit's, and fit_or_load fits exactly
     once (second call loads the committed artifact)."""

@@ -154,7 +154,7 @@ def test_scrub_pii_crafted(spark):
 
 
 def test_scrub_pii_phone_inside_email_not_double_counted(spark):
-    """ADVICE r3: a phone-shaped substring inside an email local part
+    """A phone-shaped substring inside an email local part
     is swallowed by the email replacement; n_phones must be counted on
     the email-scrubbed intermediate so counts agree with the text."""
     from el.textops import scrub_pii
@@ -332,7 +332,7 @@ def test_bigram_rarity_cross_corpus_unseen(spark):
 
 
 def test_bigram_counts_model_roundtrip_and_determinism(spark, tmp_path):
-    """VERDICT r4 #5: the counts table is a persisted model artifact.
+    """The counts table is a persisted model artifact.
     (a) save -> load -> score equals the in-memory fit's score;
     (b) fit is partitioning-invariant (exact-integer groupBy);
     (c) fit_or_load refuses a param-mismatched artifact;

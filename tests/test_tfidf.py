@@ -1,6 +1,6 @@
 """TF-IDF fit: cluster-side bucket aggregation (bounded driver
 materialization) + bit-parity with the scalar FNV bucket kernel
-(SURVEY.md §2.9 V6 context vectors; VERDICT r1 item 1)."""
+(SURVEY.md §2.9 V6 context vectors)."""
 
 from __future__ import annotations
 
