@@ -42,8 +42,6 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
-from el import blocking
-
 
 def write_bucketed(
     df: DataFrame,
@@ -88,13 +86,6 @@ def bucketed_block_keys(
         bucket_cols=["strategy", "block_key", "salt"],
         n_buckets=n_buckets,
     )
-
-
-def bucketed_candidate_pairs(keys_table: DataFrame) -> DataFrame:
-    """`blocking.candidate_pairs` over a bucketed key table: identical
-    rows (asserted in tests), shuffle-free self-join (plan-audited:
-    the only Exchange left is the final pair-dedup aggregation)."""
-    return blocking.candidate_pairs(keys_table)
 
 
 _AUTO_BUCKETED_SCAN = "spark.sql.sources.bucketing.autoBucketedScan.enabled"

@@ -51,6 +51,18 @@ def _local_path(uri: str) -> str:
 _BINARYFILE_MAX_BYTES = (2 << 30) - (64 << 20)
 
 
+def commit_json(path: str, obj) -> None:
+    """Atomic JSON file commit: write ``<path>.tmp``, fsync, rename
+    over ``path``. A reader sees the old file or the whole new one,
+    never a torn write (batch markers, model artifacts' meta.json)."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=1)
+        f.flush()
+        os.fsync(f.fileno())
+    os.rename(tmp, path)
+
+
 def _stream_sha256(path: str, chunk: int = 1 << 22) -> str:
     """Driver-side chunked sha256 — the no-size-limit fallback for
     files the executor-side binaryFile scan cannot or did not cover."""
@@ -233,11 +245,7 @@ class HadoopParquetCatalog:
             "files": files,
             **(extra or {}),
         }
-        mpath = os.path.join(tmp, "_MANIFEST.json")
-        with open(mpath, "w") as f:
-            json.dump(manifest, f, indent=1)
-            f.flush()
-            os.fsync(f.fileno())
+        commit_json(os.path.join(tmp, "_MANIFEST.json"), manifest)
 
         # Snapshot swap with no destroy-before-commit window
         # (Iceberg-style snapshots): the
@@ -306,6 +314,8 @@ class HadoopParquetCatalog:
         """One scan over several committed tables of one schema (the
         runner's score chunks, a merge-on-read view's base and
         deltas)."""
+        if not tables:
+            raise FileNotFoundError(f"no tables to read under {self.root}")
         dirs = []
         for t in tables:
             d = self._resolved_dir(t)

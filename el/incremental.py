@@ -76,11 +76,11 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from el import blocking
-from el.catalog import HadoopParquetCatalog
+from el.catalog import HadoopParquetCatalog, commit_json
 from el.clustering import clusters_of
 from el.pipeline import (
     PipelineConfig,
@@ -89,8 +89,10 @@ from el.pipeline import (
     skew_capped_keys,
 )
 from el.runner import (
+    SCORE_CHUNK_PREFIX,
     WRITE_KW,
     RunConfig,
+    _counted,
     _fit_or_load_models,
     _models_dir,
     topic_buckets,
@@ -115,22 +117,21 @@ def _batch_markers(catalog: HadoopParquetCatalog) -> list[dict]:
 def _commit_batch_marker(
     catalog: HadoopParquetCatalog, batch: int, run_id: str, tables: list[str]
 ) -> dict:
-    """Atomic batch commit point: tmp write + fsync + rename. Until
-    this file exists, none of the batch's delta tables are visible."""
+    """Atomic batch commit point (``commit_json``). Until this file
+    exists, none of the batch's delta tables are visible."""
     marker = {
         "batch": batch,
         "run_id": run_id,
         "tables": tables,
         "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
-    final = os.path.join(catalog.root, f"_batch_{batch:04d}.json")
-    tmp = final + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(marker, f, indent=1)
-        f.flush()
-        os.fsync(f.fileno())
-    os.rename(tmp, final)
+    commit_json(os.path.join(catalog.root, f"_batch_{batch:04d}.json"), marker)
     return marker
+
+
+def _delta_table(base: str, batch: int) -> str:
+    """Name of ``base``'s append-only delta table for ``batch``."""
+    return f"{base}_delta_{batch:04d}"
 
 
 def _wm_table(base: str) -> str:
@@ -161,7 +162,7 @@ def _delta_names(catalog: HadoopParquetCatalog, base: str) -> list[str]:
     for m in _batch_markers(catalog):
         if base not in m["tables"] or m["batch"] <= wm:
             continue
-        t = f"{base}_delta_{m['batch']:04d}"
+        t = _delta_table(base, m["batch"])
         if not catalog.exists(t):
             raise RuntimeError(
                 f"batch marker {m['batch']:04d} lists {t!r} but the table "
@@ -180,7 +181,7 @@ def _base_tables(catalog: HadoopParquetCatalog, base: str) -> list[str]:
         return [base]
     if catalog.exists("scored_pairs_all"):
         return ["scored_pairs_all"]
-    return catalog.tables("scored_chunk_")
+    return catalog.tables(SCORE_CHUNK_PREFIX)
 
 
 def _view_tables(
@@ -188,12 +189,16 @@ def _view_tables(
 ) -> tuple[list[str], list[str]]:
     """(base tables, marker-covered deltas) behind ``base``'s view."""
     bases, deltas = _base_tables(catalog, base), _delta_names(catalog, base)
-    if deltas and not any(catalog.exists(t) for t in bases):
-        # deltas exist with no base at all: a partial write died in a
-        # window the batch markers should make impossible
-        raise RuntimeError(
-            f"{base} deltas exist ({deltas}) but no base table does — "
-            "catalog is corrupt; refusing to read or compact"
+    if not any(catalog.exists(t) for t in bases):
+        if deltas:
+            # deltas exist with no base at all: a partial write died in
+            # a window the batch markers should make impossible
+            raise RuntimeError(
+                f"{base} deltas exist ({deltas}) but no base table does — "
+                "catalog is corrupt; refusing to read or compact"
+            )
+        raise FileNotFoundError(
+            f"{base} has no committed base table under {catalog.root}"
         )
     return bases, deltas
 
@@ -232,7 +237,7 @@ def compact_deltas(
     # sweep orphans from a previous compaction that died before GC
     wm0 = _compacted_through(catalog, base)
     for m in _batch_markers(catalog):
-        t = f"{base}_delta_{m['batch']:04d}"
+        t = _delta_table(base, m["batch"])
         if base in m["tables"] and m["batch"] <= wm0 and catalog.exists(t):
             catalog.drop(t)
 
@@ -268,16 +273,6 @@ def _view_rows(catalog: HadoopParquetCatalog, base: str) -> int:
     (tombstoned rows count until compaction drops them)."""
     bases, deltas = _view_tables(catalog, base)
     return sum(catalog.manifest(t)["total_rows"] for t in bases + deltas)
-
-
-def _counted(df: DataFrame) -> tuple[DataFrame, int]:
-    """(``df`` materialized by an eager localCheckpoint, its row count).
-    The count is observed in flight on the checkpoint, so reporting it
-    costs no extra Spark execution."""
-    obs = Observation()
-    df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-    df = df.localCheckpoint(eager=True)
-    return df, obs.get["rows"]
 
 
 def ingest_new_mentions(delta_mentions: DataFrame, old_mentions: DataFrame):
@@ -355,6 +350,22 @@ def _scored_pair_tables(
     calls ``_read_with_deltas(spark, catalog, "scored_pairs")``."""
     bases, deltas = _view_tables(catalog, "scored_pairs")
     return bases + deltas, _read_with_deltas(spark, catalog, "scored_pairs")
+
+
+def _rewrite_clusters(
+    catalog: HadoopParquetCatalog,
+    mentions: DataFrame,
+    scored: DataFrame,
+    rc: RunConfig,
+) -> int:
+    """Recluster ``mentions`` over the matched edges of ``scored`` and
+    commit the result as ``clusters``, the one table absorb and forget
+    rewrite (global CC output: ids can change corpus-wide on any merge
+    or split); returns its committed row count."""
+    clusters = clusters_of(mentions, matched_edges(scored))
+    return catalog.write(
+        clusters, "clusters", run_id=rc.run_id, stage="clusters"
+    )["total_rows"]
 
 
 def incremental_update(
@@ -464,48 +475,42 @@ def incremental_update(
         score_pairs(delta_pairs, all_vec, cfg.scoring)
     )
 
-    # 5. merge + recluster over the full edge set
-    all_scored = old_scored.unionByName(delta_scored)
-    all_mentions = old_mentions.unionByName(new_mentions)
-    edges = matched_edges(all_scored)
-    clusters = clusters_of(all_mentions, edges)
-
-    # 6. commit: APPEND-ONLY deltas for the corpus-sized tables
-    # (mentions / mentions_vec / block_keys / scored pairs — each batch
-    # writes only its delta, so commit I/O scales with the delta, not
-    # the corpus); clusters (global CC output — ids can change
-    # corpus-wide on any merge) is the one rewrite.
-    # The batch MARKER is written last: until it lands, none of this
-    # batch's deltas are visible and a rerun recomputes the batch.
+    # 5. commit: APPEND-ONLY deltas for the corpus-sized tables, in
+    # this order (each batch writes only its delta, so commit I/O
+    # scales with the delta, not the corpus), then the clusters rewrite
+    # over the full edge set. The batch MARKER is written last: until
+    # it lands, none of this batch's deltas are visible and a rerun
+    # recomputes the batch.
     batch = _next_batch(catalog)
-    written: list[str] = []
-    m_vec = m_men = None
-    new_key_rows = 0
+    deltas = {}
     if n_new:
-        m_vec = catalog.write(new_vec, f"mentions_vec_delta_{batch:04d}",
-                              run_id=rc.run_id, stage="mentions_vec")
-        m_men = catalog.write(new_mentions, f"mentions_delta_{batch:04d}",
-                              run_id=rc.run_id, stage="mentions")
-        new_key_rows = catalog.write(
-            new_keys, f"block_keys_delta_{batch:04d}", run_id=rc.run_id,
-            stage="block_keys", **WRITE_KW["block_keys"],
-        )["total_rows"]
-        written += ["mentions", "mentions_vec", "block_keys"]
+        deltas.update(
+            mentions_vec=new_vec, mentions=new_mentions, block_keys=new_keys
+        )
     if n_delta:
-        catalog.write(delta_scored, f"scored_pairs_delta_{batch:04d}",
-                      run_id=rc.run_id, stage="scored_pairs")
-        written.append("scored_pairs")
-    m_clusters = catalog.write(clusters, "clusters", run_id=rc.run_id,
-                               stage="clusters")
-    if m_men is not None and m_men["total_rows"] != m_vec["total_rows"]:
+        deltas["scored_pairs"] = delta_scored
+    rows = {
+        base: catalog.write(
+            df, _delta_table(base, batch), run_id=rc.run_id, stage=base,
+            **WRITE_KW.get(base, {}),
+        )["total_rows"]
+        for base, df in deltas.items()
+    }
+    n_clusters = _rewrite_clusters(
+        catalog,
+        old_mentions.unionByName(new_mentions),
+        old_scored.unionByName(delta_scored),
+        rc,
+    )
+    if rows.get("mentions") != rows.get("mentions_vec"):
         raise RuntimeError(
-            f"mentions delta ({m_men['total_rows']} rows) and mentions_vec "
-            f"delta ({m_vec['total_rows']} rows) disagree for batch {batch} "
+            f"mentions delta ({rows['mentions']} rows) and mentions_vec "
+            f"delta ({rows['mentions_vec']} rows) disagree for batch {batch} "
             f"— the inner-join vector attach would silently drop pairs; "
             f"batch NOT marked committed"
         )
-    if written:
-        _commit_batch_marker(catalog, batch, rc.run_id, written)
+    if rows:
+        _commit_batch_marker(catalog, batch, rc.run_id, list(rows))
 
     return {
         "report": {
@@ -513,11 +518,11 @@ def incremental_update(
             "delta_pairs_scored": n_delta,
             # committed totals come from MANIFESTS, not corpus counts
             "total_pairs": old_pairs_rows + n_delta,
-            "total_mentions": m_clusters["total_rows"],
+            "total_mentions": n_clusters,
             # scale diagnostics: the pair self-join's input must track
             # the delta, not the corpus (asserted in tests). touched_*
             # are delta-sized; combined sums the key view's manifests.
-            "combined_key_rows": old_key_rows + new_key_rows,
+            "combined_key_rows": old_key_rows + rows.get("block_keys", 0),
             "touched_key_rows": n_touched_rows,
             "touched_blocks": n_touched_blocks,
             "wall_sec": round(time.time() - t0, 2),
@@ -575,54 +580,34 @@ def forget_urls(
         .distinct()
     )
 
-    # 1. tombstones first (idempotent union with prior forget calls).
-    # Each union reads the table its write replaces, with no
-    # checkpoint: the write's parquet job runs the plan to completion
-    # before the commit renames the new table into place, and nothing
-    # reads these plans afterwards.
-    all_u = urls
-    if catalog.exists("forgotten_urls"):
-        all_u = (
-            catalog.read(spark, "forgotten_urls")
-            .select("url")
-            .unionByName(urls)
-            .distinct()
-        )
-    catalog.write(
-        all_u,
-        "forgotten_urls",
-        run_id=rc.run_id,
-        stage="forget",
-    )
-    all_m = gone_m
-    if catalog.exists("forgotten_mentions"):
-        all_m = (
-            catalog.read(spark, "forgotten_mentions")
-            .select("mention_id")
-            .unionByName(gone_m)
-            .distinct()
-        )
-    catalog.write(
-        all_m,
-        "forgotten_mentions",
-        run_id=rc.run_id,
-        stage="forget",
-    )
+    # 1. tombstones first, urls then mention ids (idempotent union
+    # with prior forget calls). Each union reads the table its write
+    # replaces, with no checkpoint: the write's parquet job runs the
+    # plan to completion before the commit renames the new table into
+    # place, and nothing reads these plans afterwards.
+    for table, key, df in (
+        ("forgotten_urls", "url", urls),
+        ("forgotten_mentions", "mention_id", gone_m),
+    ):
+        if catalog.exists(table):
+            df = catalog.read(spark, table).select(key).unionByName(df)
+            df = df.distinct()
+        catalog.write(df, table, run_id=rc.run_id, stage="forget")
 
     # 2. recluster from the tombstone-filtered views (block_keys needs
     # no rewrite: the same tombstones hide its forgotten members from
     # pair generation): edges touching a forgotten mention are gone,
     # so clusters it bridged split apart
-    mentions = _read_with_deltas(spark, catalog, "mentions")
-    scored = _read_with_deltas(spark, catalog, "scored_pairs")
-    clusters = clusters_of(mentions, matched_edges(scored))
-    m_cl = catalog.write(
-        clusters, "clusters", run_id=rc.run_id, stage="clusters"
+    n_clusters = _rewrite_clusters(
+        catalog,
+        _read_with_deltas(spark, catalog, "mentions"),
+        _read_with_deltas(spark, catalog, "scored_pairs"),
+        rc,
     )
 
     return {
         "forgotten_urls": n_urls,
         "forgotten_mentions": n_gone,
-        "total_mentions": m_cl["total_rows"],
+        "total_mentions": n_clusters,
         "wall_sec": round(time.time() - t0, 2),
     }

@@ -7,7 +7,8 @@ build function over the outputs of earlier stages. ``execute`` runs
 the list and materializes every stage inside that stage's own timing,
 so each report entry holds exactly its own work:
 
-- with no catalog, ``localCheckpoint(eager=True)`` (``run_pipeline``);
+- with no catalog, ``localCheckpoint(eager=True)`` with the row count
+  observed in flight (``_counted``, ``run_pipeline``);
 - with a catalog, an atomic commit (``run_checkpointed``): the
   inter-stage IR is a committed table, never an in-memory plan, and
   ``resume`` re-opens committed stages as scans instead of
@@ -36,7 +37,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from el import blocking
@@ -152,13 +153,25 @@ STAGES = (
     ("clusters", lambda t: clusters_of(t["mentions"], t["edges"])),
 )
 WRITE_KW = {"block_keys": {"partition_by": ["strategy"]}}
+# the catalog path commits scored pairs as ``<prefix>NNN`` chunk tables
+SCORE_CHUNK_PREFIX = "scored_chunk_"
+
+
+def _counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """(``df`` materialized by an eager localCheckpoint, its row count).
+    The count is observed in flight on the checkpoint, so reporting it
+    costs no extra Spark execution."""
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+    df = df.localCheckpoint(eager=True)
+    return df, obs.get["rows"]
 
 
 def _score_chunked(spark, t, build, catalog, rc, resume):
     """Scoring as ``n_score_chunks`` independently committed chunks;
     returns (scored pairs, report entry)."""
     K = rc.n_score_chunks
-    names = [f"scored_chunk_{k:03d}" for k in range(K)]
+    names = [f"{SCORE_CHUNK_PREFIX}{k:03d}" for k in range(K)]
     chunked = t["candidate_pairs"].withColumn(
         "_chunk", F.pmod(F.xxhash64("a_id", "b_id"), F.lit(K)).cast("int")
     )
@@ -210,8 +223,8 @@ def execute(
             # MapInPandas mentions) stalls ~60s/stage in Spark 4.1,
             # while localCheckpoint materializes the same partitions
             # in ~2s and also cuts lineage
-            df = build(t).localCheckpoint(eager=True)
-            entry = {"rows": df.count(), "resumed": False}
+            df, rows = _counted(build(t))
+            entry = {"rows": rows, "resumed": False}
         elif name == "scored_pairs":
             df, entry = _score_chunked(spark, t, build, catalog, rc, resume)
         elif resume and catalog.committed(name, rc.run_id):

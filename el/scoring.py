@@ -246,7 +246,3 @@ def matched_edges(scored: DataFrame) -> DataFrame:
     return scored.where("is_match").select(
         F.col("a_id").alias("src"), F.col("b_id").alias("dst")
     )
-
-
-def sigmoid(x: np.ndarray) -> np.ndarray:
-    return 1.0 / (1.0 + np.exp(-x))

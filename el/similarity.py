@@ -426,21 +426,16 @@ class IvfModel:
     def save(self, path: str) -> None:
         """Atomic artifact commit (the catalog's marker discipline):
         centroids.npy is written first, then meta.json lands via
-        tmp+fsync+rename — the artifact is visible to fit_or_load's
+        ``commit_json`` — the artifact is visible to fit_or_load's
         meta.json gate only once both files are fully on disk, so a
         mid-save kill can never leave a loadable-but-corrupt model."""
-        import json
         import os
+
+        from el.catalog import commit_json
 
         os.makedirs(path, exist_ok=True)
         np.save(os.path.join(path, "centroids.npy"), self.centroids)
-        final = os.path.join(path, "meta.json")
-        tmp = final + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self.meta, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, final)
+        commit_json(os.path.join(path, "meta.json"), self.meta)
 
     @classmethod
     def load(cls, path: str) -> "IvfModel":

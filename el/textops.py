@@ -713,19 +713,14 @@ class BigramCountsModel:
         load()/fit_or_load() gate on meta.json only. Returns a model
         re-bound to the persisted table (scoring after save() reads
         the committed parquet, not the live fit lineage)."""
-        import json
         import os
+
+        from el.catalog import commit_json
 
         os.makedirs(path, exist_ok=True)
         data = os.path.join(path, self.DATA)
         self.counts.write.mode("overwrite").parquet(data)
-        final = os.path.join(path, self.META)
-        tmp = final + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self.meta, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, final)
+        commit_json(os.path.join(path, self.META), self.meta)
         spark = self.counts.sparkSession
         return BigramCountsModel(spark.read.parquet(data), dict(self.meta))
 

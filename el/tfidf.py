@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from el.catalog import commit_json
 from el.hashing import fnv1a_tokens
 
 DIM = 1 << 18
@@ -118,10 +119,15 @@ class TfidfModel:
 
     # -- persistence --------------------------------------------------
     def save(self, path: str) -> None:
+        """idf.npy first, then meta.json through ``commit_json``: the
+        runner loads the artifact whenever meta.json exists, so a
+        killed save must leave no meta.json at all."""
         os.makedirs(path, exist_ok=True)
         np.save(os.path.join(path, "idf.npy"), self.idf)
-        with open(os.path.join(path, "meta.json"), "w") as f:
-            json.dump({"n_docs": self.n_docs, "dim": DIM, "version": 1}, f)
+        commit_json(
+            os.path.join(path, "meta.json"),
+            {"n_docs": self.n_docs, "dim": DIM, "version": 1},
+        )
 
     @classmethod
     def load(cls, path: str) -> "TfidfModel":

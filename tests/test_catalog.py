@@ -172,6 +172,11 @@ def test_read_all_missing_table_raises(spark, cat):
         cat.read_all(spark, ["t", "nope"])
 
 
+def test_read_all_of_no_tables_raises(spark, cat):
+    with pytest.raises(FileNotFoundError):
+        cat.read_all(spark, [])
+
+
 def test_overwrite_crash_window_keeps_old_version(spark, cat, monkeypatch):
     """A writer dying between 'old archived' and 'new
     renamed in' must not leave the catalog with NO committed version —

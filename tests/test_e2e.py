@@ -70,6 +70,43 @@ def test_scoring_udf_runs_once(spark):
     assert len(scoring) == 1, scoring
 
 
+def test_run_pipeline_execution_count(spark, monkeypatch):
+    """Pins the Spark SQL executions of one run_pipeline with a prefit
+    TF-IDF model and topics off: one eager checkpoint per stage, whose
+    row count is observed in flight (no count() after it), plus CC's
+    rounds + 1 checkpoints inside the clusters stage."""
+    import el.clustering as clustering
+    from el.pipeline import mentions_stage
+    from el.runner import STAGES
+    from el.tfidf import TfidfModel
+
+    pages = gen_web_pages(spark, 200).localCheckpoint()
+    cfg = PipelineConfig(use_topics=False)
+    tfidf = TfidfModel.fit(mentions_stage(pages, cfg), "context")
+    rounds = []
+    signature = clustering._signature
+
+    def counted(metrics):
+        rounds.append(metrics)
+        return signature(metrics)
+
+    monkeypatch.setattr(clustering, "_signature", counted)
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def execution_ids():
+        bus.waitUntilEmpty()
+        xs = store.executionsList()
+        return {xs.apply(i).executionId() for i in range(xs.size())}
+
+    last = max(execution_ids(), default=-1)
+    run_pipeline(spark, pages, cfg, tfidf_model=tfidf)
+    new = [i for i in execution_ids() if i > last]
+
+    assert rounds and len(STAGES) == 7
+    assert len(new) == len(STAGES) + len(rounds) + 1
+
+
 def test_pairwise_f1(spark, e2e):
     out, labeled = e2e
     uc = primary_clusters(out["clusters"], out["mentions"])

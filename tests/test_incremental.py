@@ -362,6 +362,18 @@ def test_incremental_crash_between_delta_writes_heals(
     assert men.count() == men.select("mention_id").distinct().count()
 
 
+def test_scored_pair_view_without_scored_tables_raises(spark, tmp_path):
+    """A catalog with neither ``scored_pairs_all`` nor any score chunk
+    has no scored-pair view; the error names the missing base."""
+    from el.incremental import _read_with_deltas
+
+    cat = HadoopParquetCatalog(str(tmp_path / "cat"))
+    cat.write(spark.range(3).withColumnRenamed("id", "mention_id"),
+              "mentions", run_id="r1")
+    with pytest.raises(FileNotFoundError, match="scored_pairs"):
+        _read_with_deltas(spark, cat, "scored_pairs")
+
+
 def test_crash_before_marker_hides_block_key_delta(
     spark, tmp_path_factory, rc, monkeypatch
 ):

@@ -165,6 +165,15 @@ def test_read_catalog_stream_reads_replayed_batch_once(spark, tmp_path):
     assert sorted(r.event_id for r in back.collect()) == list(range(5))
 
 
+def test_read_catalog_stream_with_no_committed_batch_raises(spark, tmp_path):
+    """A sink prefix with no committed micro-batch yet is a missing
+    table, not an index error."""
+    cat = HadoopParquetCatalog(str(tmp_path / "cat"))
+    cat.write(spark.range(3), "other", run_id="r1")
+    with pytest.raises(FileNotFoundError):
+        read_catalog_stream(spark, cat, "events_ingest")
+
+
 def test_streaming_extraction_matches_batch(spark, tmp_path):
     """The streaming ingest commits exactly the mentions the batch
     stage computes on the same pages (same kernels, same dedup)."""

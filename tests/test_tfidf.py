@@ -93,3 +93,38 @@ def test_sampled_fit_deterministic_across_partitioning(spark):
     m2 = TfidfModel.fit(df.repartition(3), "context", max_fit_docs=60)
     assert m1.n_docs == m2.n_docs < len(TEXTS)
     assert np.array_equal(m1.idf, m2.idf)
+
+
+def test_killed_save_leaves_no_meta_and_runner_refits(
+    spark, tmp_path, monkeypatch
+):
+    """The runner loads the TF-IDF artifact whenever meta.json exists,
+    so a save killed inside json.dump must leave no meta.json: the next
+    run refits and saves a loadable artifact instead of failing on a
+    torn file."""
+    import json
+
+    from el.pipeline import PipelineConfig
+    from el.runner import RunConfig, _fit_or_load_models
+
+    df = spark.createDataFrame([(t,) for t in TEXTS], "context string")
+    model = TfidfModel.fit(df, "context")
+
+    def killed(obj, f, **kw):
+        f.write('{"n_docs": ')
+        raise RuntimeError("killed inside json.dump")
+
+    monkeypatch.setattr(json, "dump", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        model.save(str(tmp_path / "tfidf"))
+    monkeypatch.undo()
+    assert not (tmp_path / "tfidf" / "meta.json").exists()
+
+    rc = RunConfig(
+        pipeline=PipelineConfig(use_topics=False), model_dir=str(tmp_path)
+    )
+    tfidf, topics = _fit_or_load_models(spark, df, None, rc)
+    assert topics is None
+    loaded = TfidfModel.load(str(tmp_path / "tfidf"))
+    assert loaded.n_docs == tfidf.n_docs
+    assert np.array_equal(loaded.idf, tfidf.idf)
