@@ -3,10 +3,11 @@ resumability (SURVEY.md §1.4, BASELINE.json north_rule "checkpoints
 ... with per-partition lineage and metrics for resumability").
 
 ``HadoopParquetCatalog``: plain parquet directories plus an explicit
-JSON manifest per commit. A table commit is: write to
-``<table>.__tmp_<run_id>`` -> fsync the manifest (per-file rows +
-sha256 + bytes) -> atomic ``os.rename`` into place, archiving the
-displaced version as a SNAPSHOT (``<table>.__vNNNN``, bounded by
+JSON manifest per commit. A table commit is ONE Spark job: write to
+``<table>.__tmp_<run_id>`` while ``DataFrame.observe`` gathers the
+table's row digest -> fsync the manifest (digest, per-file rows +
+bytes) -> atomic ``os.rename`` into place, archiving the displaced
+version as a SNAPSHOT (``<table>.__vNNNN``, bounded by
 ``keep_versions``). Readers only ever see fully-committed tables; a
 crashed writer leaves a ``__tmp`` dir that the next run clears, and a
 crash mid-swap falls back to the newest snapshot. ``read(version=k)``
@@ -15,11 +16,15 @@ Iceberg's commit/snapshot/lineage semantics with public filesystem
 primitives.
 
 The manifest IS the lineage record: one row per output partition file
-(rows, bytes, sha256), plus stage wall-clock and total rows — queried
-back as the ``_metrics`` table for observability and used by the
-runner's resume logic (el.runner). It also records the table's Spark
-schema, so ``read`` scans with it instead of running a footer job to
-infer it (manifests without one still read by inference).
+(rows, bytes), plus stage wall-clock, total rows and the row digest
+(``_digest``: count, XOR and sum of a per-row xxhash64; it does not
+depend on partitioning, so equal content gives an equal digest at any
+parallelism) — queried back as the ``_metrics`` table for
+observability and used by the runner's resume logic (el.runner);
+``verify`` recomputes the digest over the committed files. It also
+records the table's Spark schema, so ``read`` scans with it instead of
+running a footer job to infer it (manifests without one still read by
+inference).
 """
 
 from __future__ import annotations
@@ -30,25 +35,9 @@ import shutil
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-
-def _local_path(uri: str) -> str:
-    """'file:/a/b' or 'file:///a/b' (possibly URL-encoded) -> '/a/b'."""
-    from urllib.parse import unquote, urlparse
-
-    p = urlparse(uri)
-    return unquote(p.path) if p.scheme else uri
-
-
-# binaryFile materializes each file's content as a single byte array and
-# rejects files over 2 GiB; anything near that limit is hashed with the
-# streamed fallback instead. (Well-configured writes never produce such
-# parts — spark.sql.files.maxPartitionBytes bounds read splits and the
-# writer targets ~128 MB parts — but a commit must not abort if one
-# appears.)
-_BINARYFILE_MAX_BYTES = (2 << 30) - (64 << 20)
 
 
 def commit_json(path: str, obj) -> None:
@@ -63,19 +52,23 @@ def commit_json(path: str, obj) -> None:
     os.rename(tmp, path)
 
 
-def _stream_sha256(path: str, chunk: int = 1 << 22) -> str:
-    """Driver-side chunked sha256 — the no-size-limit fallback for
-    files the executor-side binaryFile scan cannot or did not cover."""
-    import hashlib
+def _digest(df: DataFrame) -> list:
+    """Aggregate columns defining a table's row digest: row count, XOR
+    and decimal sum of xxhash64 over the columns in sorted-name order
+    (a partitioned table reads back with its partition columns moved,
+    and XOR alone cancels duplicate rows). For detecting corruption
+    and drift, not an adversary."""
+    h = F.xxhash64(*[F.col(c) for c in sorted(df.columns)])
+    return [
+        F.count(F.lit(1)).alias("rows"),
+        F.coalesce(F.bit_xor(h), F.lit(0)).alias("xor"),
+        F.coalesce(F.sum(h.cast("decimal(20,0)")), F.lit(0)).alias("sum"),
+    ]
 
-    h = hashlib.sha256()
-    with open(path, "rb") as f:
-        while True:
-            b = f.read(chunk)
-            if not b:
-                break
-            h.update(b)
-    return h.hexdigest()
+
+def _digest_value(r) -> dict:
+    """Manifest form of an observed or recomputed digest row."""
+    return {"rows": int(r["rows"]), "xor": int(r["xor"]), "sum": str(r["sum"])}
 
 
 @dataclass
@@ -132,12 +125,12 @@ class HadoopParquetCatalog:
         """Atomic commit of ``df`` as ``table``; returns the manifest.
 
         Write-to-temp + manifest + rename: the table either exists
-        fully committed (manifest present, every file hashed) or not
-        at all. ``extra`` entries land inside the manifest and commit
-        atomically WITH the data — Iceberg snapshot-property shape,
-        used by delta compaction to carry its watermark (a separate
-        marker file would reintroduce the torn-state window the
-        manifest rename exists to close)."""
+        fully committed (manifest present, with the row digest
+        observed during the write) or not at all. ``extra`` entries
+        land inside the manifest and commit atomically WITH the data —
+        Iceberg snapshot-property shape, used by delta compaction to
+        carry its watermark (a separate marker file would reintroduce
+        the torn-state window the manifest rename exists to close)."""
         os.makedirs(self.root, exist_ok=True)
         final = self._dir(table)
         tmp = os.path.join(self.root, f"{table}.__tmp_{run_id}")
@@ -162,74 +155,32 @@ class HadoopParquetCatalog:
             else 0
         )
 
+        # the digest is observed on the write itself: one Spark job.
+        # Per-file rows come from the parquet FOOTERS and bytes from
+        # os.path.getsize, so neither needs a job.
         t0 = time.time()
-        writer = df.write.mode("overwrite")
+        obs = Observation()
+        writer = df.observe(obs, *_digest(df)).write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(tmp)
+        digest = _digest_value(obs.get)
         wall_ms = int((time.time() - t0) * 1000)
 
         import pyarrow.parquet as pq
-        from pyspark.sql import functions as F
 
-        paths = []
+        files = []
         for dirpath, _, names in os.walk(tmp):
             for name in sorted(names):
                 if name.endswith(".parquet"):
-                    paths.append(os.path.join(dirpath, name))
-
-        # Per-file content hashing runs EXECUTOR-side (binaryFile scan
-        # + JVM sha2): the commit never funnels the table's bytes back
-        # through the driver — at 100 TB that re-read would be a
-        # single-node bottleneck (r1 hashed on the driver). Row counts
-        # come from the parquet FOOTERS only (pyarrow metadata reads,
-        # O(n_files) tiny reads — the same information an Iceberg
-        # manifest records at write time).
-        #
-        # Two failure modes of the executor path are guarded:
-        # binaryFile materializes each file as ONE byte array and
-        # hard-fails past 2 GiB, so oversized parts are excluded from
-        # the scan and hashed with a streamed driver-side fallback; and
-        # the returned file URI is matched via os.path.realpath with a
-        # .get() (symlinked TMPDIRs make string equality unreliable),
-        # falling back to the same streamed hash on any lookup miss.
-        t1 = time.time()
-        files: list[dict] = []
-        small = [
-            fp for fp in paths if os.path.getsize(fp) <= _BINARYFILE_MAX_BYTES
-        ]
-        by_path: dict[str, dict] = {}
-        if small:
-            sha_rows = (
-                df.sparkSession.read.format("binaryFile")
-                .option("pathGlobFilter", "*.parquet")
-                .option("recursiveFileLookup", "true")
-                .load([f"file://{fp}" for fp in small])
-                .select(
-                    "path",
-                    F.col("length").alias("bytes"),
-                    F.sha2(F.col("content"), 256).alias("sha256"),
-                )
-                .collect()
-            )
-            by_path = {
-                os.path.realpath(_local_path(r["path"])): r for r in sha_rows
-            }
-        for fp in paths:
-            r = by_path.get(os.path.realpath(fp))
-            if r is not None:
-                size, sha = r["bytes"], r["sha256"]
-            else:
-                size, sha = os.path.getsize(fp), _stream_sha256(fp)
-            files.append(
-                {
-                    "path": os.path.relpath(fp, tmp),
-                    "rows": pq.ParquetFile(fp).metadata.num_rows,
-                    "bytes": size,
-                    "sha256": sha,
-                }
-            )
-        lineage_ms = int((time.time() - t1) * 1000)
+                    fp = os.path.join(dirpath, name)
+                    files.append(
+                        {
+                            "path": os.path.relpath(fp, tmp),
+                            "rows": pq.ParquetFile(fp).metadata.num_rows,
+                            "bytes": os.path.getsize(fp),
+                        }
+                    )
         total_rows = sum(f["rows"] for f in files)
         manifest = {
             "table": table,
@@ -238,9 +189,9 @@ class HadoopParquetCatalog:
             "run_id": run_id,
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "wall_ms": wall_ms,
-            "lineage_ms": lineage_ms,
             "n_files": len(files),
             "total_rows": total_rows,
+            "digest": digest,
             "schema": df.schema.jsonValue(),
             "files": files,
             **(extra or {}),
@@ -338,6 +289,15 @@ class HadoopParquetCatalog:
             reader = reader.schema(StructType.fromJson(schema))
         return reader.parquet(*dirs)
 
+    def verify(self, spark: SparkSession, table: str) -> bool:
+        """Whether the committed files of ``table`` still hold the rows
+        its manifest's digest recorded (one scan); ``False`` for a
+        manifest written before digests were recorded."""
+        df = self.read(spark, table)
+        return _digest_value(df.agg(*_digest(df)).first()) == (
+            self.manifest(table).get("digest")
+        )
+
     def versions(self, table: str) -> list[int]:
         """Readable snapshot versions, ascending (archives + live)."""
         out = [n for n, _ in self._archives(table)]
@@ -391,7 +351,7 @@ class HadoopParquetCatalog:
 
     def metrics(self, spark: SparkSession) -> DataFrame:
         """Per-partition lineage across every committed table, as a
-        DataFrame (stage, run_id, file, rows, bytes, sha256, wall_ms,
+        DataFrame (stage, run_id, file, rows, bytes, wall_ms,
         committed_at)."""
         rows = []
         for table in self.tables():
@@ -400,12 +360,11 @@ class HadoopParquetCatalog:
                 rows.append(
                     (
                         m["stage"], m["run_id"], f["path"], f["rows"],
-                        f["bytes"], f["sha256"], m["wall_ms"],
-                        m["committed_at"],
+                        f["bytes"], m["wall_ms"], m["committed_at"],
                     )
                 )
         return spark.createDataFrame(
             rows,
             "stage string, run_id string, file string, rows long, "
-            "bytes long, sha256 string, wall_ms long, committed_at string",
+            "bytes long, wall_ms long, committed_at string",
         )

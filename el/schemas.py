@@ -90,19 +90,6 @@ LABELED_PAIRS = T.StructType(
     ]
 )
 
-METRICS = T.StructType(
-    [
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("input_rows", T.LongType(), True),
-        T.StructField("output_rows", T.LongType(), False),
-        T.StructField("sha", T.StringType(), True),
-        T.StructField("wall_ms", T.LongType(), True),
-        T.StructField("committed_at", T.TimestampType(), False),
-    ]
-)
-
 # Driver testdata tables (FIXTURES.md §B) — names used by el.queries.
 TESTDATA_TABLES = (
     "region",

@@ -1,10 +1,11 @@
-"""Catalog commit semantics: atomic write+manifest, lineage accounting,
-overwrite, and the metrics surface."""
+"""Catalog commit semantics: atomic write+manifest, lineage accounting
+and the row digest, overwrite, and the metrics surface."""
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 
 import pytest
@@ -26,25 +27,116 @@ def test_write_read_roundtrip_with_lineage(spark, cat):
     assert m["total_rows"] == 1000
     assert m["n_files"] >= 1
     assert sum(f["rows"] for f in m["files"]) == 1000
-    assert all(len(f["sha256"]) == 64 for f in m["files"])
+    assert m["digest"]["rows"] == 1000
+    assert isinstance(m["digest"]["xor"], int)
+    assert m["digest"]["sum"].lstrip("-").isdigit()
+    assert all(
+        f["bytes"] == os.path.getsize(os.path.join(cat.root, "t1", f["path"]))
+        for f in m["files"]
+    )
     back = cat.read(spark, "t1")
     assert back.count() == 1000
     assert cat.committed("t1", "r1") and not cat.committed("t1", "r2")
 
 
-def test_lineage_sha_matches_file_bytes(spark, cat):
-    """The executor-side sha2(binaryFile) lineage must equal the true
-    sha256 of each committed file's bytes (same hashes r1 computed on
-    the driver)."""
-    import hashlib
+def _recomputed(spark, cat, table):
+    """The digest recomputed over the read-back table, independently of
+    the observed one (same definition, a separate aggregation)."""
+    from el.catalog import _digest, _digest_value
 
-    m = cat.write(spark.range(500).repartition(3), "t2", run_id="r1")
-    for f in m["files"]:
-        fp = os.path.join(cat.root, "t2", f["path"])
-        digest = hashlib.sha256(open(fp, "rb").read()).hexdigest()
-        assert f["sha256"] == digest
-        assert f["bytes"] == os.path.getsize(fp)
-    assert "lineage_ms" in m
+    df = cat.read(spark, table)
+    return _digest_value(df.agg(*_digest(df)).first())
+
+
+@pytest.mark.parametrize("kind", ["plain", "partitioned", "empty"])
+def test_digest_equals_recompute_at_any_partitioning(spark, cat, kind):
+    """The observed digest equals a recompute over the committed files,
+    and does not depend on how many files the same rows were written
+    to."""
+    df = spark.range(300).select(
+        "id", (F.col("id") % 3).alias("p"), F.col("id").cast("string").alias("s")
+    )
+    if kind == "empty":
+        df = df.where("id < 0")
+    partition_by = ["p"] if kind == "partitioned" else None
+    digests = []
+    for n in (1, 4, 7):
+        m = cat.write(df.repartition(n), f"t{n}", run_id="r1",
+                      partition_by=partition_by)
+        assert m["digest"] == _recomputed(spark, cat, f"t{n}")
+        assert cat.verify(spark, f"t{n}")
+        digests.append(m["digest"])
+    assert digests[0] == digests[1] == digests[2]
+    assert digests[0]["rows"] == (0 if kind == "empty" else 300)
+    if kind == "empty":
+        assert digests[0] == {"rows": 0, "xor": 0, "sum": "0"}
+    if kind == "partitioned":
+        # partition columns read back last; the digest is name-ordered
+        plain = cat.write(df, "flat", run_id="r1")
+        assert plain["digest"] == digests[0]
+
+
+def test_digest_sees_a_duplicated_row(spark, cat):
+    """Appending a duplicate row changes the digest. XOR alone cancels
+    a row appended twice: row 7 or row 8 appended twice gives the same
+    count and XOR, and only the sum term tells them apart."""
+    df = spark.range(50).select("id", (F.col("id") * 2).alias("v"))
+    one = cat.write(df, "a", run_id="r1")["digest"]
+    dup = cat.write(df.union(df.where("id = 7")), "b", run_id="r1")["digest"]
+    assert dup["rows"] == 51 and dup != one
+
+    def appended_twice(i, table):
+        extra = df.where(F.col("id") == i)
+        return cat.write(df.union(extra).union(extra), table, run_id="r1")[
+            "digest"
+        ]
+
+    seven, eight = appended_twice(7, "c"), appended_twice(8, "d")
+    assert (seven["rows"], seven["xor"]) == (eight["rows"], eight["xor"]) == (
+        52, one["xor"]
+    )
+    assert seven["sum"] != eight["sum"]
+
+
+def test_verify_detects_a_rewritten_part_file(spark, cat, tmp_path):
+    """A committed part file replaced by a valid parquet file of the
+    same schema and row count but other rows fails ``verify``."""
+    df = spark.range(200).select("id", (F.col("id") % 5).alias("k"))
+    m = cat.write(df.repartition(3), "t", run_id="r1")
+    assert cat.verify(spark, "t")
+
+    victim = max(m["files"], key=lambda f: f["rows"])
+    other = str(tmp_path / "other")
+    spark.range(1000, 1000 + victim["rows"]).select(
+        "id", (F.col("id") % 5).alias("k")
+    ).coalesce(1).write.parquet(other)
+    (part,) = [n for n in os.listdir(other) if n.endswith(".parquet")]
+    # the part file and its Hadoop checksum, so the scan reads it
+    dst = os.path.join(cat.root, "t", victim["path"])
+    shutil.copyfile(os.path.join(other, part), dst)
+    shutil.copyfile(os.path.join(other, f".{part}.crc"),
+                    os.path.join(os.path.dirname(dst),
+                                 f".{os.path.basename(dst)}.crc"))
+
+    assert cat.read(spark, "t").count() == 200
+    assert not cat.verify(spark, "t")
+
+
+@pytest.mark.parametrize("kind", ["plain", "partitioned", "empty"])
+def test_write_runs_one_job(spark, cat, kind):
+    """A commit is the parquet write alone: the digest is observed on
+    it, and files' rows and bytes come from footers and the file
+    system."""
+    df = spark.range(40).select("id", (F.col("id") % 3).alias("p"))
+    if kind == "empty":
+        df = df.where("id < 0")
+    partition_by = ["p"] if kind == "partitioned" else None
+    cat.write(df, "warm", run_id="r1", partition_by=partition_by)
+    m, jobs = _jobs_run_by(
+        spark, lambda: cat.write(df, "t", run_id="r1", partition_by=partition_by)
+    )
+    assert jobs == 1
+    assert m["digest"]["rows"] == (0 if kind == "empty" else 40)
 
 
 def test_empty_table_commit(spark, cat):
@@ -246,21 +338,3 @@ def test_snapshot_time_travel_and_rollback(spark, cat):
     # retention: only keep_versions archives survive
     arch = [d for d in os.listdir(cat.root) if d.startswith("t.__v")]
     assert len(arch) <= cat.keep_versions
-
-
-def test_lineage_fallback_hash_matches(spark, cat, monkeypatch):
-    """Files the binaryFile scan cannot cover (>2 GiB, or a
-    path-lookup miss under symlinked TMPDIRs) fall back to a streamed
-    driver-side sha256 with identical output. Force every file down
-    the fallback path and check the hashes against the bytes on disk."""
-    import hashlib
-
-    import el.catalog as C
-
-    monkeypatch.setattr(C, "_BINARYFILE_MAX_BYTES", 0)
-    m = cat.write(spark.range(300).repartition(2), "tf", run_id="r1")
-    assert m["n_files"] >= 1
-    for f in m["files"]:
-        fp = os.path.join(cat.root, "tf", f["path"])
-        assert f["sha256"] == hashlib.sha256(open(fp, "rb").read()).hexdigest()
-        assert f["bytes"] == os.path.getsize(fp)

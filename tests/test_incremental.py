@@ -509,10 +509,10 @@ def test_absorb_and_forget_execution_count(
     forget_urls(spark, cat, urls, rc)
     new = [i for i in execution_ids() if i > last]
 
-    # absorb: 7 checkpoints, 5 commits of 2 executions each (parquet
-    # job + lineage hash); forget: 2 checkpoints, 3 commits; each of
-    # the two CC calls: rounds + 1
-    assert len(new) == (7 + 5 * 2) + (2 + 3 * 2) + len(rounds) + 2
+    # absorb: 7 checkpoints, 5 commits; forget: 2 checkpoints, 3
+    # commits (each commit one parquet job, its digest observed in
+    # flight); each of the two CC calls: rounds + 1
+    assert len(new) == (7 + 5) + (2 + 3) + len(rounds) + 2
 
 
 def test_streaming_absorb_equals_direct_absorb(

@@ -58,6 +58,9 @@ def test_resume_after_mid_scoring_crash(spark, tmp_path_factory, rc, fresh):
 
     for t in ("candidate_pairs", "edges", "clusters"):
         assert _rows(spark, cat, t) == _rows(spark, fresh_cat, t), t
+    # chunks committed before the crash and after the resume alike
+    for t in cat.tables():
+        assert cat.verify(spark, t), t
 
 
 def test_full_resume_recomputes_nothing(spark, fresh, rc):
