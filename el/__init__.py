@@ -13,7 +13,8 @@ Layout:
     el.worker_daemon  Python worker daemon (no per-task zip re-reads)
     el.schemas     fixed StructTypes for every table (SURVEY §1.1)
     el.fixtures    deterministic web_pages / labeled_pairs generators
-    el.extract     V1 text extraction + V2 mention extraction (Arrow)
+    el.extract     EXTRACT_SPEC text, its sha and mention rows in one
+                   fused Arrow kernel (one Python pass per page)
     el.blocking    multi-key blocking (name tokens, MinHash/LSH, LDA),
                    per-block caps, salted skew-aware pair generation
     el.scoring     fused pair scoring (Jaro-Winkler, Levenshtein,
@@ -26,7 +27,7 @@ Layout:
     el.evaluate    pairwise precision/recall/F1 gate
     el.dedup       corpus dedup ops (exact, MinHash-LSH, SimHash, ...)
     el.similarity  embedding ANN (brute-force + LSH-bucketed top-k)
-    el.textstats   lang-ID, quality scores, token counts, fingerprints
+    el.textops     lang-ID, quality scores, token counts, fingerprints
     el.multimodal  binary-column (image/audio) plumbing, stubbed decode
 """
 

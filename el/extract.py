@@ -2,7 +2,9 @@
 
 EXTRACT_SPEC v1 (pinned pure function; SURVEY.md §0 byte-identity
 invariant — per-url output is identical across runs, partitionings,
-and parallelism levels, checked by sha2(text, 256) in pytest):
+and parallelism levels; every mention row carries ``extract_sha``, the
+sha256 of its page's text, which pytest checks against JVM
+``sha2(extract_text_udf(html), 256)``):
   1. decode utf-8 with errors='replace'
   2. drop <script>...</script> and <style>...</style> blocks
   3. concatenate the inner text of all <p ...>...</p> blocks (' ' join)
@@ -12,13 +14,18 @@ and parallelism levels, checked by sha2(text, 256) in pytest):
   7. NFC-normalize
   8. empty -> NULL
 
-Both kernels are Arrow-batched (scalar pandas_udf / mapInPandas);
-string work inside a batch uses precompiled regexes — there is no
-row-at-a-time ``F.udf`` anywhere (BASELINE.json input_hint mandate).
+``extract_mentions`` is the one extraction operator: a single
+mapInPandas pass per page runs the text spec, its sha and the mention
+rows, so the stage crosses into Python once. ``extract_text_udf``
+(scalar pandas_udf) exposes the text spec alone. Both are
+Arrow-batched; string work inside a batch uses precompiled regexes —
+there is no row-at-a-time ``F.udf`` anywhere (BASELINE.json
+input_hint mandate).
 """
 
 from __future__ import annotations
 
+import hashlib
 import html as html_mod
 import re
 import unicodedata
@@ -75,17 +82,6 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
     return html.map(extract_text_py)
 
 
-def add_extracted_text(pages: DataFrame) -> DataFrame:
-    """web_pages -> + extracted (EXTRACT_SPEC v1) + extract_sha.
-
-    The sha is computed JVM-side (F.sha2) over the extracted bytes —
-    this column IS the byte-identity evidence carried through the
-    pipeline and into the metrics table."""
-    return pages.withColumn("extracted", extract_text_udf(F.col("html"))).withColumn(
-        "extract_sha", F.sha2(F.col("extracted"), 256)
-    )
-
-
 def _mention_rows(url: str, text: str, sha: str) -> list[dict]:
     out = []
     spans = list(_RE_MENTION.finditer(text))
@@ -108,17 +104,15 @@ def _mention_rows(url: str, text: str, sha: str) -> list[dict]:
     return out
 
 
-def extract_mentions(pages_with_text: DataFrame) -> DataFrame:
-    """(url, extracted, extract_sha) -> mentions table.
+def extract_mentions(pages: DataFrame) -> DataFrame:
+    """(url, html) -> mentions table.
 
     One row in, N mention rows out (the engine's UDTF-shaped op) via
-    mapInPandas; normalization (lower/strip punct/tokenize/sort) is
+    ONE mapInPandas: per page it runs EXTRACT_SPEC v1, skips pages
+    with no text, hashes the text (``extract_sha``) and emits the
+    mention rows. Normalization (lower/strip punct/tokenize/sort) is
     done JVM-side with builtin functions so Catalyst keeps it in
     whole-stage codegen."""
-    cols = pages_with_text.select("url", "extracted", "extract_sha").where(
-        F.col("extracted").isNotNull()
-    )
-
     raw_schema = T.StructType(
         [
             T.StructField("url", T.StringType(), False),
@@ -133,15 +127,17 @@ def extract_mentions(pages_with_text: DataFrame) -> DataFrame:
     def gen(batches):
         for pdf in batches:
             rows: list[dict] = []
-            for url, text, sha in zip(
-                pdf["url"].tolist(), pdf["extracted"].tolist(), pdf["extract_sha"].tolist()
-            ):
+            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
+                text = extract_text_py(raw)
+                if text is None:
+                    continue
+                sha = hashlib.sha256(text.encode("utf-8")).hexdigest()
                 rows.extend(_mention_rows(url, text, sha))
             yield pd.DataFrame(
                 rows, columns=[f.name for f in raw_schema.fields]
             )
 
-    raw = cols.mapInPandas(gen, schema=raw_schema)
+    raw = pages.select("url", "html").mapInPandas(gen, schema=raw_schema)
 
     norm_tokens = F.array_sort(
         F.filter(

@@ -405,10 +405,10 @@ def incremental_update(
             how="left_anti",
         )
 
-    # 1. new mentions (urls not yet ingested) — the extract UDF runs
-    # once (checkpoint), then the ingest filter probes the corpus with
-    # a broadcast of the DELTA's urls instead of shuffling the corpus
-    # (ingest_new_mentions; plan-audited)
+    # 1. new mentions (urls not yet ingested) — the one extraction
+    # pass runs once (checkpoint), then the ingest filter probes the
+    # corpus with a broadcast of the DELTA's urls instead of shuffling
+    # the corpus (ingest_new_mentions; plan-audited)
     delta_mentions = mentions_stage(new_pages, cfg).localCheckpoint(eager=True)
     new_mentions, n_new = _counted(
         ingest_new_mentions(delta_mentions, old_mentions)

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from el import blocking
-from el.extract import add_extracted_text, extract_mentions
+from el.extract import extract_mentions
 from el.scoring import ScoringConfig
 from el.tfidf import TfidfModel
 
@@ -67,12 +67,13 @@ class PipelineConfig:
     # scale; pipelines with a table-backed list call
     # el.textops.blocklist_filter directly.
     blocked_hosts: tuple[str, ...] | None = None
-    # C4 line-level cleaning gate: rewrite each page's text to
-    # its prose lines (terminal punctuation, >= c4_min_line_words
-    # tokens, no "javascript") and drop pages failing the page rules
+    # C4 line-level cleaning gate: drop pages failing the page rules
     # (< c4_min_sentences sentences after cleaning, "lorem ipsum",
-    # '{'). Off by default; when on, null-text pages are dropped here
-    # (nothing to clean). Pure projection + filter, zero shuffle.
+    # '{'; null text). Off by default. Only the verdict reaches
+    # mentions: hygiene_stage also rewrites ``text`` to its prose lines
+    # (terminal punctuation, >= c4_min_line_words tokens, no
+    # "javascript"), but extraction re-derives text from ``html``.
+    # Pure projection + filter, zero shuffle.
     c4_line_clean: bool = False
     c4_min_line_words: int = 5
     c4_min_sentences: int = 3
@@ -123,10 +124,11 @@ def hygiene_stage(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
             host_col="_hyg_host",
         ).drop("_hyg_host")
     if cfg.c4_line_clean:
-        # line-level rewrite + page verdict BEFORE the dedup window:
-        # pages the C4 rules drop never enter the shuffle, and the
-        # retained pages carry their cleaned prose into extraction.
-        # Verdict tells run on the ORIGINAL text (_c4_exprs contract).
+        # page verdict + line-level rewrite BEFORE the dedup window:
+        # pages the C4 rules drop never enter the shuffle. The cleaned
+        # ``text`` is seen only by direct callers of hygiene_stage
+        # (mentions_stage extracts from html). Verdict tells run on the
+        # ORIGINAL text (_c4_exprs contract).
         from el.textops import _c4_exprs
 
         _, _, clean, _, c4_pass = _c4_exprs(
@@ -217,8 +219,7 @@ def mentions_stage(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
     gated = dedup_latest(hygiene_stage(pages, cfg)).where(
         F.col("lang").isin(*cfg.langs)
     )
-    extracted = add_extracted_text(gated)
-    return extract_mentions(extracted)
+    return extract_mentions(gated)
 
 
 def raw_block_keys(

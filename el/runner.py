@@ -218,11 +218,9 @@ def execute(
     for name, build in STAGES:
         t0 = time.time()
         if catalog is None:
-            # localCheckpoint, NOT persist(): caching a stage that
-            # chains two Python operators (ArrowEvalPython extract ->
-            # MapInPandas mentions) stalls ~60s/stage in Spark 4.1,
-            # while localCheckpoint materializes the same partitions
-            # in ~2s and also cuts lineage
+            # localCheckpoint, NOT persist(): it cuts lineage, so a
+            # later stage's plan starts at the materialized rows and
+            # never re-plans or re-runs the Python kernels upstream
             df, rows = _counted(build(t))
             entry = {"rows": rows, "resumed": False}
         elif name == "scored_pairs":

@@ -329,14 +329,14 @@ def ingest_pages_stream(
     so a crashed stream restarts from the Spark checkpoint and
     re-commits idempotently.
     """
-    from el.extract import add_extracted_text, extract_mentions
+    from el.extract import extract_mentions
     from el.schemas import WEB_PAGES
 
     pages = spark.readStream.schema(WEB_PAGES).parquet(src_dir)
     deduped = dedup_stream(pages, key="url", watermark=watermark,
                            ts_col="warc_ts")
     gated = deduped.where(F.col("lang").isin(*langs))
-    mentions = extract_mentions(add_extracted_text(gated))
+    mentions = extract_mentions(gated)
     return sink_to_catalog(
         mentions, catalog, "mentions_stream", checkpoint_dir
     )

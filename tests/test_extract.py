@@ -5,14 +5,23 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from el.extract import add_extracted_text, extract_mentions, extract_text_py
+from el.extract import extract_mentions, extract_text_py, extract_text_udf
 from el.fixtures import gen_web_pages
-from el.pipeline import PipelineConfig, mentions_stage
+from el.pipeline import PipelineConfig, dedup_latest, mentions_stage
+
+# hand-built pages whose text bytes differ from their html bytes: the
+# sha must be taken over the decoded, unescaped, NFC-folded text
+HAND_PAGES = [
+    ("hand://non-ascii", "<p>Zoë Müller met Anna Berg.</p>".encode()),
+    ("hand://entity", b"<p>Ren&eacute; Dupont met Anna Berg.</p>"),
+    ("hand://nfd", "<p>Jose\u0301 Garcia met Anna Berg.</p>".encode()),
+    ("hand://bad-utf8", b"<p>Karl \xff\xfe Marx met Anna Berg.</p>"),
+]
 
 
 def test_extract_byte_identity(spark):
     pages = gen_web_pages(spark, 400)
-    ext = add_extracted_text(pages)
+    ext = pages.withColumn("extracted", extract_text_udf(F.col("html")))
     bad = ext.where(
         (
             F.col("text").isNotNull() & (F.col("extracted") != F.col("text"))
@@ -21,6 +30,25 @@ def test_extract_byte_identity(spark):
         | (F.col("text").isNotNull() & F.col("extracted").isNull())
     ).count()
     assert bad == 0
+
+    # every mention's extract_sha (hashlib, inside the fused kernel)
+    # equals JVM sha2 over the text spec's output for its page (one
+    # page per url: re-crawls are deduped first)
+    hand = spark.createDataFrame(HAND_PAGES, "url string, html binary")
+    src = dedup_latest(pages).select("url", "html").unionByName(hand)
+    want = src.select(
+        "url", F.sha2(extract_text_udf(F.col("html")), 256).alias("want")
+    )
+    got = extract_mentions(src).select("url", "extract_sha")
+    joined = got.join(want, "url", "left")
+    assert joined.where(~F.col("extract_sha").eqNullSafe(F.col("want"))).count() == 0
+    hand_urls = {u for u, _ in HAND_PAGES}
+    seen = {r.url for r in got.where(F.col("url").isin(*hand_urls)).collect()}
+    assert seen == hand_urls
+    texts = {u: extract_text_py(h) for u, h in HAND_PAGES}
+    assert texts["hand://entity"].startswith("René ")
+    assert texts["hand://nfd"].startswith("José ")
+    assert "\ufffd" in texts["hand://bad-utf8"]
 
 
 def test_extract_pure_function_examples():

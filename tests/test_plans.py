@@ -81,6 +81,22 @@ def test_scoring_plan_shape(spark):
     assert plan.count("ArrowEvalPython") == 1  # hot branch only
 
 
+def test_mentions_stage_crosses_into_python_once(spark):
+    """Extraction is one Python pass per page: above the ingest gate's
+    dedup window the mentions plan holds a single MapInPandas (text,
+    sha and mention rows) and no scalar Python UDF. The fixture
+    generator below the window is itself a MapInPandas, so only the
+    nodes above the Window count."""
+    from el.fixtures import gen_web_pages
+    from el.pipeline import PipelineConfig, mentions_stage
+
+    plan = _plan(mentions_stage(gen_web_pages(spark, 200), PipelineConfig()))
+    above_gate = plan.split("Window [")[0]
+    assert above_gate.count("MapInPandas") == 1
+    assert "ArrowEvalPython" not in above_gate
+    assert "BatchEvalPython" not in above_gate
+
+
 def test_scoring_shuffled_join_fallback_equals_broadcast(spark):
     """broadcast_features=False (for corpora whose feature table
     exceeds executor memory) must produce identical rows through a

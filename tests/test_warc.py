@@ -10,7 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from el.extract import add_extracted_text
+from el.extract import extract_text_udf
 from el.fixtures import gen_web_pages
 from el.warc import read_warc, write_warc
 
@@ -104,12 +104,11 @@ def test_warc_ingest_feeds_extraction(spark, warc_dir):
     """The WARC source is a drop-in pipeline ingest: extract_sha per
     url off the WARC read equals extract_sha off the native corpus
     (EXTRACT_SPEC byte-identity carried across the format boundary)."""
-    native = add_extracted_text(gen_web_pages(spark, N_PAGES, seed=7)).select(
-        "url", F.col("extract_sha").alias("sha0")
+    sha = F.sha2(extract_text_udf(F.col("html")), 256)
+    native = gen_web_pages(spark, N_PAGES, seed=7).select(
+        "url", sha.alias("sha0")
     )
-    from_warc = add_extracted_text(read_warc(spark, warc_dir)).select(
-        "url", F.col("extract_sha").alias("sha1")
-    )
+    from_warc = read_warc(spark, warc_dir).select("url", sha.alias("sha1"))
     diff = native.join(from_warc, "url").where(
         ~(
             (F.col("sha0") == F.col("sha1"))
