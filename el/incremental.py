@@ -28,9 +28,10 @@ Mechanics (J4/J5 semi/anti-join ops from SURVEY.md §2.3):
    mentions_vec, block_keys — the RAW uncapped key union; cap/salt is
    a pair-generation-time policy, never a storage mutation — and
    scored pairs) each gain one ``<base>_delta_NNNN`` table per
-   absorbed batch and are all read back through one merge-on-read
-   view (``_read_with_deltas``: base ∪ marked deltas − tombstones) —
-   commit I/O scales with the delta. The scored-pair base is
+   absorbed batch, committed where steps 1-4 build it (its one
+   materialization; later steps scan it back) and all read back
+   through one merge-on-read view (``_read_with_deltas``: base ∪
+   marked deltas − tombstones) — commit I/O scales with the delta. The scored-pair base is
    ``scored_pairs_all`` once compacted, before that the chunked
    runner's ``scored_chunk_*`` tables (``_base_tables``). Only
    clusters (global CC output) is rewritten. ``compact_deltas``
@@ -53,9 +54,11 @@ the rerun rewrites it again. One legacy case: block_keys used to be
 rewritten in full before the marker, so a catalog that crashed
 mid-absorb under that layout and was never re-run can carry the
 crashed batch's keys, unmarked, in its base block_keys table.
-Mentions and mentions_vec delta row alignment is asserted at marker
-time (the inner-join vector attach would silently drop pairs
-otherwise).
+Mentions and mentions_vec delta row alignment is asserted right after
+the vec delta commits (the inner-join vector attach would silently
+drop pairs otherwise). An absorb with no new mentions writes no
+marker: its empty deltas stay invisible orphans, overwritten by the
+next batch, which takes the same index.
 
 Equivalence: with capping disabled (or cap never reached),
 ``incremental(A then B) == full(A ∪ B)`` exactly — asserted in
@@ -107,11 +110,12 @@ def _batch_markers(catalog: HadoopParquetCatalog) -> list[dict]:
     if not os.path.isdir(catalog.root):
         return []
     out = []
-    for name in sorted(os.listdir(catalog.root)):
+    for name in os.listdir(catalog.root):
         if name.startswith("_batch_") and name.endswith(".json"):
             with open(os.path.join(catalog.root, name)) as f:
                 out.append(json.load(f))
-    return out
+    # numeric order: names sort "_batch_10000" before "_batch_9999"
+    return sorted(out, key=lambda m: m["batch"])
 
 
 def _commit_batch_marker(
@@ -380,8 +384,37 @@ def incremental_update(
     cfg: PipelineConfig = rc.pipeline
     t0 = time.time()
 
+    # persisted models only, checked before anything commits — a delta
+    # must NEVER refit (§4.4): delta vectors from a different model
+    # would be incomparable with the committed mentions_vec. Missing
+    # artifacts are a hard error.
+    mdir = _models_dir(catalog, rc)
+    if not os.path.exists(os.path.join(mdir, "tfidf", "meta.json")):
+        raise FileNotFoundError(
+            f"incremental_update requires persisted TF-IDF artifacts under "
+            f"{mdir!r} (run the batch pipeline first, or pass rc.model_dir / "
+            f"the rc.run_id that fitted them) — refitting on a delta would "
+            f"silently break vector comparability"
+        )
+    if cfg.use_topics and not os.path.exists(os.path.join(mdir, "topics", "lda")):
+        raise FileNotFoundError(
+            f"incremental_update requires the persisted LDA artifact under "
+            f"{mdir!r} when cfg.use_topics is set — refitting on a delta "
+            f"would drift topic buckets"
+        )
+    batch = _next_batch(catalog)
+
+    def commit(base: str, df: DataFrame) -> tuple[DataFrame, int]:
+        """(lazy scan, rows) of ``df`` committed as ``base``'s delta."""
+        table = _delta_table(base, batch)
+        rows = catalog.write(
+            df, table, run_id=rc.run_id, stage=base, **WRITE_KW.get(base, {})
+        )["total_rows"]
+        return catalog.read(spark, table), rows
+
     # Every committed table read here is append-only and scanned
-    # lazily: the commit phase adds delta tables and rewrites only
+    # lazily: the absorb adds this batch's delta tables, which stay
+    # outside every view until the marker lands, and rewrites only
     # clusters, which nothing below reads, so no plan references files
     # a rename replaces, and no absorb materializes the corpus. The
     # marker-gated key view hides the keys of a crashed batch.
@@ -410,29 +443,22 @@ def incremental_update(
     # corpus with a broadcast of the DELTA's urls instead of shuffling
     # the corpus (ingest_new_mentions; plan-audited)
     delta_mentions = mentions_stage(new_pages, cfg).localCheckpoint(eager=True)
-    new_mentions, n_new = _counted(
-        ingest_new_mentions(delta_mentions, old_mentions)
+    new_mentions, n_new = commit(
+        "mentions", ingest_new_mentions(delta_mentions, old_mentions)
     )
 
-    # 2. persisted models only — a delta must NEVER refit (§4.4):
-    # delta vectors from a different model would be incomparable with
-    # the committed mentions_vec. Missing artifacts are a hard error.
-    mdir = _models_dir(catalog, rc)
-    if not os.path.exists(os.path.join(mdir, "tfidf", "meta.json")):
-        raise FileNotFoundError(
-            f"incremental_update requires persisted TF-IDF artifacts under "
-            f"{mdir!r} (run the batch pipeline first, or pass rc.model_dir / "
-            f"the rc.run_id that fitted them) — refitting on a delta would "
-            f"silently break vector comparability"
-        )
-    if cfg.use_topics and not os.path.exists(os.path.join(mdir, "topics", "lda")):
-        raise FileNotFoundError(
-            f"incremental_update requires the persisted LDA artifact under "
-            f"{mdir!r} when cfg.use_topics is set — refitting on a delta "
-            f"would drift topic buckets"
-        )
+    # 2. vectorize with the persisted models
     tfidf, topics = _fit_or_load_models(spark, new_mentions, catalog, rc)
-    new_vec = vectorize(new_mentions, tfidf, topics).localCheckpoint(eager=True)
+    new_vec, n_vec = commit(
+        "mentions_vec", vectorize(new_mentions, tfidf, topics)
+    )
+    if n_vec != n_new:
+        raise RuntimeError(
+            f"mentions delta ({n_new} rows) and mentions_vec delta "
+            f"({n_vec} rows) disagree for batch {batch} — the inner-join "
+            f"vector attach would silently drop pairs; batch NOT marked "
+            f"committed"
+        )
     # append-only table: lazy scan (never overwritten, so no rename
     # hazard; materializing it would be an O(corpus) job per batch)
     old_vec = _read_with_deltas(spark, catalog, "mentions_vec")
@@ -447,9 +473,10 @@ def incremental_update(
     # mention_id)), and the incremental pair universe is a SUPERSET of
     # the batch one even when caps bind (append-only scoring keeps
     # historical verified pairs; it never loses a batch pair).
-    new_keys = raw_block_keys(
-        new_mentions, cfg, topic_buckets(new_vec, topics)
-    ).localCheckpoint(eager=True)
+    new_keys, n_new_keys = commit(
+        "block_keys",
+        raw_block_keys(new_mentions, cfg, topic_buckets(new_vec, topics)),
+    )
     # untouched blocks have the exact member set the committed run had,
     # so every pair they can generate is already in old_scored — the
     # self-join input is the touched subset only, which scales with
@@ -466,51 +493,30 @@ def incremental_update(
     )
     all_pairs = blocking.candidate_pairs(touched_keys)
 
-    # 4. delta scoring only (anti-join on the scored pair ids)
+    # 4. delta scoring only (anti-join on the scored pair ids); the
+    # commit runs the scoring plan (Arrow UDF) once and the clusters
+    # rewrite reads the committed delta back
     done = old_scored.select("a_id", "b_id")
     delta_pairs = all_pairs.join(done, on=["a_id", "b_id"], how="left_anti")
-    # materialize once: the scoring plan (Arrow UDF) would otherwise
-    # be re-evaluated by the commit and the CC checkpoint
-    delta_scored, n_delta = _counted(
-        score_pairs(delta_pairs, all_vec, cfg.scoring)
+    delta_scored, n_delta = commit(
+        "scored_pairs", score_pairs(delta_pairs, all_vec, cfg.scoring)
     )
 
-    # 5. commit: APPEND-ONLY deltas for the corpus-sized tables, in
-    # this order (each batch writes only its delta, so commit I/O
-    # scales with the delta, not the corpus), then the clusters rewrite
-    # over the full edge set. The batch MARKER is written last: until
-    # it lands, none of this batch's deltas are visible and a rerun
-    # recomputes the batch.
-    batch = _next_batch(catalog)
-    deltas = {}
-    if n_new:
-        deltas.update(
-            mentions_vec=new_vec, mentions=new_mentions, block_keys=new_keys
-        )
-    if n_delta:
-        deltas["scored_pairs"] = delta_scored
-    rows = {
-        base: catalog.write(
-            df, _delta_table(base, batch), run_id=rc.run_id, stage=base,
-            **WRITE_KW.get(base, {}),
-        )["total_rows"]
-        for base, df in deltas.items()
-    }
+    # 5. the clusters rewrite over the full edge set, then the batch
+    # MARKER, last: until it lands, none of this batch's deltas are
+    # visible and a rerun recomputes the batch. An absorb with no new
+    # mentions writes none (module docstring).
     n_clusters = _rewrite_clusters(
         catalog,
         old_mentions.unionByName(new_mentions),
         old_scored.unionByName(delta_scored),
         rc,
     )
-    if rows.get("mentions") != rows.get("mentions_vec"):
-        raise RuntimeError(
-            f"mentions delta ({rows['mentions']} rows) and mentions_vec "
-            f"delta ({rows['mentions_vec']} rows) disagree for batch {batch} "
-            f"— the inner-join vector attach would silently drop pairs; "
-            f"batch NOT marked committed"
+    if n_new:
+        _commit_batch_marker(
+            catalog, batch, rc.run_id,
+            ["mentions", "mentions_vec", "block_keys", "scored_pairs"],
         )
-    if rows:
-        _commit_batch_marker(catalog, batch, rc.run_id, list(rows))
 
     return {
         "report": {
@@ -522,7 +528,7 @@ def incremental_update(
             # scale diagnostics: the pair self-join's input must track
             # the delta, not the corpus (asserted in tests). touched_*
             # are delta-sized; combined sums the key view's manifests.
-            "combined_key_rows": old_key_rows + rows.get("block_keys", 0),
+            "combined_key_rows": old_key_rows + n_new_keys,
             "touched_key_rows": n_touched_rows,
             "touched_blocks": n_touched_blocks,
             "wall_sec": round(time.time() - t0, 2),

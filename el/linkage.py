@@ -93,22 +93,6 @@ def _block_keys(
     )
 
 
-def _cap_side(keys: DataFrame, cap_k: int | None) -> DataFrame:
-    """W1 discipline per side: bound any block at cap_k members, kept
-    in a block-dependent deterministic order (hot records capped in
-    one block still surface via their other keys when explode_all)."""
-    if cap_k is None:
-        return keys
-    w = Window.partitionBy("block_key").orderBy(
-        F.xxhash64("block_key", "rid"), F.col("rid")
-    )
-    return (
-        keys.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= cap_k)
-        .drop("_rn")
-    )
-
-
 def link_tables(
     left: DataFrame,
     right: DataFrame,
@@ -132,18 +116,18 @@ def link_tables(
     (the el.simfn kernel is round(4)-parity with DuckDB's
     jaro_winkler_similarity, pinned by the f5 oracle), kept where
     ``jw >= threshold``."""
+    from el.dedup import cap_bucket_members
     from el.simfn import jaro_winkler
 
-    lk = _cap_side(
-        _block_keys(left, left_id, left_name, block_tokens, prefix_len,
-                    explode_all, block_on[0]),
-        cap_k,
-    )
-    rk = _cap_side(
-        _block_keys(right, right_id, right_name, block_tokens, prefix_len,
-                    explode_all, block_on[1]),
-        cap_k,
-    )
+    lk = _block_keys(left, left_id, left_name, block_tokens, prefix_len,
+                     explode_all, block_on[0])
+    rk = _block_keys(right, right_id, right_name, block_tokens, prefix_len,
+                     explode_all, block_on[1])
+    if cap_k is not None:
+        # W1 per side: hot records capped in one block still surface
+        # via their other keys when explode_all
+        lk = cap_bucket_members(lk, "block_key", "rid", cap_k)
+        rk = cap_bucket_members(rk, "block_key", "rid", cap_k)
     cands = (
         lk.alias("l")
         .join(rk.alias("r"), on="block_key")

@@ -34,11 +34,6 @@ class PipelineConfig:
     # typo'd names whose prefix4 drifted (smith/smyth); off by default
     # (the 3-strategy recall gate already holds without it)
     use_soundex: bool = False
-    topic_max_iter: int = 15
-    topic_vocab: int = 2048
-    lsh_shingle_k: int = 3
-    lsh_rows: int = 4
-    lsh_bands: int = 16
     # cap on the TF-IDF/LDA fit input (deterministic hash-sample of
     # the corpus): bounds the fit-once step at 100x scale; None = no
     # cap. Model ARTIFACTS are unaffected in shape either way.
@@ -71,11 +66,10 @@ class PipelineConfig:
     # (< c4_min_sentences sentences after cleaning, "lorem ipsum",
     # '{'; null text). Off by default. Only the verdict reaches
     # mentions: hygiene_stage also rewrites ``text`` to its prose lines
-    # (terminal punctuation, >= c4_min_line_words tokens, no
-    # "javascript"), but extraction re-derives text from ``html``.
+    # (terminal punctuation, >= 5 tokens, no "javascript"), but
+    # extraction re-derives text from ``html``.
     # Pure projection + filter, zero shuffle.
     c4_line_clean: bool = False
-    c4_min_line_words: int = 5
     c4_min_sentences: int = 3
 
 
@@ -132,7 +126,8 @@ def hygiene_stage(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
         from el.textops import _c4_exprs
 
         _, _, clean, _, c4_pass = _c4_exprs(
-            F.col("text"), cfg.c4_min_line_words, cfg.c4_min_sentences
+            F.col("text"), min_line_words=5,
+            min_sentences=cfg.c4_min_sentences,
         )
         out = (
             out.where(F.col("text").isNotNull())
@@ -240,14 +235,7 @@ def raw_block_keys(
     if cfg.use_lsh:
         from el.minhash import lsh_band_keys
 
-        keys = keys.unionByName(
-            lsh_band_keys(
-                mentions,
-                shingle_k=cfg.lsh_shingle_k,
-                rows=cfg.lsh_rows,
-                bands=cfg.lsh_bands,
-            )
-        )
+        keys = keys.unionByName(lsh_band_keys(mentions))
     if topic_buckets is not None:
         keys = keys.unionByName(topic_buckets)
     return keys

@@ -79,8 +79,10 @@ def _fit_or_load_models(
 ):
     """(tfidf, topics or None): loaded from the model dir when its
     artifacts exist, else fitted on ``mentions`` (and saved when there
-    is a model dir). A corpus with no mentions gets no topic model —
-    the relational stages handle empty inputs, but ml fits do not."""
+    is a model dir). A corpus with no mentions fits no topic model —
+    the relational stages handle empty inputs, but ml fits do not; a
+    persisted one loads regardless, so an absorb with no new mentions
+    vectorizes to the committed mentions_vec columns."""
     cfg = rc.pipeline
     mdir = _models_dir(catalog, rc)
     tfidf_path = mdir and os.path.join(mdir, "tfidf")
@@ -94,18 +96,18 @@ def _fit_or_load_models(
         if tfidf_path:
             tfidf.save(tfidf_path)
     topics = None
-    if cfg.use_topics and not mentions.isEmpty():
+    if cfg.use_topics:
         from el.topics import TopicModel
 
         if topic_path and os.path.exists(os.path.join(topic_path, "lda")):
             topics = TopicModel.load(spark, topic_path)
-        else:
+        elif not mentions.isEmpty():
             topics = TopicModel.fit(
                 spark,
                 mentions,
                 "context",
-                max_iter=cfg.topic_max_iter,
-                vocab_size=cfg.topic_vocab,
+                max_iter=15,
+                vocab_size=2048,
                 max_fit_docs=cfg.fit_sample_max,
             )
             if topic_path:

@@ -318,8 +318,8 @@ def test_incremental_crash_between_delta_writes_heals(
     real_write = cat.write
 
     def dying_write(df, table, **kw):
-        # vec delta committed, then die before the mentions delta
-        if table.startswith("mentions_delta_"):
+        # mentions delta committed, then die on the vec delta
+        if table.startswith("mentions_vec_delta_"):
             raise RuntimeError("simulated crash between delta writes")
         return real_write(df, table, **kw)
 
@@ -328,12 +328,13 @@ def test_incremental_crash_between_delta_writes_heals(
         incremental_update(spark, batch2, cat, rc_inc)
     monkeypatch.undo()
 
-    # crashed state: orphan vec delta exists, no marker -> invisible
+    # crashed state: orphan mentions delta exists, no marker -> invisible
     from el.incremental import _batch_markers, _delta_names, _read_with_deltas
 
-    assert cat.exists("mentions_vec_delta_0000")
+    assert cat.exists("mentions_delta_0000")
+    assert not cat.exists("mentions_vec_delta_0000")
     assert not _batch_markers(cat)
-    assert _delta_names(cat, "mentions_vec") == []
+    assert _delta_names(cat, "mentions") == []
 
     # rerun absorbs the batch from scratch (urls NOT seen as ingested)
     out = incremental_update(spark, batch2, cat, rc_inc)
@@ -360,6 +361,72 @@ def test_incremental_crash_between_delta_writes_heals(
     # merged view has each mention exactly once (no orphan double-count)
     men = _read_with_deltas(spark, cat, "mentions")
     assert men.count() == men.select("mention_id").distinct().count()
+
+
+def test_batch_markers_sort_numerically(tmp_path):
+    """Marker names sort "_batch_10000" before "_batch_9999" as
+    strings; batch order and the next batch index are numeric, or
+    batch 10000 would be reused and its committed deltas overwritten."""
+    from el.incremental import (
+        _batch_markers,
+        _commit_batch_marker,
+        _next_batch,
+    )
+
+    cat = HadoopParquetCatalog(str(tmp_path))
+    for batch in (9999, 10000):
+        _commit_batch_marker(cat, batch, "r", ["mentions"])
+    assert [m["batch"] for m in _batch_markers(cat)] == [9999, 10000]
+    assert _next_batch(cat) == 10001
+
+
+def test_replayed_batch_commits_nothing(spark, tmp_path_factory):
+    """Absorbing the same batch twice: the replay finds no new
+    mentions, writes no marker and leaves every view's tables and
+    clusters as they were (same manifest digests). Its empty deltas
+    stay invisible; the next absorb of fresh pages takes the same
+    batch index, overwrites them and commits normally. Topics are on:
+    the persisted LDA model loads for an empty delta too, so its
+    vectors carry the committed mentions_vec columns."""
+    from el.incremental import (
+        _batch_markers,
+        _delta_names,
+        _delta_table,
+        _view_tables,
+    )
+
+    rc = RunConfig(
+        run_id="replay",
+        n_score_chunks=2,
+        pipeline=PipelineConfig(use_lsh=True, use_topics=True, cap_k=10_000),
+    )
+    pages = gen_web_pages(spark, 240).localCheckpoint()
+    part = F.pmod(F.xxhash64("url"), F.lit(3))
+    cat = HadoopParquetCatalog(str(tmp_path_factory.mktemp("replay")))
+    run_checkpointed(spark, pages.where(part == 0), cat, rc, resume=False)
+    incremental_update(spark, pages.where(part == 1), cat, rc)
+    bases = ("mentions", "mentions_vec", "block_keys", "scored_pairs")
+
+    def digests():
+        tables = ["clusters"]
+        for base in bases:
+            tables += sum(_view_tables(cat, base), [])
+        return {t: cat.manifest(t)["digest"] for t in tables}
+
+    before = digests()
+    rep = incremental_update(spark, pages.where(part == 1), cat, rc)
+    assert rep["report"]["new_mentions"] == 0
+    assert [m["batch"] for m in _batch_markers(cat)] == [0]
+    assert cat.exists("mentions_delta_0001")
+    assert digests() == before
+
+    rep = incremental_update(spark, pages.where(part == 2), cat, rc)
+    n_new = rep["report"]["new_mentions"]
+    assert n_new > 0
+    assert [m["batch"] for m in _batch_markers(cat)] == [0, 1]
+    for base in bases:
+        assert _delta_names(cat, base)[-1] == _delta_table(base, 1)
+    assert cat.manifest("mentions_delta_0001")["total_rows"] == n_new
 
 
 def test_scored_pair_view_without_scored_tables_raises(spark, tmp_path):
@@ -446,9 +513,9 @@ def _small_base(spark, tmp_path_factory, rc, name):
 def test_report_counts_equal_counts_of_their_frames(
     spark, tmp_path_factory, rc, monkeypatch
 ):
-    """The six absorb and forget report counts are observed in flight
-    on the checkpoints that materialize their frames; each must equal
-    a count() of that same frame."""
+    """The absorb and forget report counts are observed in flight on
+    the checkpoints or commits that materialize their frames; each
+    must equal a count() of that same frame."""
     import el.incremental as inc
 
     cat, batch, urls = _small_base(spark, tmp_path_factory, rc, "counts")
@@ -467,23 +534,27 @@ def test_report_counts_equal_counts_of_their_frames(
 
     assert [n for n, _ in seen] == [c for _, c in seen]
     assert [n for n, _ in seen] == [
-        absorb["new_mentions"],
         absorb["touched_blocks"],
         absorb["touched_key_rows"],
-        absorb["delta_pairs_scored"],
         forget["forgotten_urls"],
         forget["forgotten_mentions"],
     ]
     assert all(n > 0 for n, _ in seen)
+    # the two delta counts come from their commits' manifests
+    for key, table in (
+        ("new_mentions", "mentions_delta_0000"),
+        ("delta_pairs_scored", "scored_pairs_delta_0000"),
+    ):
+        assert absorb[key] == cat.read(spark, table).count() > 0
 
 
 def test_absorb_and_forget_execution_count(
     spark, tmp_path_factory, rc, monkeypatch
 ):
     """Pins the Spark SQL executions of one absorb plus one forget:
-    every report count is observed on a checkpoint that runs anyway,
-    block keys commit as a delta, and neither call rewrites block_keys
-    or checkpoints a frame only to guard a catalog write."""
+    every report count is observed on a checkpoint or commit that runs
+    anyway, each absorb delta materializes once, through its commit,
+    and neither call rewrites block_keys."""
     import el.clustering as clustering
     from el.incremental import forget_urls
 
@@ -509,10 +580,11 @@ def test_absorb_and_forget_execution_count(
     forget_urls(spark, cat, urls, rc)
     new = [i for i in execution_ids() if i > last]
 
-    # absorb: 7 checkpoints, 5 commits; forget: 2 checkpoints, 3
-    # commits (each commit one parquet job, its digest observed in
-    # flight); each of the two CC calls: rounds + 1
-    assert len(new) == (7 + 5) + (2 + 3) + len(rounds) + 2
+    # absorb: 3 checkpoints, 5 commits (each delta materializes only
+    # through its commit); forget: 2 checkpoints, 3 commits (each
+    # commit one parquet job, its digest observed in flight); each of
+    # the two CC calls: rounds + 1
+    assert len(new) == (3 + 5) + (2 + 3) + len(rounds) + 2
 
 
 def test_streaming_absorb_equals_direct_absorb(
