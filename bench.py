@@ -446,22 +446,9 @@ def _steal_frac(interval: float = 1.0) -> float | None:
     pressured r4 artifact and two >1.6x-degraded r5 runs (mm kernel
     17.9 s vs 1.8 s quiet with load_start ~1.0). None on platforms
     without the counter."""
-    def snap():
-        try:
-            with open("/proc/stat") as f:
-                parts = f.readline().split()
-            return list(map(int, parts[1:]))
-        except (OSError, ValueError):
-            return None
-
-    a = snap()
-    if a is None or len(a) < 8:
-        return None
+    a = _stat_snap()
     time.sleep(interval)
-    b = snap()
-    d = [y - x for x, y in zip(a, b)]
-    tot = sum(d)
-    return (d[7] / tot) if tot > 0 else 0.0
+    return _steal_frac_between(a, _stat_snap())
 
 
 def _stat_snap() -> list[int] | None:
@@ -490,6 +477,10 @@ def _steal_frac_between(a: list[int] | None, b: list[int] | None) -> float | Non
     return (d[7] / tot) if tot > 0 else 0.0
 
 
+def _round4(x: float | None) -> float | None:
+    return None if x is None else round(x, 4)
+
+
 def _defer_under_load() -> dict:
     """Hold the bench start while the box is busy or being starved
     (a pressured window recorded 1.5-2.5x
@@ -515,12 +506,11 @@ def _defer_under_load() -> dict:
     while busy() and waited < budget:
         time.sleep(step)
         waited += step
-    steal = _steal_frac()
     return {
         "load_wait_sec": round(waited, 1),
         "load_wait_exhausted": waited >= budget,
         "load_max": max_load,
-        "steal_frac_start": round(steal, 4) if steal is not None else None,
+        "steal_frac_start": _round4(_steal_frac()),
         "steal_max": max_steal,
     }
 
@@ -617,19 +607,12 @@ def main() -> None:
                 "load_avg_end": tuple(
                     round(x, 2) for x in os.getloadavg()
                 ),
-                "steal_frac_end": (
-                    round(s, 4)
-                    if (s := _steal_frac()) is not None
-                    else None
-                ),
+                "steal_frac_end": _round4(_steal_frac()),
                 # cumulative steal over the WHOLE run — the stamp that
                 # catches mid-run starvation episodes the 1 s start/end
                 # samples miss entirely
-                "steal_frac_run": (
-                    round(sr, 4)
-                    if (sr := _steal_frac_between(stat_start, _stat_snap()))
-                    is not None
-                    else None
+                "steal_frac_run": _round4(
+                    _steal_frac_between(stat_start, _stat_snap())
                 ),
                 **load_stamp,
                 "pipeline": pipe_info,

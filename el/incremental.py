@@ -4,8 +4,9 @@ resumability discipline applied to the algorithm itself, not just to
 crash recovery).
 
 Mechanics (J4/J5 semi/anti-join ops from SURVEY.md §2.3):
-1. extract mentions from the new batch; drop urls already ingested
-   (left_anti on the committed mentions table — append-only policy);
+1. gate the new batch's pages, drop urls already ingested (left_anti
+   on the committed mentions table — append-only policy), then
+   extract mentions from the fresh pages only;
 2. vectorize with the PERSISTED TF-IDF/LDA artifacts (models are
    pipeline inputs — never refit on a delta, §4.4; missing artifacts
    are an ERROR, not a refit trigger);
@@ -50,15 +51,12 @@ block keys included), the rerun recomputes it from scratch, and
 orphan delta dirs from the crashed attempt are simply overwritten
 (same batch index). Clusters is the only table a batch rewrites; a
 crash after that rewrite leaves it holding the unmarked batch until
-the rerun rewrites it again. One legacy case: block_keys used to be
-rewritten in full before the marker, so a catalog that crashed
-mid-absorb under that layout and was never re-run can carry the
-crashed batch's keys, unmarked, in its base block_keys table.
+the rerun rewrites it again.
 Mentions and mentions_vec delta row alignment is asserted right after
 the vec delta commits (the inner-join vector attach would silently
-drop pairs otherwise). An absorb with no new mentions writes no
-marker: its empty deltas stay invisible orphans, overwritten by the
-next batch, which takes the same index.
+drop pairs otherwise). An absorb with no new mentions (a replay)
+stops after its empty mentions delta, an invisible orphan that the
+next batch overwrites: no other commit, no clusters rewrite, no marker.
 
 Equivalence: with capping disabled (or cap never reached),
 ``incremental(A then B) == full(A ∪ B)`` exactly — asserted in
@@ -85,9 +83,11 @@ from pyspark.sql import functions as F
 from el import blocking
 from el.catalog import HadoopParquetCatalog, commit_json
 from el.clustering import clusters_of
+from el.extract import extract_mentions
 from el.pipeline import (
     PipelineConfig,
-    mentions_stage,
+    gated_pages,
+    mentions_stage,  # noqa: F401 (perfbench/tracing.py patches this name)
     raw_block_keys,
     skew_capped_keys,
 )
@@ -97,6 +97,7 @@ from el.runner import (
     RunConfig,
     _counted,
     _fit_or_load_models,
+    _observed_rows,
     _models_dir,
     topic_buckets,
     vectorize,
@@ -280,11 +281,11 @@ def _view_rows(catalog: HadoopParquetCatalog, base: str) -> int:
 
 
 def ingest_new_mentions(delta_mentions: DataFrame, old_mentions: DataFrame):
-    """Delta rows whose url is not yet ingested — WITHOUT shuffling
-    the corpus. The naive ``delta LEFT ANTI old.urls.distinct()``
-    shuffles the corpus-sized url set on every absorb (anti-joins
-    cannot broadcast their corpus-sized right side). Equivalent
-    two-phase broadcast form:
+    """Rows of any url-keyed frame (the absorb passes gated pages)
+    whose url is not yet ingested — WITHOUT shuffling the corpus. The
+    naive ``delta LEFT ANTI old.urls.distinct()`` shuffles the
+    corpus-sized url set on every absorb (anti-joins cannot broadcast
+    their corpus-sized right side). Equivalent two-phase broadcast form:
 
     1. ``seen = old SEMI broadcast(delta_urls)`` — one corpus SCAN,
        no corpus shuffle (LeftSemi builds on the broadcast side);
@@ -292,7 +293,7 @@ def ingest_new_mentions(delta_mentions: DataFrame, old_mentions: DataFrame):
     2. ``delta ANTI broadcast(seen)`` — anti against a small set.
 
     Identity: seen = old_urls ∩ delta_urls, and
-    delta ∖ seen = delta ∖ old_urls. Every shuffle in the plan is
+    delta ∖ seen = delta ∖ old_urls. Every shuffle this adds is
     delta-sized (the two distincts); plan-audited in
     tests/test_incremental.py."""
     delta_urls = delta_mentions.select("url").distinct()
@@ -412,6 +413,27 @@ def incremental_update(
         )["total_rows"]
         return catalog.read(spark, table), rows
 
+    def result(n_new, n_clusters, n_delta=0, n_keys=0, n_rows=0, n_blocks=0):
+        """The absorb's return value; the zero defaults are a replay's."""
+        return {
+            "report": {
+                "new_mentions": n_new,
+                "delta_pairs_scored": n_delta,
+                # committed totals come from MANIFESTS, not corpus counts
+                "total_pairs": old_pairs_rows + n_delta,
+                "total_mentions": n_clusters,
+                # scale diagnostics: the pair self-join's input must
+                # track the delta, not the corpus (asserted in tests).
+                # touched_* are delta-sized; combined sums the key
+                # view's manifests.
+                "combined_key_rows": old_key_rows + n_keys,
+                "touched_key_rows": n_rows,
+                "touched_blocks": n_blocks,
+                "wall_sec": round(time.time() - t0, 2),
+            },
+            "clusters": catalog.read(spark, "clusters"),
+        }
+
     # Every committed table read here is append-only and scanned
     # lazily: the absorb adds this batch's delta tables, which stay
     # outside every view until the marker lands, and rewrites only
@@ -438,14 +460,20 @@ def incremental_update(
             how="left_anti",
         )
 
-    # 1. new mentions (urls not yet ingested) — the one extraction
-    # pass runs once (checkpoint), then the ingest filter probes the
-    # corpus with a broadcast of the DELTA's urls instead of shuffling
-    # the corpus (ingest_new_mentions; plan-audited)
-    delta_mentions = mentions_stage(new_pages, cfg).localCheckpoint(eager=True)
-    new_mentions, n_new = commit(
-        "mentions", ingest_new_mentions(delta_mentions, old_mentions)
-    )
+    # 1. new mentions: gated pages whose url is not yet ingested, then
+    # extracted. Extraction maps each page to rows keeping its url, so
+    # this equals extracting first and filtering mentions by url, but
+    # its one Python pass runs inside the commit, on fresh pages only.
+    # The ingest filter probes the corpus with a broadcast of the
+    # batch's urls instead of shuffling the corpus (ingest_new_mentions;
+    # plan-audited)
+    new_mentions, n_new = commit("mentions", extract_mentions(
+        ingest_new_mentions(gated_pages(new_pages, cfg), old_mentions)
+    ))
+    if not n_new:
+        # a replay: no delta past this empty one, no recluster and no
+        # marker (module docstring); clusters keeps its version
+        return result(0, catalog.manifest("clusters")["total_rows"])
 
     # 2. vectorize with the persisted models
     tfidf, topics = _fit_or_load_models(spark, new_mentions, catalog, rc)
@@ -482,7 +510,10 @@ def incremental_update(
     # self-join input is the touched subset only, which scales with
     # the delta, not the corpus. Restricting to whole blocks commutes
     # with the per-block skew policy (el.pipeline.skew_capped_keys).
-    touched, n_touched_blocks = _counted(
+    # The touched-block count is observed inside the touched_keys
+    # checkpoint (the pair self-join reads it twice); with no new keys
+    # the semi-join prunes the empty touched set, observation included.
+    touched, n_touched_blocks = _observed_rows(
         new_keys.select("strategy", "block_key").distinct()
     )
     touched_raw = old_keys.unionByName(new_keys).join(
@@ -512,29 +543,15 @@ def incremental_update(
         old_scored.unionByName(delta_scored),
         rc,
     )
-    if n_new:
-        _commit_batch_marker(
-            catalog, batch, rc.run_id,
-            ["mentions", "mentions_vec", "block_keys", "scored_pairs"],
-        )
+    _commit_batch_marker(
+        catalog, batch, rc.run_id,
+        ["mentions", "mentions_vec", "block_keys", "scored_pairs"],
+    )
 
-    return {
-        "report": {
-            "new_mentions": n_new,
-            "delta_pairs_scored": n_delta,
-            # committed totals come from MANIFESTS, not corpus counts
-            "total_pairs": old_pairs_rows + n_delta,
-            "total_mentions": n_clusters,
-            # scale diagnostics: the pair self-join's input must track
-            # the delta, not the corpus (asserted in tests). touched_*
-            # are delta-sized; combined sums the key view's manifests.
-            "combined_key_rows": old_key_rows + n_new_keys,
-            "touched_key_rows": n_touched_rows,
-            "touched_blocks": n_touched_blocks,
-            "wall_sec": round(time.time() - t0, 2),
-        },
-        "clusters": catalog.read(spark, "clusters"),
-    }
+    return result(
+        n_new, n_clusters, n_delta, n_new_keys, n_touched_rows,
+        n_touched_blocks() if n_new_keys else 0,
+    )
 
 
 def forget_urls(
@@ -575,11 +592,12 @@ def forget_urls(
     ``catalog.read(spark, "clusters")``."""
     rc = rc or RunConfig()
     t0 = time.time()
-    urls, n_urls = _counted(urls.select("url").distinct())
+    urls = urls.select("url").distinct()
 
-    # mention ids being forgotten — resolved BEFORE the tombstone
-    # hides them; broadcast-sized (mentions of the forgotten pages)
-    gone_m, n_gone = _counted(
+    # mention ids being forgotten; broadcast-sized (mentions of the
+    # forgotten pages). The mentions view anti-joins the tombstone as
+    # it stands before this call's write replaces it.
+    gone_m = (
         _read_with_deltas(spark, catalog, "mentions")
         .join(F.broadcast(urls), on="url", how="left_semi")
         .select("mention_id")
@@ -590,15 +608,21 @@ def forget_urls(
     # with prior forget calls). Each union reads the table its write
     # replaces, with no checkpoint: the write's parquet job runs the
     # plan to completion before the commit renames the new table into
-    # place, and nothing reads these plans afterwards.
+    # place, and nothing reads these plans afterwards. Each count is
+    # observed inside its commit; a commit of no rows can prune its
+    # empty inputs, observation included, so it counts 0.
+    counts = []
     for table, key, df in (
         ("forgotten_urls", "url", urls),
         ("forgotten_mentions", "mention_id", gone_m),
     ):
+        df, rows = _observed_rows(df)
         if catalog.exists(table):
             df = catalog.read(spark, table).select(key).unionByName(df)
             df = df.distinct()
-        catalog.write(df, table, run_id=rc.run_id, stage="forget")
+        m = catalog.write(df, table, run_id=rc.run_id, stage="forget")
+        counts.append(rows() if m["total_rows"] else 0)
+    n_urls, n_gone = counts
 
     # 2. recluster from the tombstone-filtered views (block_keys needs
     # no rewrite: the same tombstones hide its forgotten members from

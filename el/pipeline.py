@@ -205,16 +205,19 @@ def hygiene_stage(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
     return out
 
 
+def gated_pages(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """Hygiene gate -> dedup -> lang gate: the pages extraction sees."""
+    return dedup_latest(hygiene_stage(pages, cfg)).where(
+        F.col("lang").isin(*cfg.langs)
+    )
+
+
 def mentions_stage(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Hygiene gate -> dedup -> lang/null gate -> EXTRACT_SPEC v1 ->
-    mention rows.
+    """Gated pages -> EXTRACT_SPEC v1 -> mention rows.
 
     Column-pruning discipline: ``html`` is only referenced here; every
     later stage sees mention-level columns only."""
-    gated = dedup_latest(hygiene_stage(pages, cfg)).where(
-        F.col("lang").isin(*cfg.langs)
-    )
-    return extract_mentions(gated)
+    return extract_mentions(gated_pages(pages, cfg))
 
 
 def raw_block_keys(

@@ -36,6 +36,7 @@ import functools
 import os
 import time
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -80,9 +81,7 @@ def _fit_or_load_models(
     """(tfidf, topics or None): loaded from the model dir when its
     artifacts exist, else fitted on ``mentions`` (and saved when there
     is a model dir). A corpus with no mentions fits no topic model —
-    the relational stages handle empty inputs, but ml fits do not; a
-    persisted one loads regardless, so an absorb with no new mentions
-    vectorizes to the committed mentions_vec columns."""
+    the relational stages handle empty inputs, but ml fits do not."""
     cfg = rc.pipeline
     mdir = _models_dir(catalog, rc)
     tfidf_path = mdir and os.path.join(mdir, "tfidf")
@@ -159,14 +158,21 @@ WRITE_KW = {"block_keys": {"partition_by": ["strategy"]}}
 SCORE_CHUNK_PREFIX = "scored_chunk_"
 
 
-def _counted(df: DataFrame) -> tuple[DataFrame, int]:
-    """(``df`` materialized by an eager localCheckpoint, its row count).
-    The count is observed in flight on the checkpoint, so reporting it
-    costs no extra Spark execution."""
+def _observed_rows(df: DataFrame) -> tuple[DataFrame, Callable[[], int]]:
+    """(``df`` with its row count observed in flight, a thunk returning
+    it once an action has run a plan holding the frame). A plan that
+    prunes the frame as empty (an empty join side or union) reports
+    no count: the thunk then raises, so don't call it there."""
     obs = Observation()
     df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-    df = df.localCheckpoint(eager=True)
-    return df, obs.get["rows"]
+    return df, lambda: obs.get["rows"]
+
+
+def _counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """(``df`` materialized by an eager localCheckpoint, its row count
+    observed in flight: reporting it costs no extra Spark execution)."""
+    df, rows = _observed_rows(df)
+    return df.localCheckpoint(eager=True), rows()
 
 
 def _score_chunked(spark, t, build, catalog, rc, resume):

@@ -359,9 +359,9 @@ def stream_incremental_er(
     Effectively-once without a transactional sink: a replayed
     micro-batch's urls are already in the committed mentions set, so
     the ingest anti-join absorbs the replay as a no-op (new_mentions
-    = 0, no batch marker, so no view changes). The stream checkpoint only decides WHEN a
-    file is offered; the catalog's batch markers decide what is
-    committed. Returns (StreamingQuery, reports list) — one report
+    = 0; only an empty, unmarked mentions delta commits). The stream
+    checkpoint only decides WHEN a file is offered; the catalog's
+    batch markers decide what is committed. Returns (StreamingQuery, reports list) — one report
     dict per non-empty micro-batch, appended as epochs complete."""
     from el.incremental import incremental_update
     from el.schemas import WEB_PAGES

@@ -151,9 +151,10 @@ def test_ingest_anti_join_never_shuffles_the_corpus(spark):
     sides, so the only exchanges in the plan are the two delta-sized
     distincts. Auto-broadcast is disabled to prove the shape comes
     from the explicit hints, not from the fixture being small."""
+    from el.extract import extract_mentions
     from el.fixtures import gen_web_pages
     from el.incremental import ingest_new_mentions
-    from el.pipeline import mentions_stage
+    from el.pipeline import gated_pages, mentions_stage
 
     pages = gen_web_pages(spark, 200).localCheckpoint()
     split = F.pmod(F.xxhash64("url"), F.lit(4)) < 1
@@ -161,17 +162,33 @@ def test_ingest_anti_join_never_shuffles_the_corpus(spark):
     old = mentions_stage(pages.where(~split), cfg).localCheckpoint()
     delta = mentions_stage(pages.where(split), cfg).localCheckpoint()
 
+    def plan_of(df):
+        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            return df._jdf.queryExecution().executedPlan().toString()
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
     df = ingest_new_mentions(delta, old)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    plan = plan_of(df)
     assert "SortMergeJoin" not in plan
     assert plan.count("BroadcastHashJoin") == 2
     shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
     assert shuffles == 2, plan  # the two tiny distincts only
+
+    # the absorb filters gated PAGES (every page here, so the old ones
+    # are dropped), then extracts once: the single Python node sits
+    # above the anti-join, and the rows are the fresh pages' mentions
+    fresh = extract_mentions(ingest_new_mentions(gated_pages(pages, cfg), old))
+    plan = plan_of(fresh)
+    assert "SortMergeJoin" not in plan
+    assert plan.count("BroadcastHashJoin") == 2
+    assert plan.count("MapInPandas") == 1, plan
+    assert plan.index("MapInPandas") < plan.index("LeftAnti"), plan
+    assert sorted(map(tuple, fresh.collect())) == sorted(
+        map(tuple, delta.collect())
+    )
 
     # and it computes exactly the anti-join it replaces
     naive = delta.join(
@@ -382,12 +399,11 @@ def test_batch_markers_sort_numerically(tmp_path):
 
 def test_replayed_batch_commits_nothing(spark, tmp_path_factory):
     """Absorbing the same batch twice: the replay finds no new
-    mentions, writes no marker and leaves every view's tables and
-    clusters as they were (same manifest digests). Its empty deltas
-    stay invisible; the next absorb of fresh pages takes the same
-    batch index, overwrites them and commits normally. Topics are on:
-    the persisted LDA model loads for an empty delta too, so its
-    vectors carry the committed mentions_vec columns."""
+    mentions, commits only its empty mentions delta, writes no marker
+    and leaves every view's tables and clusters as they were (same
+    manifest digests, same clusters version). The empty delta stays
+    invisible; the next absorb of fresh pages takes the same batch
+    index, overwrites it and commits normally. Topics are on."""
     from el.incremental import (
         _batch_markers,
         _delta_names,
@@ -414,10 +430,15 @@ def test_replayed_batch_commits_nothing(spark, tmp_path_factory):
         return {t: cat.manifest(t)["digest"] for t in tables}
 
     before = digests()
+    version = cat.manifest("clusters")["version"]
     rep = incremental_update(spark, pages.where(part == 1), cat, rc)
     assert rep["report"]["new_mentions"] == 0
     assert [m["batch"] for m in _batch_markers(cat)] == [0]
     assert cat.exists("mentions_delta_0001")
+    # the replay stops after its empty mentions commit: no further
+    # delta, and no clusters rewrite (which would archive a snapshot)
+    assert not cat.exists("mentions_vec_delta_0001")
+    assert cat.manifest("clusters")["version"] == version
     assert digests() == before
 
     rep = incremental_update(spark, pages.where(part == 2), cat, rc)
@@ -532,20 +553,46 @@ def test_report_counts_equal_counts_of_their_frames(
     forget = inc.forget_urls(spark, cat, urls, rc)
     monkeypatch.undo()
 
-    assert [n for n, _ in seen] == [c for _, c in seen]
-    assert [n for n, _ in seen] == [
-        absorb["touched_blocks"],
-        absorb["touched_key_rows"],
-        forget["forgotten_urls"],
-        forget["forgotten_mentions"],
-    ]
-    assert all(n > 0 for n, _ in seen)
+    assert seen == [(absorb["touched_key_rows"],) * 2]
+    assert absorb["touched_key_rows"] > 0
     # the two delta counts come from their commits' manifests
     for key, table in (
         ("new_mentions", "mentions_delta_0000"),
         ("delta_pairs_scored", "scored_pairs_delta_0000"),
     ):
         assert absorb[key] == cat.read(spark, table).count() > 0
+    # the rest are observed inside the touched_keys checkpoint and
+    # the two tombstone commits
+    blocks = cat.read(spark, "block_keys_delta_0000")
+    n_blocks = blocks.select("strategy", "block_key").distinct().count()
+    n_gone = cat.read(spark, "forgotten_mentions").count()
+    assert absorb["touched_blocks"] == n_blocks > 0
+    assert forget["forgotten_urls"] == urls.distinct().count() > 0
+    assert forget["forgotten_mentions"] == n_gone > 0
+
+
+def test_counts_of_empty_frames_are_zero(
+    spark, tmp_path_factory, rc, monkeypatch
+):
+    """A count observed inside a commit or checkpoint reads 0 for an
+    empty frame, also where the plan prunes that frame as empty: a
+    forget of nothing (twice, so the second unions into empty
+    tombstones), then of a url never crawled, and an absorb whose new
+    mentions yield no block keys."""
+    import el.incremental as inc
+
+    cat, batch, _ = _small_base(spark, tmp_path_factory, rc, "empty")
+    never = spark.createDataFrame([("http://never.example/",)], "url string")
+    nothing = never.limit(0)
+    for request, n_urls in ((nothing, 0), (nothing, 0), (never, 1)):
+        rep = inc.forget_urls(spark, cat, request, rc)
+        assert (rep["forgotten_urls"], rep["forgotten_mentions"]) == (n_urls, 0)
+
+    raw = inc.raw_block_keys
+    monkeypatch.setattr(inc, "raw_block_keys", lambda *a: raw(*a).limit(0))
+    rep = inc.incremental_update(spark, batch, cat, rc)["report"]
+    assert rep["new_mentions"] > 0
+    assert rep["touched_blocks"] == rep["touched_key_rows"] == 0
 
 
 def test_absorb_and_forget_execution_count(
@@ -580,11 +627,12 @@ def test_absorb_and_forget_execution_count(
     forget_urls(spark, cat, urls, rc)
     new = [i for i in execution_ids() if i > last]
 
-    # absorb: 3 checkpoints, 5 commits (each delta materializes only
-    # through its commit); forget: 2 checkpoints, 3 commits (each
-    # commit one parquet job, its digest observed in flight); each of
-    # the two CC calls: rounds + 1
-    assert len(new) == (3 + 5) + (2 + 3) + len(rounds) + 2
+    # absorb: 1 checkpoint (touched_keys), 5 commits (each delta
+    # materializes only through its commit, extraction inside the
+    # mentions commit); forget: 3 commits, its counts observed inside
+    # the tombstone commits (each commit one parquet job, its digest
+    # observed in flight); each of the two CC calls: rounds + 1
+    assert len(new) == (1 + 5) + (0 + 3) + len(rounds) + 2
 
 
 def test_streaming_absorb_equals_direct_absorb(
