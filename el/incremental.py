@@ -51,7 +51,8 @@ block keys included), the rerun recomputes it from scratch, and
 orphan delta dirs from the crashed attempt are simply overwritten
 (same batch index). Clusters is the only table a batch rewrites; a
 crash after that rewrite leaves it holding the unmarked batch until
-the rerun rewrites it again.
+the rerun rewrites it again; a replay (below) in between leaves it
+so and reports its ``total_mentions``.
 Mentions and mentions_vec delta row alignment is asserted right after
 the vec delta commits (the inner-join vector attach would silently
 drop pairs otherwise). An absorb with no new mentions (a replay)
@@ -280,23 +281,27 @@ def _view_rows(catalog: HadoopParquetCatalog, base: str) -> int:
     return sum(catalog.manifest(t)["total_rows"] for t in bases + deltas)
 
 
-def ingest_new_mentions(delta_mentions: DataFrame, old_mentions: DataFrame):
-    """Rows of any url-keyed frame (the absorb passes gated pages)
-    whose url is not yet ingested — WITHOUT shuffling the corpus. The
-    naive ``delta LEFT ANTI old.urls.distinct()`` shuffles the
-    corpus-sized url set on every absorb (anti-joins cannot broadcast
-    their corpus-sized right side). Equivalent two-phase broadcast form:
+def ingest_new_mentions(
+    delta_mentions: DataFrame, old_mentions: DataFrame, *, urls=None
+):
+    """Rows of a url-keyed frame (the absorb passes gated pages) whose
+    url is not yet ingested — WITHOUT shuffling the corpus. The naive
+    ``delta LEFT ANTI old.urls.distinct()`` shuffles the corpus-sized
+    url set (anti-joins cannot broadcast their corpus-sized right
+    side). Equivalent two-phase broadcast form:
 
-    1. ``seen = old SEMI broadcast(delta_urls)`` — one corpus SCAN,
-       no corpus shuffle (LeftSemi builds on the broadcast side);
-       output is at most delta-sized;
+    1. ``seen = old SEMI broadcast(probe_urls)`` — one corpus SCAN, no
+       corpus shuffle; output is at most delta-sized;
     2. ``delta ANTI broadcast(seen)`` — anti against a small set.
 
-    Identity: seen = old_urls ∩ delta_urls, and
-    delta ∖ seen = delta ∖ old_urls. Every shuffle this adds is
-    delta-sized (the two distincts); plan-audited in
-    tests/test_incremental.py."""
-    delta_urls = delta_mentions.select("url").distinct()
+    The probe urls ``urls`` (default: the delta's) hold every delta url,
+    so seen = old_urls ∩ probe_urls and delta ∖ seen = delta ∖ old_urls.
+    The absorb probes with the raw batch, so its gate runs once, on the
+    filtered side, whatever the view's table count: no tie the gate
+    breaks per evaluation lets an ingested url in. Shuffles added are
+    delta-sized; plan-audited in tests/test_incremental.py."""
+    urls = delta_mentions if urls is None else urls
+    delta_urls = urls.select("url").distinct()
     seen = (
         old_mentions.select("url")
         .join(F.broadcast(delta_urls), on="url", how="left_semi")
@@ -464,11 +469,12 @@ def incremental_update(
     # extracted. Extraction maps each page to rows keeping its url, so
     # this equals extracting first and filtering mentions by url, but
     # its one Python pass runs inside the commit, on fresh pages only.
-    # The ingest filter probes the corpus with a broadcast of the
+    # The ingest filter probes the corpus with a broadcast of the raw
     # batch's urls instead of shuffling the corpus (ingest_new_mentions;
     # plan-audited)
+    gated = gated_pages(new_pages, cfg)
     new_mentions, n_new = commit("mentions", extract_mentions(
-        ingest_new_mentions(gated_pages(new_pages, cfg), old_mentions)
+        ingest_new_mentions(gated, old_mentions, urls=new_pages)
     ))
     if not n_new:
         # a replay: no delta past this empty one, no recluster and no
@@ -511,8 +517,7 @@ def incremental_update(
     # the delta, not the corpus. Restricting to whole blocks commutes
     # with the per-block skew policy (el.pipeline.skew_capped_keys).
     # The touched-block count is observed inside the touched_keys
-    # checkpoint (the pair self-join reads it twice); with no new keys
-    # the semi-join prunes the empty touched set, observation included.
+    # checkpoint (the pair self-join reads it twice).
     touched, n_touched_blocks = _observed_rows(
         new_keys.select("strategy", "block_key").distinct()
     )
@@ -548,10 +553,8 @@ def incremental_update(
         ["mentions", "mentions_vec", "block_keys", "scored_pairs"],
     )
 
-    return result(
-        n_new, n_clusters, n_delta, n_new_keys, n_touched_rows,
-        n_touched_blocks() if n_new_keys else 0,
-    )
+    return result(n_new, n_clusters, n_delta, n_new_keys, n_touched_rows,
+                  n_touched_blocks())
 
 
 def forget_urls(
@@ -609,20 +612,17 @@ def forget_urls(
     # replaces, with no checkpoint: the write's parquet job runs the
     # plan to completion before the commit renames the new table into
     # place, and nothing reads these plans afterwards. Each count is
-    # observed inside its commit; a commit of no rows can prune its
-    # empty inputs, observation included, so it counts 0.
-    counts = []
-    for table, key, df in (
-        ("forgotten_urls", "url", urls),
-        ("forgotten_mentions", "mention_id", gone_m),
-    ):
+    # observed inside its commit.
+    def tombstone(table: str, key: str, df: DataFrame) -> int:
         df, rows = _observed_rows(df)
         if catalog.exists(table):
             df = catalog.read(spark, table).select(key).unionByName(df)
             df = df.distinct()
-        m = catalog.write(df, table, run_id=rc.run_id, stage="forget")
-        counts.append(rows() if m["total_rows"] else 0)
-    n_urls, n_gone = counts
+        catalog.write(df, table, run_id=rc.run_id, stage="forget")
+        return rows()
+
+    n_urls = tombstone("forgotten_urls", "url", urls)
+    n_gone = tombstone("forgotten_mentions", "mention_id", gone_m)
 
     # 2. recluster from the tombstone-filtered views (block_keys needs
     # no rewrite: the same tombstones hide its forgotten members from

@@ -160,12 +160,12 @@ SCORE_CHUNK_PREFIX = "scored_chunk_"
 
 def _observed_rows(df: DataFrame) -> tuple[DataFrame, Callable[[], int]]:
     """(``df`` with its row count observed in flight, a thunk returning
-    it once an action has run a plan holding the frame). A plan that
-    prunes the frame as empty (an empty join side or union) reports
-    no count: the thunk then raises, so don't call it there."""
+    it once an action has run a plan holding the frame). Spark ends the
+    observation of a frame that plan pruned as empty with an empty row
+    (no metrics), which the thunk reads as 0."""
     obs = Observation()
     df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-    return df, lambda: obs.get["rows"]
+    return df, lambda: obs.get["rows"] if obs._jo.getRow().length() else 0
 
 
 def _counted(df: DataFrame) -> tuple[DataFrame, int]:

@@ -178,14 +178,17 @@ def test_ingest_anti_join_never_shuffles_the_corpus(spark):
     assert shuffles == 2, plan  # the two tiny distincts only
 
     # the absorb filters gated PAGES (every page here, so the old ones
-    # are dropped), then extracts once: the single Python node sits
-    # above the anti-join, and the rows are the fresh pages' mentions
-    fresh = extract_mentions(ingest_new_mentions(gated_pages(pages, cfg), old))
+    # are dropped) probed with the raw pages' urls, then extracts
+    # once: the single Python node sits above the anti-join, the gate's
+    # dedup window runs once, and the rows are the fresh pages' mentions
+    gated = gated_pages(pages, cfg)
+    fresh = extract_mentions(ingest_new_mentions(gated, old, urls=pages))
     plan = plan_of(fresh)
     assert "SortMergeJoin" not in plan
     assert plan.count("BroadcastHashJoin") == 2
     assert plan.count("MapInPandas") == 1, plan
     assert plan.index("MapInPandas") < plan.index("LeftAnti"), plan
+    assert plan.count("Window [") == plan_of(gated).count("Window [") == 1
     assert sorted(map(tuple, fresh.collect())) == sorted(
         map(tuple, delta.collect())
     )
@@ -197,6 +200,39 @@ def test_ingest_anti_join_never_shuffles_the_corpus(spark):
     assert sorted(map(tuple, df.collect())) == sorted(
         map(tuple, naive.collect())
     )
+
+
+def test_ingest_gates_once_under_a_canonical_url_tie(spark):
+    """Every page has a twin with the same canonical url, warc_ts and
+    html, so the gate's canonical-url window keeps either one. The
+    absorb's ingest filter must evaluate the gate once, however many
+    tables the mentions view unions: two evaluations may keep
+    different twins, and a url-set subtree that kept the other twin
+    would let an ingested url through. A replay of the batch then
+    ingests no url the corpus already holds."""
+    from el.extract import extract_mentions
+    from el.incremental import ingest_new_mentions
+    from el.pipeline import gated_pages, mentions_stage
+
+    base = gen_web_pages(spark, 60)
+    pages = base.unionByName(
+        base.withColumn("url", F.concat("url", F.lit("#twin")))
+    ).localCheckpoint()
+    cfg = PipelineConfig(
+        use_lsh=False, use_topics=False, canonical_url_dedup=True
+    )
+    corpus = mentions_stage(pages, cfg)
+    part = F.pmod(F.xxhash64("url"), F.lit(3))
+    old = corpus.where(part == 0).localCheckpoint()
+    for i in (1, 2):  # a base table plus two deltas
+        old = old.unionByName(corpus.where(part == i).localCheckpoint())
+
+    gated = gated_pages(pages, cfg)
+    fresh = extract_mentions(ingest_new_mentions(gated, old, urls=pages))
+    plan = fresh._jdf.queryExecution().executedPlan().toString()
+    gate = gated._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Window [") == gate.count("Window [") == 2, plan
+    assert fresh.join(old, on="url", how="left_semi").count() == 0
 
 
 def test_incremental_recaps_hot_blocks(spark, tmp_path_factory):
@@ -577,14 +613,17 @@ def test_counts_of_empty_frames_are_zero(
     """A count observed inside a commit or checkpoint reads 0 for an
     empty frame, also where the plan prunes that frame as empty: a
     forget of nothing (twice, so the second unions into empty
-    tombstones), then of a url never crawled, and an absorb whose new
-    mentions yield no block keys."""
+    tombstones), then of a url never crawled, then of nothing again
+    (an empty request unioned into non-empty tombstones), and an
+    absorb whose new mentions yield no block keys."""
     import el.incremental as inc
 
     cat, batch, _ = _small_base(spark, tmp_path_factory, rc, "empty")
     never = spark.createDataFrame([("http://never.example/",)], "url string")
     nothing = never.limit(0)
-    for request, n_urls in ((nothing, 0), (nothing, 0), (never, 1)):
+    for request, n_urls in (
+        (nothing, 0), (nothing, 0), (never, 1), (nothing, 0),
+    ):
         rep = inc.forget_urls(spark, cat, request, rc)
         assert (rep["forgotten_urls"], rep["forgotten_mentions"]) == (n_urls, 0)
 
