@@ -363,14 +363,11 @@ def bench_pipeline(spark, sf: float) -> tuple[dict, dict]:
     """Pipeline entries from the executor's per-stage report: each
     stage is materialized inside its own timing, so every entry holds
     only its own stage's work."""
+    import tempfile
+
     from el.fixtures import gen_web_pages
-    from el.pipeline import (
-        PipelineConfig,
-        hygiene_stage,
-        mentions_stage,
-        run_pipeline,
-    )
-    from el.runner import RunConfig, _fit_or_load_models
+    from el.pipeline import PipelineConfig, hygiene_stage, mentions_stage
+    from el.runner import RunConfig, _fit_or_load_models, execute
 
     n_pages = max(600, int(sf * PAGES_PER_SF))
     times: dict[str, float] = {}
@@ -398,18 +395,20 @@ def bench_pipeline(spark, sf: float) -> tuple[dict, dict]:
     )
     times["pipeline_hygiene"] = round(time.time() - t, 3)
 
-    cfg = PipelineConfig()
     # model fit is its OWN entry: production runs fit once and load
     # persisted artifacts, so the stage entries below measure the
-    # fit-once path and the refit cost is reported separately
-    mentions = mentions_stage(pages, cfg).localCheckpoint(eager=True)
-    t = time.time()
-    tfidf, topics = _fit_or_load_models(
-        spark, mentions, None, RunConfig(pipeline=cfg)
+    # fit-once path (loading from a fresh model dir) and the refit
+    # cost is reported separately
+    rc = RunConfig(
+        pipeline=PipelineConfig(),
+        model_dir=tempfile.mkdtemp(prefix="pipeline_", dir=_run_scratch_dir()),
     )
+    mentions = mentions_stage(pages, rc.pipeline).localCheckpoint(eager=True)
+    t = time.time()
+    _fit_or_load_models(spark, mentions, None, rc)
     times["pipeline_refit"] = round(time.time() - t, 3)
 
-    out = run_pipeline(spark, pages, cfg, tfidf_model=tfidf, topic_model=topics)
+    out = execute(spark, pages, rc)
     sec = {k: v["wall_ms"] / 1000.0 for k, v in out["report"].items()}
     times["pipeline_extract"] = round(sec["mentions"], 3)
     times["pipeline_vec_block"] = round(sec["mentions_vec"] + sec["block_keys"], 3)

@@ -52,6 +52,60 @@ def commit_json(path: str, obj) -> None:
     os.rename(tmp, path)
 
 
+# Fit-once model artifacts (TF-IDF, LDA, IVF, bigram counts; SURVEY.md
+# §4.4): a dir of payload files plus this file. The dir is committed
+# iff its meta.json exists, and only the functions below touch it.
+ARTIFACT_META = "meta.json"
+
+
+def artifact_meta(path: str | None) -> dict | None:
+    """The meta of the committed artifact dir ``path``; None when
+    there is no dir or it is not committed."""
+    if not path:
+        return None
+    try:
+        with open(os.path.join(path, ARTIFACT_META)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
+def commit_artifact(path: str, write_payload, meta: dict) -> None:
+    """Save an artifact dir: uncommit it, ``write_payload()``, then
+    land meta.json last through ``commit_json``. A save killed
+    anywhere leaves no meta.json, so no reader loads a torn payload."""
+    meta_path = os.path.join(path, ARTIFACT_META)
+    os.makedirs(path, exist_ok=True)
+    if os.path.exists(meta_path):
+        os.remove(meta_path)
+    write_payload()
+    commit_json(meta_path, meta)
+
+
+def load_or_fit(path: str | None, load, fit, params: dict | None = None):
+    """The one fit-once gate: ``load(path)`` when ``path`` holds a
+    committed artifact, else ``fit()``, saved to ``path`` when there
+    is one (a fit returning None saves nothing; a ``save`` that
+    returns a model, re-bound to its committed payload, is served
+    instead). A committed artifact whose meta disagrees with a
+    requested fit param raises ValueError: serving a model fit with
+    other params would change results with no error."""
+    meta = artifact_meta(path)
+    if meta is None:
+        model = fit()
+        if not path or model is None:
+            return model
+        return model.save(path) or model
+    for k, v in (params or {}).items():
+        if k in meta and meta[k] != v:
+            raise ValueError(
+                f"artifact at {path} was fit with {k}={meta[k]}, but "
+                f"{k}={v} was requested — refusing to serve a mismatched "
+                "model; delete or re-path it to refit"
+            )
+    return load(path)
+
+
 def _digest(df: DataFrame) -> list:
     """Aggregate columns defining a table's row digest: row count, XOR
     and decimal sum of xxhash64 over the columns in sorted-name order

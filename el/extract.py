@@ -39,8 +39,6 @@ from pyspark.sql.functions import pandas_udf
 from el.hashing import stable_id64
 from el.schemas import MENTIONS
 
-EXTRACT_SPEC_VERSION = "v1"
-
 _RE_SCRIPT = re.compile(r"<(script|style)[^>]*>.*?</\1>", re.S | re.I)
 _RE_P = re.compile(r"<p[^>]*>(.*?)</p>", re.S | re.I)
 _RE_TAG = re.compile(r"<[^>]+>")

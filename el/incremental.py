@@ -82,7 +82,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from el import blocking
-from el.catalog import HadoopParquetCatalog, commit_json
+from el.catalog import HadoopParquetCatalog, artifact_meta, commit_json
 from el.clustering import clusters_of
 from el.extract import extract_mentions
 from el.pipeline import (
@@ -393,16 +393,17 @@ def incremental_update(
     # persisted models only, checked before anything commits — a delta
     # must NEVER refit (§4.4): delta vectors from a different model
     # would be incomparable with the committed mentions_vec. Missing
-    # artifacts are a hard error.
+    # artifacts are a hard error. Committed means what the fit-once
+    # gate would load (el.catalog.artifact_meta): a torn save refuses.
     mdir = _models_dir(catalog, rc)
-    if not os.path.exists(os.path.join(mdir, "tfidf", "meta.json")):
+    if artifact_meta(os.path.join(mdir, "tfidf")) is None:
         raise FileNotFoundError(
             f"incremental_update requires persisted TF-IDF artifacts under "
             f"{mdir!r} (run the batch pipeline first, or pass rc.model_dir / "
             f"the rc.run_id that fitted them) — refitting on a delta would "
             f"silently break vector comparability"
         )
-    if cfg.use_topics and not os.path.exists(os.path.join(mdir, "topics", "lda")):
+    if cfg.use_topics and artifact_meta(os.path.join(mdir, "topics")) is None:
         raise FileNotFoundError(
             f"incremental_update requires the persisted LDA artifact under "
             f"{mdir!r} when cfg.use_topics is set — refitting on a delta "

@@ -103,8 +103,6 @@ def extract_meta(blobs: DataFrame) -> DataFrame:
 # numpy and IS implemented below. REAL codec formats (jpeg/png/audio)
 # remain environment-blocked: no PIL/opencv in this container; wire
 # `decode_pixels_codec` to the codec when one is present.
-DECODE_IMPLEMENTED = True  # for the synthetic IMG1 format
-REAL_CODEC_AVAILABLE = False
 
 
 def decode_pixels(content) -> np.ndarray:

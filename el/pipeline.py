@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from el import blocking
 from el.extract import extract_mentions
 from el.scoring import ScoringConfig
-from el.tfidf import TfidfModel
 
 
 @dataclass
@@ -264,23 +263,13 @@ def run_pipeline(
     spark,
     pages: DataFrame,
     cfg: PipelineConfig | None = None,
-    tfidf_model: TfidfModel | None = None,
-    topic_model=None,
 ) -> dict:
     """Full batch run without a catalog: ``el.runner.execute`` over
     the stage list, each stage localCheckpointed inside its own
-    timing. Returns {"report": {stage: {"rows", "wall_ms",
-    "resumed"}}, <stage>: DataFrame, ...}.
-
-    tfidf_model/topic_model: persisted models, for cross-run
-    determinism AND to measure the production fit-once path. With a
-    tfidf_model the pair is used as given (topic_model None: no topic
-    blocking); without one both are fitted on this corpus (tests and
-    first runs)."""
+    timing, with models fitted on this corpus in memory (a prefit
+    model dir goes to ``execute`` as ``RunConfig.model_dir``). Returns
+    {"report": {stage: {"rows", "wall_ms", "resumed"}}, <stage>:
+    DataFrame, ...}."""
     from el.runner import RunConfig, execute
 
-    cfg = cfg or PipelineConfig()
-    models = None
-    if tfidf_model is not None:
-        models = (tfidf_model, topic_model if cfg.use_topics else None)
-    return execute(spark, pages, RunConfig(pipeline=cfg), models=models)
+    return execute(spark, pages, RunConfig(pipeline=cfg or PipelineConfig()))

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from el import blocking
-from el.catalog import HadoopParquetCatalog
+from el.catalog import HadoopParquetCatalog, load_or_fit
 from el.clustering import clusters_of
 from el.pipeline import (
     PipelineConfig,
@@ -79,38 +79,36 @@ def _fit_or_load_models(
     rc: RunConfig,
 ):
     """(tfidf, topics or None): loaded from the model dir when its
-    artifacts exist, else fitted on ``mentions`` (and saved when there
-    is a model dir). A corpus with no mentions fits no topic model —
-    the relational stages handle empty inputs, but ml fits do not."""
+    artifacts are committed, else fitted on ``mentions`` (and saved
+    when there is a model dir), through the one fit-once gate
+    (``el.catalog.load_or_fit``). A corpus with no mentions fits no
+    topic model — the relational stages handle empty inputs, but ml
+    fits do not."""
     cfg = rc.pipeline
     mdir = _models_dir(catalog, rc)
-    tfidf_path = mdir and os.path.join(mdir, "tfidf")
-    topic_path = mdir and os.path.join(mdir, "topics")
-    if tfidf_path and os.path.exists(os.path.join(tfidf_path, "meta.json")):
-        tfidf = TfidfModel.load(tfidf_path)
-    else:
-        tfidf = TfidfModel.fit(
+    tfidf = load_or_fit(
+        mdir and os.path.join(mdir, "tfidf"),
+        TfidfModel.load,
+        lambda: TfidfModel.fit(
             mentions, "context", max_fit_docs=cfg.fit_sample_max
-        )
-        if tfidf_path:
-            tfidf.save(tfidf_path)
+        ),
+    )
     topics = None
     if cfg.use_topics:
         from el.topics import TopicModel
 
-        if topic_path and os.path.exists(os.path.join(topic_path, "lda")):
-            topics = TopicModel.load(spark, topic_path)
-        elif not mentions.isEmpty():
-            topics = TopicModel.fit(
+        topics = load_or_fit(
+            mdir and os.path.join(mdir, "topics"),
+            lambda path: TopicModel.load(spark, path),
+            lambda: None if mentions.isEmpty() else TopicModel.fit(
                 spark,
                 mentions,
                 "context",
                 max_iter=15,
                 vocab_size=2048,
                 max_fit_docs=cfg.fit_sample_max,
-            )
-            if topic_path:
-                topics.save(topic_path)
+            ),
+        )
     return tfidf, topics
 
 
@@ -208,19 +206,18 @@ def execute(
     rc: RunConfig,
     catalog: HadoopParquetCatalog | None = None,
     resume: bool = False,
-    models: tuple | None = None,
 ) -> dict:
     """Run ``STAGES`` over ``pages``; returns {"report": {stage:
     {"rows", "wall_ms", "resumed"}}, <stage>: DataFrame, ...}.
 
-    models: prefit (tfidf, topics) to skip ``_fit_or_load_models``.
-    On the catalog path every row count comes from a commit manifest,
-    never from a scan."""
+    Prefit models reach it only through their artifact dir
+    (``rc.model_dir``). On the catalog path every row count comes from
+    a commit manifest, never from a scan."""
     report: dict[str, dict] = {}
 
     @functools.cache
     def get_models():
-        return models or _fit_or_load_models(spark, t["mentions"], catalog, rc)
+        return _fit_or_load_models(spark, t["mentions"], catalog, rc)
 
     t = {"pages": pages, "cfg": rc.pipeline, "models": get_models}
     for name, build in STAGES:

@@ -20,7 +20,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -62,42 +61,25 @@ _FEATURES_SCHEMA = T.StructType(
 )
 
 
-def _features_udf(cfg: ScoringConfig):
-    # JW guard: is_match needs name_sim = w*jw + (1-w)*lev >= t_name,
-    # so with jw <= 1 any row with lev below this gate cannot match
-    # regardless of jw — the expensive JW kernel is skipped there
-    # (jw reported as 0.0; cheap cosines still computed for `score`).
-    jw_gate = (cfg.t_name - cfg.jw_weight) / (1.0 - cfg.jw_weight)
-
-    @F.pandas_udf(_FEATURES_SCHEMA)
-    def feats(
-        a_norm: pd.Series,
-        b_norm: pd.Series,
-        lev_sim: pd.Series,
-        a_idx: pd.Series,
-        a_val: pd.Series,
-        b_idx: pd.Series,
-        b_val: pd.Series,
-        a_topic: pd.Series,
-        b_topic: pd.Series,
-    ) -> pd.DataFrame:
-        n = len(a_norm)
-        lev = lev_sim.to_numpy(dtype=np.float64, na_value=0.0)
-        hot = np.flatnonzero(lev >= jw_gate)
-        jw = np.zeros(n)
-        if hot.size:
-            an = a_norm.fillna("")
-            bn = b_norm.fillna("")
-            jw[hot] = jaro_winkler(
-                an.iloc[hot].tolist(), bn.iloc[hot].tolist()
-            )
-        cos_t = cosine_sparse(
-            a_idx.tolist(), a_val.tolist(), b_idx.tolist(), b_val.tolist()
-        )
-        cos_k = cosine_dense(a_topic.tolist(), b_topic.tolist())
-        return pd.DataFrame({"jw": jw, "cos_tfidf": cos_t, "cos_topic": cos_k})
-
-    return feats
+# The fused feature UDF. Only hot rows (lev_sim >= the jw gate,
+# score_pairs) reach it, so every row gets the JW kernel.
+@F.pandas_udf(_FEATURES_SCHEMA)
+def feats(
+    a_norm: pd.Series,
+    b_norm: pd.Series,
+    a_idx: pd.Series,
+    a_val: pd.Series,
+    b_idx: pd.Series,
+    b_val: pd.Series,
+    a_topic: pd.Series,
+    b_topic: pd.Series,
+) -> pd.DataFrame:
+    jw = jaro_winkler(a_norm.fillna("").tolist(), b_norm.fillna("").tolist())
+    cos_t = cosine_sparse(
+        a_idx.tolist(), a_val.tolist(), b_idx.tolist(), b_val.tolist()
+    )
+    cos_k = cosine_dense(a_topic.tolist(), b_topic.tolist())
+    return pd.DataFrame({"jw": jw, "cos_tfidf": cos_t, "cos_topic": cos_k})
 
 
 def _attach_side(
@@ -182,13 +164,11 @@ def score_pairs(
     hot = _attach_side(hot, mentions, "a", vec_cols_a, broadcast=bc)
     hot = _attach_side(hot, mentions, "b", vec_cols_b, broadcast=bc)
 
-    feats = _features_udf(cfg)
     hot = hot.withColumn(
         "f",
         feats(
             "a_norm",
             "b_norm",
-            "lev_sim",
             F.col("a_tfidf.idx"),
             F.col("a_tfidf.val"),
             F.col("b_tfidf.idx"),

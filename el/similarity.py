@@ -17,12 +17,15 @@ Scale notes:
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from el.catalog import artifact_meta, commit_artifact, load_or_fit
 from el.dedup import cosine_expr
 from el.hashing import splitmix64
 
@@ -389,7 +392,7 @@ def ivf_topk(
 class IvfModel:
     """Persisted IVF coarse quantizer: the fit-once /
     load-everywhere artifact discipline TF-IDF and LDA already follow
-    (`el/runner.py` `_fit_or_load_models`), applied to ANN. Production
+    (`el/catalog.py` `load_or_fit`), applied to ANN. Production
     ann3 calls load centroids from ``_models``-style storage instead
     of re-running the Lloyd DataFrame jobs per query batch — the fit
     is a corpus statistic, not per-query work.
@@ -424,53 +427,27 @@ class IvfModel:
         )
 
     def save(self, path: str) -> None:
-        """Atomic artifact commit (the catalog's marker discipline):
-        centroids.npy is written first, then meta.json lands via
-        ``commit_json`` — the artifact is visible to fit_or_load's
-        meta.json gate only once both files are fully on disk, so a
-        mid-save kill can never leave a loadable-but-corrupt model."""
-        import os
-
-        from el.catalog import commit_json
-
-        os.makedirs(path, exist_ok=True)
-        np.save(os.path.join(path, "centroids.npy"), self.centroids)
-        commit_json(os.path.join(path, "meta.json"), self.meta)
+        """centroids.npy, then the artifact commit (``commit_artifact``)."""
+        commit_artifact(
+            path,
+            lambda: np.save(os.path.join(path, "centroids.npy"), self.centroids),
+            self.meta,
+        )
 
     @classmethod
     def load(cls, path: str) -> "IvfModel":
-        import json
-        import os
-
         cents = np.load(os.path.join(path, "centroids.npy"))
-        with open(os.path.join(path, "meta.json")) as f:
-            meta = json.load(f)
-        return cls(cents, meta)
+        return cls(cents, artifact_meta(path))
 
     @classmethod
     def fit_or_load(cls, df: DataFrame, path: str, **fit_kw) -> "IvfModel":
-        """Load the committed artifact if present, else fit and save —
-        the same idempotent pattern the runner uses for TF-IDF/LDA.
-
-        A loaded artifact must MATCH the requested fit params: meta
-        stores them, and silently serving an 8-centroid quantizer to a
-        caller who asked for 32 would change nprobe behavior/recall
-        with no error. Mismatch raises; delete or re-path to refit."""
-        import os
-
-        if os.path.exists(os.path.join(path, "meta.json")):
-            model = cls.load(path)
-            for k, v in fit_kw.items():
-                if k in model.meta and model.meta[k] != v:
-                    raise ValueError(
-                        f"IVF artifact at {path} was fit with "
-                        f"{k}={model.meta[k]}, but {k}={v} was requested "
-                        "— refusing to silently serve a mismatched model"
-                    )
-            return model
-        model = cls.fit(df, **fit_kw)
-        model.save(path)
-        return model
+        """Load the committed artifact if present, else fit and save,
+        through the one fit-once gate (``el.catalog.load_or_fit``). A
+        loaded artifact must MATCH the requested fit params: serving
+        an 8-centroid quantizer to a caller who asked for 32 would
+        change nprobe behavior/recall with no error, so a mismatch
+        raises."""
+        return load_or_fit(path, cls.load, lambda: cls.fit(df, **fit_kw), fit_kw)
 
     def topk(
         self,

@@ -14,7 +14,19 @@ import os
 import duckdb
 import pandas as pd
 
-from el.schemas import TESTDATA_TABLES
+# Driver testdata tables (FIXTURES.md §B), one parquet file each.
+TESTDATA_TABLES = (
+    "region",
+    "nation",
+    "customer",
+    "supplier",
+    "part",
+    "orders",
+    "lineitem",
+    "events",
+    "documents",
+    "embeddings",
+)
 
 
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:

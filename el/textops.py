@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import functools
 import operator
+import os
 
 import numpy as np
 import pandas as pd
@@ -22,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from el.catalog import artifact_meta, commit_artifact, load_or_fit
 from el.hashing import splitmix64
 
 # distinct-hit stopword lists (order matters: argmax tie-break is the
@@ -32,8 +34,6 @@ STOPWORDS: dict[str, list[str]] = {
     "es": ["el", "los", "las", "y", "de", "que", "en", "un", "una", "por"],
     "de": ["der", "die", "das", "und", "von", "zu", "ist", "mit", "den", "ein"],
 }
-
-LANGS = list(STOPWORDS)
 
 
 def tokens_of(col: Column) -> Column:
@@ -672,10 +672,9 @@ class BigramCountsModel:
     fit-once / load-everywhere discipline TF-IDF, LDA, and IVF already
     follow, applied to the lm1 quality gate. Unlike IVF centroids the
     fit is a DISTRIBUTED table (bounded by min(distinct bigrams,
-    n_buckets^2), never collected), so the artifact is parquet + a
-    meta.json marker, committed with the same tmp+fsync+rename
-    discipline as IvfModel.save — a mid-save kill can never leave a
-    loadable-but-corrupt model.
+    n_buckets^2), never collected), so the artifact payload is
+    parquet, committed like every model artifact
+    (``el.catalog.commit_artifact``).
 
     The model carries its fit params (n_buckets, seed) and SCORES with
     them: scoring with a different seed/bucketing than the fit would
@@ -688,7 +687,6 @@ class BigramCountsModel:
     refit on the same corpus yields the identical table at any
     parallelism level."""
 
-    META = "meta.json"
     DATA = "counts.parquet"
 
     def __init__(self, counts: DataFrame, meta: dict):
@@ -709,51 +707,36 @@ class BigramCountsModel:
         )
 
     def save(self, path: str) -> "BigramCountsModel":
-        """Write counts.parquet first, then land meta.json atomically;
-        load()/fit_or_load() gate on meta.json only. Returns a model
-        re-bound to the persisted table (scoring after save() reads
-        the committed parquet, not the live fit lineage)."""
-        import os
-
-        from el.catalog import commit_json
-
-        os.makedirs(path, exist_ok=True)
+        """counts.parquet, then the artifact commit
+        (``el.catalog.commit_artifact``). Returns a model re-bound to
+        the persisted table (scoring after save() reads the committed
+        parquet, not the live fit lineage)."""
         data = os.path.join(path, self.DATA)
-        self.counts.write.mode("overwrite").parquet(data)
-        commit_json(os.path.join(path, self.META), self.meta)
+        commit_artifact(
+            path, lambda: self.counts.write.mode("overwrite").parquet(data),
+            self.meta,
+        )
         spark = self.counts.sparkSession
         return BigramCountsModel(spark.read.parquet(data), dict(self.meta))
 
     @classmethod
     def load(cls, spark, path: str) -> "BigramCountsModel":
-        import json
-        import os
-
-        with open(os.path.join(path, cls.META)) as f:
-            meta = json.load(f)
-        return cls(spark.read.parquet(os.path.join(path, cls.DATA)), meta)
+        data = spark.read.parquet(os.path.join(path, cls.DATA))
+        return cls(data, artifact_meta(path))
 
     @classmethod
     def fit_or_load(
         cls, spark, df: DataFrame, path: str, **fit_kw
     ) -> "BigramCountsModel":
-        """Load the committed artifact if present, else fit and save.
-        A loaded artifact must MATCH the requested fit params (meta
-        stores them); mismatch raises — silently scoring against a
-        different seed/bucketing would mark the whole corpus unseen."""
-        import os
-
-        if os.path.exists(os.path.join(path, cls.META)):
-            model = cls.load(spark, path)
-            for k, v in fit_kw.items():
-                if k in model.meta and model.meta[k] != v:
-                    raise ValueError(
-                        f"bigram-counts artifact at {path} was fit with "
-                        f"{k}={model.meta[k]}, but {k}={v} was requested "
-                        "— refusing to silently serve a mismatched model"
-                    )
-            return model
-        return cls.fit(df, **fit_kw).save(path)
+        """Load the committed artifact if present, else fit and save,
+        through the one fit-once gate (``el.catalog.load_or_fit``).
+        A loaded artifact must MATCH the requested fit params;
+        mismatch raises — silently scoring against a different
+        seed/bucketing would mark the whole corpus unseen."""
+        return load_or_fit(
+            path, lambda p: cls.load(spark, p),
+            lambda: cls.fit(df, **fit_kw), fit_kw,
+        )
 
     def score(
         self,

@@ -16,7 +16,6 @@ same driver budget as the test fixture.
 
 from __future__ import annotations
 
-import json
 import os
 import re
 
@@ -26,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from el.catalog import commit_json
+from el.catalog import artifact_meta, commit_artifact
 from el.hashing import fnv1a_tokens
 
 DIM = 1 << 18
@@ -119,22 +118,17 @@ class TfidfModel:
 
     # -- persistence --------------------------------------------------
     def save(self, path: str) -> None:
-        """idf.npy first, then meta.json through ``commit_json``: the
-        runner loads the artifact whenever meta.json exists, so a
-        killed save must leave no meta.json at all."""
-        os.makedirs(path, exist_ok=True)
-        np.save(os.path.join(path, "idf.npy"), self.idf)
-        commit_json(
-            os.path.join(path, "meta.json"),
+        """idf.npy, then the artifact commit (``commit_artifact``)."""
+        commit_artifact(
+            path,
+            lambda: np.save(os.path.join(path, "idf.npy"), self.idf),
             {"n_docs": self.n_docs, "dim": DIM, "version": 1},
         )
 
     @classmethod
     def load(cls, path: str) -> "TfidfModel":
         idf = np.load(os.path.join(path, "idf.npy"))
-        with open(os.path.join(path, "meta.json")) as f:
-            meta = json.load(f)
-        return cls(idf, meta["n_docs"])
+        return cls(idf, artifact_meta(path)["n_docs"])
 
     # -- transform ----------------------------------------------------
     def vectorize_batch(self, texts: pd.Series) -> pd.DataFrame:

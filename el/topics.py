@@ -29,6 +29,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from el.catalog import commit_artifact
 from el.schemas import BLOCK_KEYS
 
 
@@ -162,8 +163,13 @@ class TopicModel:
     # -- persistence (fit-once artifact; SURVEY.md §4.4) ------------------
 
     def save(self, path: str) -> None:
-        self.cv_model.write().overwrite().save(f"{path}/cv")
-        self.lda_model.write().overwrite().save(f"{path}/lda")
+        """cv and lda, then the artifact commit (``commit_artifact``)."""
+
+        def payload():
+            self.cv_model.write().overwrite().save(f"{path}/cv")
+            self.lda_model.write().overwrite().save(f"{path}/lda")
+
+        commit_artifact(path, payload, {"k": self.k, "version": 1})
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "TopicModel":

@@ -70,19 +70,22 @@ def test_scoring_udf_runs_once(spark):
     assert len(scoring) == 1, scoring
 
 
-def test_run_pipeline_execution_count(spark, monkeypatch):
-    """Pins the Spark SQL executions of one run_pipeline with a prefit
-    TF-IDF model and topics off: one eager checkpoint per stage, whose
-    row count is observed in flight (no count() after it), plus CC's
-    rounds + 1 checkpoints inside the clusters stage."""
+def test_run_pipeline_execution_count(spark, monkeypatch, tmp_path):
+    """Pins the Spark SQL executions of one catalog-less run with a
+    prefit TF-IDF artifact in its model dir and topics off: one eager
+    checkpoint per stage, whose row count is observed in flight (no
+    count() after it), plus CC's rounds + 1 checkpoints inside the
+    clusters stage. Loading the artifact runs no Spark job."""
     import el.clustering as clustering
     from el.pipeline import mentions_stage
-    from el.runner import STAGES
+    from el.runner import STAGES, RunConfig, execute
     from el.tfidf import TfidfModel
 
     pages = gen_web_pages(spark, 200).localCheckpoint()
     cfg = PipelineConfig(use_topics=False)
-    tfidf = TfidfModel.fit(mentions_stage(pages, cfg), "context")
+    TfidfModel.fit(mentions_stage(pages, cfg), "context").save(
+        str(tmp_path / "tfidf")
+    )
     rounds = []
     signature = clustering._signature
 
@@ -100,11 +103,27 @@ def test_run_pipeline_execution_count(spark, monkeypatch):
         return {xs.apply(i).executionId() for i in range(xs.size())}
 
     last = max(execution_ids(), default=-1)
-    run_pipeline(spark, pages, cfg, tfidf_model=tfidf)
+    execute(spark, pages, RunConfig(pipeline=cfg, model_dir=str(tmp_path)))
     new = [i for i in execution_ids() if i > last]
 
     assert rounds and len(STAGES) == 7
     assert len(new) == len(STAGES) + len(rounds) + 1
+
+
+def test_bench_pipeline_smoke(spark, monkeypatch, tmp_path):
+    """bench.py's pipeline entries at its 600-page floor: the model
+    fit lands in a model dir and the executor loads it from there."""
+    import bench
+
+    monkeypatch.setattr(bench, "_RUN_SCRATCH", [str(tmp_path)])
+    times, info = bench.bench_pipeline(spark, 0.0)
+    keys = {
+        "gen", "hygiene", "refit", "extract", "vec_block",
+        "extract_block_fit", "pairs", "score", "cluster",
+    }
+    assert set(times) == {f"pipeline_{k}" for k in keys}
+    assert all(v >= 0 for v in times.values()), times
+    assert info["n_pages"] == 600 and info["n_pairs"] > 0, info
 
 
 def test_pairwise_f1(spark, e2e):

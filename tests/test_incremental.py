@@ -279,8 +279,9 @@ def test_incremental_recaps_hot_blocks(spark, tmp_path_factory):
     assert worst <= cap_rc.pipeline.cap_k, f"pair-gen block grew to {worst}"
 
 
+@pytest.mark.parametrize("block_skew", ["cap", "salt"])
 def test_incremental_superset_of_batch_under_binding_cap(
-    spark, tmp_path_factory
+    spark, tmp_path_factory, block_skew
 ):
     """r5 equivalence guarantee when the cap BINDS: the incremental
     pair set must CONTAIN every pair the batch run generates — the
@@ -289,7 +290,9 @@ def test_incremental_superset_of_batch_under_binding_cap(
     (Before r5 the committed table was capped, so members dropped by
     the base run were lost to later re-caps and batch pairs went
     missing; this test fails on that design.) Matched batch pairs must
-    also land in one incremental cluster each."""
+    also land in one incremental cluster each. Under "salt" the hot
+    blocks split into sub-blocks instead, dropping no member, and the
+    touched-blocks restriction commutes with it the same way."""
     import os
 
     from el.incremental import _read_with_deltas
@@ -298,7 +301,9 @@ def test_incremental_superset_of_batch_under_binding_cap(
     cap_rc = RunConfig(
         run_id="cap2",
         n_score_chunks=2,
-        pipeline=PipelineConfig(use_lsh=False, use_topics=False, cap_k=8),
+        pipeline=PipelineConfig(
+            use_lsh=False, use_topics=False, cap_k=8, block_skew=block_skew
+        ),
     )
     all_pages = gen_web_pages(spark, 240).localCheckpoint()
     split = F.pmod(F.xxhash64("url"), F.lit(2)) < 1
@@ -330,6 +335,13 @@ def test_incremental_superset_of_batch_under_binding_cap(
         .groupBy("strategy", "block_key").count()
     )
     assert raw_sizes.where(F.col("count") > 8).count() > 0
+    if block_skew == "salt":
+        from el.pipeline import skew_capped_keys
+
+        view = _read_with_deltas(spark, inc_cat, "block_keys")
+        salted, stats = skew_capped_keys(view, cap_rc.pipeline)
+        assert stats.agg(F.sum("n_dropped")).collect()[0][0] == 0
+        assert salted.count() == view.count()
     missing = batch_pairs - inc_pairs
     assert not missing, (
         f"incremental lost {len(missing)} batch pairs under a binding "

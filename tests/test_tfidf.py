@@ -128,3 +128,43 @@ def test_killed_save_leaves_no_meta_and_runner_refits(
     loaded = TfidfModel.load(str(tmp_path / "tfidf"))
     assert loaded.n_docs == tfidf.n_docs
     assert np.array_equal(loaded.idf, tfidf.idf)
+
+
+def test_torn_lda_artifact_refits_and_absorb_refuses(spark, tmp_path):
+    """An LDA save killed after its payload started (here: lda/data
+    gone, no meta.json) is not a committed artifact: the absorb
+    refuses it before any delta table commits, and the runner refits
+    and commits a loadable one instead of failing on the torn dir."""
+    import shutil
+
+    from el.catalog import HadoopParquetCatalog
+    from el.fixtures import gen_web_pages
+    from el.incremental import incremental_update
+    from el.pipeline import PipelineConfig, mentions_stage
+    from el.runner import RunConfig, _fit_or_load_models
+    from el.topics import TopicModel
+
+    rc = RunConfig(
+        pipeline=PipelineConfig(use_topics=True),
+        model_dir=str(tmp_path / "models"),
+    )
+    pages = gen_web_pages(spark, 60).localCheckpoint()
+    mentions = mentions_stage(pages, rc.pipeline).localCheckpoint()
+    _fit_or_load_models(spark, mentions, None, rc)
+    topics = tmp_path / "models" / "topics"
+    shutil.rmtree(topics / "lda" / "data")
+    (topics / "meta.json").unlink(missing_ok=True)
+
+    cat = HadoopParquetCatalog(str(tmp_path / "cat"))
+    with pytest.raises(FileNotFoundError, match="persisted LDA"):
+        incremental_update(spark, pages, cat, rc)
+    assert not [t for t in cat.tables() if "_delta_" in t]
+
+    _, refit = _fit_or_load_models(spark, mentions, None, rc)
+    assert (topics / "meta.json").exists()
+    loaded = TopicModel.load(spark, str(topics))
+    assert loaded.k == refit.k
+    assert np.array_equal(
+        loaded.lda_model.topicsMatrix().toArray(),
+        refit.lda_model.topicsMatrix().toArray(),
+    )
