@@ -264,11 +264,16 @@ _RUN_SCRATCH: list[str] = []
 
 def _run_scratch_dir() -> str:
     """One private scratch dir per bench process (mode 0700 from
-    mkdtemp) — model artifacts never cross runs or users."""
+    mkdtemp), removed at interpreter exit — model artifacts never
+    cross runs or users, and none outlive the run."""
+    import atexit
+    import shutil
     import tempfile
 
     if not _RUN_SCRATCH:
-        _RUN_SCRATCH.append(tempfile.mkdtemp(prefix="el_bench_models_"))
+        d = tempfile.mkdtemp(prefix="el_bench_models_")
+        atexit.register(shutil.rmtree, d, True)
+        _RUN_SCRATCH.append(d)
     return _RUN_SCRATCH[0]
 
 

@@ -23,7 +23,8 @@ Layout:
     el.pipeline    ingest gate, extraction and blocking stage operators
     el.runner      the stage list and its one executor (localCheckpoint
                    or catalog commit per stage; resume)
-    el.catalog     table-format layer (parquet+manifest, snapshots)
+    el.catalog     table-format layer (immutable parquet version dirs,
+                   one atomic manifest commit per version)
     el.evaluate    pairwise precision/recall/F1 gate
     el.dedup       corpus dedup ops (exact, MinHash-LSH, SimHash, ...)
     el.similarity  embedding ANN (brute-force + LSH-bucketed top-k)

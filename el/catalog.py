@@ -2,18 +2,22 @@
 resumability (SURVEY.md §1.4, BASELINE.json north_rule "checkpoints
 ... with per-partition lineage and metrics for resumability").
 
-``HadoopParquetCatalog``: plain parquet directories plus an explicit
-JSON manifest per commit. A table commit is ONE Spark job: write to
-``<table>.__tmp_<run_id>`` while ``DataFrame.observe`` gathers the
-table's row digest -> fsync the manifest (digest, per-file rows +
-bytes) -> atomic ``os.rename`` into place, archiving the displaced
-version as a SNAPSHOT (``<table>.__vNNNN``, bounded by
-``keep_versions``). Readers only ever see fully-committed tables; a
-crashed writer leaves a ``__tmp`` dir that the next run clears, and a
-crash mid-swap falls back to the newest snapshot. ``read(version=k)``
-time-travels; ``rollback(k)`` is a pointer move. This *implements*
-Iceberg's commit/snapshot/lineage semantics with public filesystem
-primitives.
+``HadoopParquetCatalog``: plain parquet files plus explicit JSON
+manifests, committed the way Iceberg commits: new files first, then
+one atomic metadata swap. Each table is a directory of immutable
+version dirs ``vNNNN``, each holding one version's parquet files and
+its manifest, beside the table's live manifest. A table commit is ONE
+Spark job: the parquet write into a fresh version dir while
+``DataFrame.observe`` gathers the table's row digest, then the
+version's manifest and last the live manifest, each through
+``commit_json``. A writer killed before that last commit leaves the
+previous version live; its half-written dir is pruned by the next
+write, which keeps the live version plus the newest ``KEEP_VERSIONS``
+other committed ones. No file is ever moved, so a DataFrame read from
+a version keeps working while that version is retained.
+``read(version=k)`` time-travels; ``rollback(k)`` is one manifest
+commit. This *implements* Iceberg's commit/snapshot/lineage semantics
+with public filesystem primitives.
 
 The manifest IS the lineage record: one row per output partition file
 (rows, bytes), plus stage wall-clock, total rows and the row digest
@@ -23,8 +27,7 @@ parallelism) — queried back as the ``_metrics`` table for
 observability and used by the runner's resume logic (el.runner);
 ``verify`` recomputes the digest over the committed files. It also
 records the table's Spark schema, so ``read`` scans with it instead of
-running a footer job to infer it (manifests without one still read by
-inference).
+running a footer job to infer it.
 """
 
 from __future__ import annotations
@@ -125,45 +128,39 @@ def _digest_value(r) -> dict:
     return {"rows": int(r["rows"]), "xor": int(r["xor"]), "sum": str(r["sum"])}
 
 
+# Each table is a dir of immutable version dirs ``vNNNN`` (parquet
+# files plus that version's manifest) and one live manifest, the
+# table's only commit point. Only this module knows the layout.
+MANIFEST = "_MANIFEST.json"
+# previous committed versions kept as time-travel targets besides the
+# live one (Iceberg keeps snapshots until expired; here a bounded set)
+KEEP_VERSIONS = 2
+
+
+def _load(d: str) -> dict | None:
+    """The manifest committed in dir ``d``, or None."""
+    try:
+        with open(os.path.join(d, MANIFEST)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
 @dataclass
 class HadoopParquetCatalog:
     root: str
-    # snapshot retention: how many PREVIOUS committed versions to keep
-    # as time-travel targets (Iceberg keeps snapshots until expired;
-    # here a bounded archive — version k readable via read(version=k))
-    keep_versions: int = 2
 
-    def _dir(self, table: str) -> str:
-        return os.path.join(self.root, table)
+    def _dir(self, table: str, version: int | None = None) -> str:
+        d = os.path.join(self.root, table)
+        return d if version is None else os.path.join(d, f"v{version:04d}")
 
-    def _version_dir(self, table: str, version: int) -> str:
-        return os.path.join(self.root, f"{table}.__v{version:04d}")
-
-    def _archives(self, table: str) -> list[tuple[int, str]]:
-        """Archived (version, dir) snapshots for ``table``, ascending."""
-        if not os.path.isdir(self.root):
-            return []
-        out = []
-        prefix = f"{table}.__v"
-        for name in os.listdir(self.root):
-            if name.startswith(prefix) and name[len(prefix) :].isdigit():
-                d = os.path.join(self.root, name)
-                if os.path.exists(os.path.join(d, "_MANIFEST.json")):
-                    out.append((int(name[len(prefix) :]), d))
-        return sorted(out)
-
-    def _resolved_dir(self, table: str) -> str | None:
-        """Committed directory for ``table``: the live dir, else the
-        newest archived snapshot if a crash mid-swap left only it."""
+    def _all_versions(self, table: str) -> list[int]:
+        """Every version dir of ``table``, crashed ones included."""
         d = self._dir(table)
-        if os.path.exists(os.path.join(d, "_MANIFEST.json")):
-            return d
-        arch = self._archives(table)
-        return arch[-1][1] if arch else None
-
-    def _manifest_path(self, table: str) -> str:
-        d = self._resolved_dir(table)
-        return os.path.join(d or self._dir(table), "_MANIFEST.json")
+        names = os.listdir(d) if os.path.isdir(d) else []
+        return sorted(
+            int(n[1:]) for n in names if n[:1] == "v" and n[1:].isdigit()
+        )
 
     # -- commits ---------------------------------------------------------
 
@@ -178,36 +175,16 @@ class HadoopParquetCatalog:
     ) -> dict:
         """Atomic commit of ``df`` as ``table``; returns the manifest.
 
-        Write-to-temp + manifest + rename: the table either exists
-        fully committed (manifest present, with the row digest
-        observed during the write) or not at all. ``extra`` entries
-        land inside the manifest and commit atomically WITH the data —
-        Iceberg snapshot-property shape, used by delta compaction to
-        carry its watermark (a separate marker file would reintroduce
-        the torn-state window the manifest rename exists to close)."""
-        os.makedirs(self.root, exist_ok=True)
-        final = self._dir(table)
-        tmp = os.path.join(self.root, f"{table}.__tmp_{run_id}")
-        for name in os.listdir(self.root):
-            # stale in-flight dirs from ANY run (incl. crashed ones)
-            if name.startswith(f"{table}.__tmp_"):
-                shutil.rmtree(os.path.join(self.root, name))
-        # a previous writer died between the two swap renames: restore
-        # the newest snapshot as live before anything else can prune it
-        if not os.path.exists(os.path.join(final, "_MANIFEST.json")):
-            arch = self._archives(table)
-            if arch:
-                os.rename(arch[-1][1], final)
-
-        prev = self.manifest(table)
-        # strictly increasing across rollbacks: a rolled-back live dir
-        # can carry an older version than an archived snapshot
-        version = (
-            max([prev.get("version", 0)] + [n for n, _ in self._archives(table)])
-            + 1
-            if prev
-            else 0
-        )
+        The parquet files land in a fresh version dir, numbered past
+        every existing one, with the row digest observed during the
+        write; then the version's manifest commits, then the table's
+        live manifest, the one commit point. Earlier versions are never
+        moved, so a plan reading one keeps working. ``extra`` entries
+        land inside the manifest and commit atomically WITH the data
+        (Iceberg snapshot-property shape, used by delta compaction to
+        carry its watermark)."""
+        version = max(self._all_versions(table), default=-1) + 1
+        vdir = self._dir(table, version)
 
         # the digest is observed on the write itself: one Spark job.
         # Per-file rows come from the parquet FOOTERS and bytes from
@@ -217,25 +194,24 @@ class HadoopParquetCatalog:
         writer = df.observe(obs, *_digest(df)).write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
+        writer.parquet(vdir)
         digest = _digest_value(obs.get)
         wall_ms = int((time.time() - t0) * 1000)
 
         import pyarrow.parquet as pq
 
         files = []
-        for dirpath, _, names in os.walk(tmp):
+        for dirpath, _, names in os.walk(vdir):
             for name in sorted(names):
                 if name.endswith(".parquet"):
                     fp = os.path.join(dirpath, name)
                     files.append(
                         {
-                            "path": os.path.relpath(fp, tmp),
+                            "path": os.path.relpath(fp, vdir),
                             "rows": pq.ParquetFile(fp).metadata.num_rows,
                             "bytes": os.path.getsize(fp),
                         }
                     )
-        total_rows = sum(f["rows"] for f in files)
         manifest = {
             "table": table,
             "stage": stage or table,
@@ -244,144 +220,110 @@ class HadoopParquetCatalog:
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "wall_ms": wall_ms,
             "n_files": len(files),
-            "total_rows": total_rows,
+            "total_rows": sum(f["rows"] for f in files),
             "digest": digest,
             "schema": df.schema.jsonValue(),
             "files": files,
             **(extra or {}),
         }
-        commit_json(os.path.join(tmp, "_MANIFEST.json"), manifest)
+        commit_json(os.path.join(vdir, MANIFEST), manifest)
+        commit_json(os.path.join(self._dir(table), MANIFEST), manifest)
 
-        # Snapshot swap with no destroy-before-commit window
-        # (Iceberg-style snapshots): the
-        # previous committed version is renamed to its ARCHIVE slot
-        # <table>.__vNNNN (not deleted) before the new one renames in;
-        # snapshots beyond keep_versions are pruned only afterwards. A
-        # writer dying between the two renames leaves the newest
-        # archive intact, exists()/read()/manifest() fall back to it,
-        # and the next write() restores it — a reader never observes
-        # "no committed version where one existed". Archived snapshots
-        # are time-travel targets: read(version=k) / rollback(k).
-        if prev is not None:
-            os.rename(final, self._version_dir(table, prev.get("version", 0)))
-        os.rename(tmp, final)
-        for n, d in self._archives(table)[: -self.keep_versions or None]:
-            shutil.rmtree(d)
+        # prune after the commit: keep the live version and the newest
+        # KEEP_VERSIONS other committed ones; crashed dirs go too
+        others = [n for n in self.versions(table) if n != version]
+        keep = others[-KEEP_VERSIONS:]
+        for n in self._all_versions(table):
+            if n != version and n not in keep:
+                shutil.rmtree(self._dir(table, n), ignore_errors=True)
         return manifest
 
     # -- reads -----------------------------------------------------------
 
     def tables(self, prefix: str = "") -> list[str]:
-        """Sorted names of the live committed tables starting with
-        ``prefix``: a directory with a manifest, never an in-flight
-        ``.__tmp_*`` or archived ``.__v*`` one."""
+        """Sorted names of the tables starting with ``prefix`` that
+        have a live manifest."""
         if not os.path.isdir(self.root):
             return []
         return sorted(
             name
             for name in os.listdir(self.root)
-            if name.startswith(prefix)
-            and ".__" not in name
-            and os.path.exists(os.path.join(self._dir(name), "_MANIFEST.json"))
+            if name.startswith(prefix) and self.exists(name)
         )
 
     def exists(self, table: str) -> bool:
-        return os.path.exists(self._manifest_path(table))
+        return os.path.exists(os.path.join(self._dir(table), MANIFEST))
 
     def manifest(self, table: str) -> dict | None:
-        p = self._manifest_path(table)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
+        return _load(self._dir(table))
 
     def read(
         self, spark: SparkSession, table: str, version: int | None = None
     ) -> DataFrame:
-        """Committed table scan; ``version=k`` time-travels to an
-        archived snapshot (Iceberg ``VERSION AS OF`` equivalent —
-        bounded by ``keep_versions``)."""
-        if version is not None:
-            cur = self.manifest(table)
-            if cur is not None and cur.get("version", 0) == version:
-                return self._scan(spark, [self._resolved_dir(table)])
-            for n, d in self._archives(table):
-                if n == version:
-                    return self._scan(spark, [d])
-            raise FileNotFoundError(
-                f"table {table!r} has no retained snapshot v{version} "
-                f"(keep_versions={self.keep_versions}; retained: "
-                f"{self.versions(table)})"
-            )
-        return self.read_all(spark, [table])
+        """Committed table scan; ``version=k`` time-travels to a
+        retained version (Iceberg ``VERSION AS OF`` equivalent)."""
+        if version is None:
+            return self.read_all(spark, [table])
+        return self._scan(spark, [(table, self._retained(table, version))])
 
     def read_all(self, spark: SparkSession, tables: list[str]) -> DataFrame:
-        """One scan over several committed tables of one schema (the
-        runner's score chunks, a merge-on-read view's base and
-        deltas)."""
+        """One scan over the live versions of several committed tables
+        of one schema (the runner's score chunks, a merge-on-read
+        view's base and deltas)."""
         if not tables:
             raise FileNotFoundError(f"no tables to read under {self.root}")
-        dirs = []
+        live = []
         for t in tables:
-            d = self._resolved_dir(t)
-            if d is None:
+            m = self.manifest(t)
+            if m is None:
                 raise FileNotFoundError(
                     f"table {t!r} has no committed manifest under {self.root}"
                 )
-            dirs.append(d)
-        return self._scan(spark, dirs)
+            live.append((t, m))
+        return self._scan(spark, live)
 
-    @staticmethod
-    def _scan(spark: SparkSession, dirs: list[str]) -> DataFrame:
-        """Parquet scan of committed dirs with the schema their first
-        manifest recorded, so no footer job infers it; a manifest
-        without one reads by inference."""
-        with open(os.path.join(dirs[0], "_MANIFEST.json")) as f:
-            schema = json.load(f).get("schema")
-        reader = spark.read
-        if schema is not None:
-            reader = reader.schema(StructType.fromJson(schema))
-        return reader.parquet(*dirs)
+    def _scan(
+        self, spark: SparkSession, live: list[tuple[str, dict]]
+    ) -> DataFrame:
+        """Parquet scan of (table, manifest) versions with the schema
+        the first manifest recorded, so no footer job infers it."""
+        schema = StructType.fromJson(live[0][1]["schema"])
+        dirs = [self._dir(t, m["version"]) for t, m in live]
+        return spark.read.schema(schema).parquet(*dirs)
 
     def verify(self, spark: SparkSession, table: str) -> bool:
         """Whether the committed files of ``table`` still hold the rows
-        its manifest's digest recorded (one scan); ``False`` for a
-        manifest written before digests were recorded."""
+        its manifest's digest recorded (one scan)."""
         df = self.read(spark, table)
         return _digest_value(df.agg(*_digest(df)).first()) == (
-            self.manifest(table).get("digest")
+            self.manifest(table)["digest"]
         )
 
     def versions(self, table: str) -> list[int]:
-        """Readable snapshot versions, ascending (archives + live)."""
-        out = [n for n, _ in self._archives(table)]
-        m = self.manifest(table)
-        if m is not None:
-            out.append(m.get("version", 0))
-        return sorted(set(out))
+        """Committed version dirs of ``table``, ascending."""
+        return [
+            n for n in self._all_versions(table)
+            if os.path.exists(os.path.join(self._dir(table, n), MANIFEST))
+        ]
 
-    def rollback(self, table: str, version: int) -> dict:
-        """Restore an archived snapshot as the live table (Iceberg
-        rollback-to-snapshot equivalent: a pointer move, no data
-        copy). The displaced live version is archived in its own slot,
-        so rollback is itself reversible within keep_versions."""
-        cur = self.manifest(table)
-        if cur is not None and cur.get("version", 0) == version:
-            return cur
-        target = None
-        for n, d in self._archives(table):
-            if n == version:
-                target = d
-        if target is None:
+    def _retained(self, table: str, version: int) -> dict:
+        """The manifest of ``table``'s retained version ``version``."""
+        m = _load(self._dir(table, version))
+        if m is None:
             raise FileNotFoundError(
                 f"table {table!r} has no retained snapshot v{version} "
                 f"(retained: {self.versions(table)})"
             )
-        final = self._dir(table)
-        if cur is not None:
-            os.rename(final, self._version_dir(table, cur.get("version", 0)))
-        os.rename(target, final)
-        return self.manifest(table)
+        return m
+
+    def rollback(self, table: str, version: int) -> dict:
+        """Make a retained version live again (Iceberg
+        rollback-to-snapshot equivalent: one manifest commit, no data
+        moved). The displaced version stays retained, so rollback is
+        itself reversible."""
+        m = self._retained(table, version)
+        commit_json(os.path.join(self._dir(table), MANIFEST), m)
+        return m
 
     def committed(self, table: str, run_id: str | None = None) -> bool:
         m = self.manifest(table)
@@ -390,16 +332,15 @@ class HadoopParquetCatalog:
         return run_id is None or m["run_id"] == run_id
 
     def drop(self, table: str) -> None:
-        """Remove ``table`` and all of its snapshots/tmp dirs. Used by
-        delta compaction to garbage-collect folded delta tables; safe
-        to re-run (missing dirs are fine) and safe to crash mid-way —
-        callers only drop tables a committed watermark already made
-        invisible, so a partial drop is just unreclaimed space."""
-        if not os.path.isdir(self.root):
-            return
-        for name in os.listdir(self.root):
-            if name == table or name.startswith(f"{table}.__"):
-                shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
+        """Remove ``table`` with all of its versions. Used by delta
+        compaction to garbage-collect folded delta tables; safe to
+        re-run and safe to crash mid-way — callers only drop tables a
+        committed watermark already made invisible, so a partial drop
+        is just unreclaimed space. The live manifest goes first, so a
+        partial drop is never read as a table."""
+        if self.exists(table):
+            os.remove(os.path.join(self._dir(table), MANIFEST))
+        shutil.rmtree(self._dir(table), ignore_errors=True)
 
     # -- metrics surface -------------------------------------------------
 

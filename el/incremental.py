@@ -48,8 +48,8 @@ rename) only AFTER every table write of the batch has committed.
 deltas, and the ingest anti-join reads mentions through that view — so
 a crash anywhere mid-batch leaves the whole batch invisible (its
 block keys included), the rerun recomputes it from scratch, and
-orphan delta dirs from the crashed attempt are simply overwritten
-(same batch index). Clusters is the only table a batch rewrites; a
+orphan delta tables from the crashed attempt are simply committed
+again (same batch index). Clusters is the only table a batch rewrites; a
 crash after that rewrite leaves it holding the unmarked batch until
 the rerun rewrites it again; a replay (below) in between leaves it
 so and reports its ``total_mentions``.
@@ -150,7 +150,7 @@ def _wm_table(base: str) -> str:
 def _compacted_through(catalog: HadoopParquetCatalog, base: str) -> int:
     """Last batch index folded into ``base`` by compaction (-1 if
     never compacted). Lives INSIDE the base table's manifest, so the
-    watermark and the rewritten data commit in one atomic rename —
+    watermark and the rewritten data commit in one manifest commit —
     a reader can never see the folded rows in both places."""
     m = catalog.manifest(_wm_table(base))
     return -1 if m is None else m.get("compacted_through", -1)
@@ -226,7 +226,7 @@ def compact_deltas(
     1. read base ∪ unfolded deltas (the normal merge-on-read view);
     2. atomically commit it as the new base version with
        ``compacted_through = <last folded batch>`` INSIDE the manifest
-       — data and watermark become visible in the same rename, so the
+       — data and watermark become visible in the same commit, so the
        folded rows are never readable twice;
     3. only then drop the folded delta tables. A crash before (3)
        leaves dirs that the watermark already made invisible; the next
@@ -440,12 +440,10 @@ def incremental_update(
             "clusters": catalog.read(spark, "clusters"),
         }
 
-    # Every committed table read here is append-only and scanned
-    # lazily: the absorb adds this batch's delta tables, which stay
-    # outside every view until the marker lands, and rewrites only
-    # clusters, which nothing below reads, so no plan references files
-    # a rename replaces, and no absorb materializes the corpus. The
-    # marker-gated key view hides the keys of a crashed batch.
+    # Every committed table read here is scanned lazily: the absorb
+    # adds this batch's delta tables, which stay outside every view
+    # until the marker lands, so no absorb materializes the corpus.
+    # The marker-gated key view hides the keys of a crashed batch.
     old_mentions = _read_with_deltas(spark, catalog, "mentions")
     old_keys = _read_with_deltas(spark, catalog, "block_keys")
     old_scored = _read_with_deltas(spark, catalog, "scored_pairs")
@@ -494,8 +492,7 @@ def incremental_update(
             f"vector attach would silently drop pairs; batch NOT marked "
             f"committed"
         )
-    # append-only table: lazy scan (never overwritten, so no rename
-    # hazard; materializing it would be an O(corpus) job per batch)
+    # lazy scan: materializing it would be an O(corpus) job per batch
     old_vec = _read_with_deltas(spark, catalog, "mentions_vec")
     all_vec = old_vec.unionByName(new_vec)
 
@@ -590,7 +587,7 @@ def forget_urls(
     Idempotent and crash-ordered: tombstones commit FIRST (they only
     hide rows), then clusters — a crash between writes leaves a state
     where re-running the same forget_urls call completes the repair;
-    every write is the catalog's atomic tmp+rename commit.
+    every write is one atomic catalog commit.
 
     Returns a report dict; read the repaired clusters back via
     ``catalog.read(spark, "clusters")``."""
@@ -609,11 +606,9 @@ def forget_urls(
     )
 
     # 1. tombstones first, urls then mention ids (idempotent union
-    # with prior forget calls). Each union reads the table its write
-    # replaces, with no checkpoint: the write's parquet job runs the
-    # plan to completion before the commit renames the new table into
-    # place, and nothing reads these plans afterwards. Each count is
-    # observed inside its commit.
+    # with prior forget calls). Each union reads the version its write
+    # supersedes, with no checkpoint: a commit writes a new version
+    # and moves no file. Each count is observed inside its commit.
     def tombstone(table: str, key: str, df: DataFrame) -> int:
         df, rows = _observed_rows(df)
         if catalog.exists(table):

@@ -72,9 +72,10 @@ class PipelineConfig:
     c4_min_sentences: int = 3
 
 
-def dedup_latest(pages: DataFrame) -> DataFrame:
-    """P4/W3: latest-wins per url (re-crawls), total order tie-break."""
-    w = Window.partitionBy("url").orderBy(
+def dedup_latest(pages: DataFrame, key: str = "url") -> DataFrame:
+    """P4/W3: latest-wins per ``key`` (re-crawls), total order
+    tie-break."""
+    w = Window.partitionBy(key).orderBy(
         F.col("warc_ts").desc(), F.xxhash64("html").asc()
     )
     return (
@@ -134,15 +135,9 @@ def hygiene_stage(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
             .withColumn("text", clean)
         )
     if cfg.canonical_url_dedup:
-        w = Window.partitionBy("_curl").orderBy(
-            F.col("warc_ts").desc(), F.xxhash64("html").asc()
-        )
-        out = (
-            out.withColumn("_curl", canonicalize_url(F.col("url")))
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn", "_curl")
-        )
+        out = dedup_latest(
+            out.withColumn("_curl", canonicalize_url(F.col("url"))), "_curl"
+        ).drop("_curl")
     if (
         cfg.min_distinct_word_ratio is not None
         or cfg.max_dup_2gram is not None

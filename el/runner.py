@@ -17,10 +17,11 @@ so each report entry holds exactly its own work:
 The scoring stage — the expensive one — is additionally chunked on
 the catalog path into ``n_score_chunks`` deterministic hash buckets of
 the pair set (``pmod(xxhash64(a_id, b_id), K)``); each chunk commits
-independently, so a killed run resumes mid-stage, skipping completed
-chunks and scoring only the remainder (pair membership in a chunk is a
-pure function of the pair ids, so a resume scores exactly the
-not-yet-done pairs).
+independently, so a killed run resumes mid-stage, skipping the chunks
+it committed with the same K and scoring only the remainder (pair
+membership in a chunk is a pure function of the pair ids and K, so a
+resume scores exactly the not-yet-done pairs). Chunk tables of an
+earlier run with a larger K are dropped once the run's chunks commit.
 
 Model artifacts (TF-IDF idf table, LDA topic model) are committed
 under ``<root>/_models/<run_id>`` on first fit and RELOADED on resume
@@ -183,12 +184,21 @@ def _score_chunked(spark, t, build, catalog, rc, resume):
     )
     n_resumed = 0
     for k, name in enumerate(names):
-        if resume and catalog.committed(name, rc.run_id):
+        # a chunk hashed under another K holds other pairs: resume only
+        # this run's chunks of the same K
+        m = catalog.manifest(name) if resume else None
+        if m and m["run_id"] == rc.run_id and m["n_chunks"] == K:
             n_resumed += 1
             continue
         chunk = chunked.where(F.col("_chunk") == k).drop("_chunk")
         catalog.write(build({**t, "candidate_pairs": chunk}), name,
-                      run_id=rc.run_id, stage="scored_pairs")
+                      run_id=rc.run_id, stage="scored_pairs",
+                      extra={"n_chunks": K})
+    # chunks of an earlier run with more chunks would join the
+    # scored-pair view (el.incremental._base_tables)
+    for table in catalog.tables(SCORE_CHUNK_PREFIX):
+        if table not in names:
+            catalog.drop(table)
     # row count from the chunk manifests: the report never re-scans
     # the corpus-sized chunk tables
     rows = sum(catalog.manifest(n)["total_rows"] for n in names)

@@ -303,9 +303,9 @@ def sink_to_catalog(
 def read_catalog_stream(
     spark, catalog: HadoopParquetCatalog, table_prefix: str
 ) -> DataFrame:
-    """Union of every committed micro-batch table for a sink prefix
-    (each once: a replayed epoch's archived snapshot and an in-flight
-    write are not committed tables)."""
+    """Union of the live versions of every committed micro-batch table
+    for a sink prefix (each once: a replayed epoch commits a new
+    version of its batch table, and an in-flight write is not live)."""
     return catalog.read_all(spark, catalog.tables(f"{table_prefix}__batch_"))
 
 

@@ -11,7 +11,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from el.catalog import HadoopParquetCatalog
+from el.catalog import KEEP_VERSIONS, HadoopParquetCatalog
 
 
 @pytest.fixture()
@@ -31,7 +31,8 @@ def test_write_read_roundtrip_with_lineage(spark, cat):
     assert isinstance(m["digest"]["xor"], int)
     assert m["digest"]["sum"].lstrip("-").isdigit()
     assert all(
-        f["bytes"] == os.path.getsize(os.path.join(cat.root, "t1", f["path"]))
+        f["bytes"]
+        == os.path.getsize(os.path.join(cat._dir("t1", m["version"]), f["path"]))
         for f in m["files"]
     )
     back = cat.read(spark, "t1")
@@ -112,7 +113,7 @@ def test_verify_detects_a_rewritten_part_file(spark, cat, tmp_path):
     ).coalesce(1).write.parquet(other)
     (part,) = [n for n in os.listdir(other) if n.endswith(".parquet")]
     # the part file and its Hadoop checksum, so the scan reads it
-    dst = os.path.join(cat.root, "t", victim["path"])
+    dst = os.path.join(cat._dir("t", m["version"]), victim["path"])
     shutil.copyfile(os.path.join(other, part), dst)
     shutil.copyfile(os.path.join(other, f".{part}.crc"),
                     os.path.join(os.path.dirname(dst),
@@ -157,8 +158,21 @@ def test_overwrite_replaces_atomically(spark, cat):
     cat.write(spark.range(5), "t", run_id="r2")
     assert cat.read(spark, "t").count() == 5
     assert cat.manifest("t")["run_id"] == "r2"
-    # no stale tmp dirs left behind
-    assert not [d for d in os.listdir(cat.root) if "__tmp" in d]
+    # two version dirs beside the live manifest, nothing else
+    assert sorted(os.listdir(cat._dir("t"))) == [
+        "_MANIFEST.json", "v0000", "v0001"
+    ]
+    assert sorted(os.listdir(cat.root)) == ["t"]
+
+
+def test_read_frame_survives_a_later_write(spark, cat):
+    """A commit moves no file: a frame read before a later write of
+    the same table still scans the rows it was read with."""
+    cat.write(spark.range(10), "t", run_id="r1")
+    old = cat.read(spark, "t")
+    cat.write(spark.range(5), "t", run_id="r2")
+    assert sorted(r.id for r in old.collect()) == list(range(10))
+    assert cat.read(spark, "t").count() == 5
 
 
 def test_partitioned_write_prunes(spark, cat):
@@ -167,7 +181,7 @@ def test_partitioned_write_prunes(spark, cat):
     back = cat.read(spark, "part_t").where("p = 1")
     assert back.count() == 33
     # partition dirs exist on disk -> scan-level pruning is available
-    assert os.path.isdir(os.path.join(cat.root, "part_t", "p=1"))
+    assert os.path.isdir(os.path.join(cat._dir("part_t", 0), "p=1"))
 
 
 def _jobs_run_by(spark, fn):
@@ -208,22 +222,10 @@ def test_read_uses_manifest_schema_without_jobs(spark, cat, kind):
     def fields(schema):
         return [(f.name, f.dataType, f.nullable) for f in schema]
 
-    inferred = spark.read.parquet(os.path.join(cat.root, "t")).schema
+    inferred = spark.read.parquet(cat._dir("t", 1)).schema
     assert fields(back.schema) == fields(inferred)
     assert fields(old.schema) == fields(inferred)
     assert back.count() == old.count() == (0 if kind == "empty" else 40)
-
-
-def test_read_without_manifest_schema_infers(spark, cat):
-    """Manifests written before the schema was recorded still read."""
-    cat.write(spark.range(7), "t", run_id="r1")
-    path = os.path.join(cat.root, "t", "_MANIFEST.json")
-    with open(path) as f:
-        m = json.load(f)
-    del m["schema"]
-    with open(path, "w") as f:
-        json.dump(m, f)
-    assert cat.read(spark, "t").count() == 7
 
 
 def test_metrics_table(spark, cat):
@@ -239,14 +241,15 @@ def test_metrics_table(spark, cat):
 
 def test_tables_lists_each_committed_table_once(spark, cat):
     cat.write(spark.range(10), "t", run_id="r1")
-    cat.write(spark.range(5), "t", run_id="r2")  # archives t.__v0000
+    cat.write(spark.range(5), "t", run_id="r2")  # t/v0000 retained
     cat.write(spark.range(3), "u", run_id="r1")
-    # a crashed writer's in-flight dir, manifest and data included
-    spark.range(2).write.parquet(os.path.join(cat.root, "u.__tmp_crashed"))
-    with open(os.path.join(cat.root, "u.__tmp_crashed", "_MANIFEST.json"),
-              "w") as f:
-        json.dump(cat.manifest("u"), f)
-    assert "t.__v0000" in os.listdir(cat.root)
+    # a writer of u killed before its live manifest, version manifest
+    # and data included; a table whose only writer died before either
+    spark.range(2).write.parquet(cat._dir("u", 1))
+    with open(os.path.join(cat._dir("u", 1), "_MANIFEST.json"), "w") as f:
+        json.dump({**cat.manifest("u"), "version": 1}, f)
+    spark.range(2).write.parquet(cat._dir("w", 0))
+    assert cat.versions("t") == [0, 1]
 
     assert cat.tables() == ["t", "u"]
     assert cat.tables("t") == ["t"]
@@ -270,51 +273,50 @@ def test_read_all_of_no_tables_raises(spark, cat):
 
 
 def test_overwrite_crash_window_keeps_old_version(spark, cat, monkeypatch):
-    """A writer dying between 'old archived' and 'new
-    renamed in' must not leave the catalog with NO committed version —
-    reads fall back to the newest snapshot, and the next successful
-    write restores it before replacing."""
+    """A writer killed before the live-manifest commit (after its
+    parquet files, or after its version's manifest too) leaves the
+    previous version live and readable, and the next write succeeds,
+    numbered past the dead writer's version dir."""
     import el.catalog as C
 
-    cat.write(spark.range(10), "t", run_id="r1")
-    m1 = cat.manifest("t")
+    real_commit = C.commit_json
+    for table, dies_at in (("t", "version"), ("u", "table")):
+        cat.write(spark.range(10), table, run_id="r1")
+        m1, old = cat.manifest(table), cat.read(spark, table)
 
-    real_rename = os.rename
+        def dying_commit(path, obj):
+            if dies_at == "table":
+                real_commit(path, obj)
+            if path == os.path.join(cat._dir(table, 1), "_MANIFEST.json"):
+                raise RuntimeError("simulated crash before the commit")
 
-    def dying_rename(src, dst):
-        real_rename(src, dst)
-        # die right after the old version was archived (live gone)
-        if ".__v" in dst:
-            raise RuntimeError("simulated crash mid-swap")
+        monkeypatch.setattr(C, "commit_json", dying_commit)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            cat.write(spark.range(5), table, run_id="r2")
+        monkeypatch.setattr(C, "commit_json", real_commit)
 
-    monkeypatch.setattr(C.os, "rename", dying_rename)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        cat.write(spark.range(5), "t", run_id="r2")
-    monkeypatch.setattr(C.os, "rename", real_rename)
+        assert os.path.isdir(cat._dir(table, 1))
+        assert cat.exists(table) and cat.manifest(table) == m1
+        assert cat.read(spark, table).count() == old.count() == 10
 
-    # crashed state: live dir gone, snapshot present — the old
-    # committed version must still be served
-    assert not os.path.exists(os.path.join(cat.root, "t", "_MANIFEST.json"))
-    assert cat.exists("t")
-    assert cat.manifest("t") == m1
-    assert cat.read(spark, "t").count() == 10
-
-    # next write restores then replaces; no in-flight residue
-    cat.write(spark.range(3), "t", run_id="r3")
-    assert cat.read(spark, "t").count() == 3
-    assert cat.manifest("t")["run_id"] == "r3"
-    assert not [d for d in os.listdir(cat.root) if ".__tmp" in d]
+        cat.write(spark.range(3), table, run_id="r3")
+        assert cat.manifest(table)["version"] == 2
+        assert cat.read(spark, table).count() == 3
+        # the dead writer's dir is pruned unless its version committed
+        committed = dies_at == "table"
+        assert cat.versions(table) == ([0, 1, 2] if committed else [0, 2])
+        assert os.path.isdir(cat._dir(table, 1)) == committed
 
 
 def test_snapshot_time_travel_and_rollback(spark, cat):
     """Iceberg-style snapshot semantics on the parquet catalog:
-    overwrites archive the displaced version (bounded retention),
-    read(version=k) time-travels, rollback(k) is a pointer move."""
+    overwrites retain the displaced version (bounded retention),
+    read(version=k) time-travels, rollback(k) is one manifest commit."""
     cat.write(spark.range(10), "t", run_id="r1")
     cat.write(spark.range(20), "t", run_id="r2")
     cat.write(spark.range(30), "t", run_id="r3")
     assert cat.manifest("t")["version"] == 2
-    assert cat.versions("t") == [0, 1, 2]  # keep_versions=2 + live
+    assert cat.versions("t") == [0, 1, 2]  # KEEP_VERSIONS=2 + live
     assert cat.read(spark, "t").count() == 30
     assert cat.read(spark, "t", version=1).count() == 20
     assert cat.read(spark, "t", version=0).count() == 10
@@ -324,7 +326,7 @@ def test_snapshot_time_travel_and_rollback(spark, cat):
     m = cat.rollback("t", 1)
     assert m["version"] == 1 and m["run_id"] == "r2"
     assert cat.read(spark, "t").count() == 20
-    # the displaced live version is itself archived -> reversible
+    # the displaced live version stays retained -> reversible
     assert 2 in cat.versions("t")
     cat.rollback("t", 2)
     assert cat.read(spark, "t").count() == 30
@@ -335,6 +337,7 @@ def test_snapshot_time_travel_and_rollback(spark, cat):
     assert cat.manifest("t")["version"] == 3
     assert cat.read(spark, "t").count() == 40
 
-    # retention: only keep_versions archives survive
-    arch = [d for d in os.listdir(cat.root) if d.startswith("t.__v")]
-    assert len(arch) <= cat.keep_versions
+    # retention: the live version and KEEP_VERSIONS others survive
+    assert cat.versions("t") == [1, 2, 3]
+    vdirs = [d for d in os.listdir(cat._dir("t")) if d.startswith("v")]
+    assert len(vdirs) == KEEP_VERSIONS + 1

@@ -126,6 +126,28 @@ def test_bench_pipeline_smoke(spark, monkeypatch, tmp_path):
     assert info["n_pages"] == 600 and info["n_pairs"] > 0, info
 
 
+def test_bench_scratch_dir_removed_at_exit(tmp_path):
+    """bench.py's per-process model scratch dir, with what was saved
+    into it, is gone once the interpreter exits (no Spark)."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import bench; d = bench._run_scratch_dir(); "
+        "open(d + '/artifact', 'w').close(); print(d)"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, capture_output=True,
+        text=True, check=True, env={**os.environ, "TMPDIR": str(tmp_path)},
+    )
+    d = out.stdout.strip().splitlines()[-1]
+    assert os.path.basename(d).startswith("el_bench_models_")
+    assert os.path.dirname(d) == str(tmp_path)
+    assert not os.path.exists(d)
+
+
 def test_pairwise_f1(spark, e2e):
     out, labeled = e2e
     uc = primary_clusters(out["clusters"], out["mentions"])

@@ -579,6 +579,18 @@ def _small_base(spark, tmp_path_factory, rc, name):
     return cat, pages.where(split), urls
 
 
+def test_absorb_clusters_frame_survives_a_forget(spark, tmp_path_factory, rc):
+    """The clusters frame an absorb returns keeps reading the version
+    that absorb committed after a forget commits a newer one."""
+    from el.incremental import forget_urls
+
+    cat, batch, urls = _small_base(spark, tmp_path_factory, rc, "frames")
+    out = incremental_update(spark, batch, cat, rc)
+    forget = forget_urls(spark, cat, urls, rc)
+    assert out["clusters"].count() == out["report"]["total_mentions"]
+    assert forget["total_mentions"] < out["report"]["total_mentions"]
+
+
 def test_report_counts_equal_counts_of_their_frames(
     spark, tmp_path_factory, rc, monkeypatch
 ):

@@ -4,6 +4,7 @@ mid-scoring (chunk-level) interruption both covered."""
 
 from __future__ import annotations
 
+import dataclasses
 import shutil
 
 import pytest
@@ -113,3 +114,31 @@ def test_report_rows_come_from_manifests_not_scans(
     assert rep["scored_pairs"]["rows"] == total > 0
     # manifest totals agree with one real scan (values unchanged)
     assert out["scored_pairs"].count() == total
+
+
+def test_rerun_with_fewer_chunks_scores_every_pair_once(
+    spark, tmp_path_factory, rc, fresh
+):
+    """A resume with K=4 after a run with K=8 under the same run id
+    resumes no chunk (chunks hashed under 8 hold other pairs), and the
+    chunks 004-007 of the K=8 run no longer join the scored-pair view:
+    the view holds each pair once and the run equals a fresh K=4 run."""
+    from el.incremental import _read_with_deltas
+
+    fresh_cat, out0 = fresh
+    cat = HadoopParquetCatalog(str(tmp_path_factory.mktemp("rechunk")))
+    pages = gen_web_pages(spark, N_PAGES)
+    run_checkpointed(
+        spark, pages, cat, dataclasses.replace(rc, n_score_chunks=8)
+    )
+    rep = run_checkpointed(spark, pages, cat, rc, resume=True)["report"]
+
+    assert rep["scored_pairs"]["chunks_resumed"] == 0
+    assert rep["scored_pairs"]["rows"] == out0["report"]["scored_pairs"]["rows"]
+    assert cat.tables("scored_chunk_") == [
+        f"scored_chunk_{k:03d}" for k in range(rc.n_score_chunks)
+    ]
+    view = _read_with_deltas(spark, cat, "scored_pairs")
+    assert view.count() == rep["scored_pairs"]["rows"]
+    for t in ("edges", "clusters"):
+        assert _rows(spark, cat, t) == _rows(spark, fresh_cat, t), t

@@ -148,19 +148,16 @@ def test_sink_to_catalog_commits_batches(spark, events_dir, tmp_path):
 
 
 def test_read_catalog_stream_reads_replayed_batch_once(spark, tmp_path):
-    """A replayed epoch commits its micro-batch table again, archiving
-    the first commit as a snapshot; neither that snapshot nor a
+    """A replayed epoch commits its micro-batch table again, as a new
+    version beside the first; neither that retained version nor a
     crashed in-flight write is read as another batch."""
-    import os
-
     cat = HadoopParquetCatalog(str(tmp_path / "cat"))
     batch = spark.range(5).select(F.col("id").alias("event_id"))
     for _ in range(2):
         cat.write(batch, "events_ingest__batch_000000", run_id="epoch0",
                   stage="events_ingest")
-    batch.write.parquet(
-        os.path.join(cat.root, "events_ingest__batch_000001.__tmp_epoch1")
-    )
+    assert cat.versions("events_ingest__batch_000000") == [0, 1]
+    batch.write.parquet(cat._dir("events_ingest__batch_000001", 0))
     back = read_catalog_stream(spark, cat, "events_ingest")
     assert sorted(r.event_id for r in back.collect()) == list(range(5))
 
